@@ -198,6 +198,10 @@ object SparkEntry {
           numBuckets = 32, bucketCols = Seq("trip_id"))
         org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(batch)
       }
+      // both generations are written: release the shared `ends`
+      // checkpoint too (it is the only checkpoint in `raw`'s plan), so
+      // the lineitem aggregate does not stay resident for the session
+      org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(raw)
       storeDir
     })
 

@@ -77,11 +77,11 @@ object IngestPipeline {
       val spark = batch.sparkSession
       val curated = curate(batch).localCheckpoint(false)
       // size this batch's shuffles to its VOLUME, not the session
-      // default (cores-sized partitions pay per-partition fixed costs
-      // that dominate small batches — the measured MicroBatchTuning
-      // rule). Safe per-batch here: foreachBatch is stateless, so no
-      // checkpoint pins the partition count. The count is a cheap
-      // post-checkpoint scan.
+      // default: MicroBatchTuning's rule at its stateless sizing (256
+      // rows per partition — no state store is committed here, so only
+      // task launch is fixed per partition). Safe per-batch: foreachBatch
+      // is stateless, so no checkpoint pins the partition count. The
+      // count is a cheap post-checkpoint scan.
       MicroBatchTuning.withBatchVolume(spark, curated.count()) {
         curated.write.mode(SaveMode.Overwrite)
           .parquet(s"$baseDir/docs/batch=$batchId")

@@ -3,18 +3,30 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 
 /** The micro-batch shuffle-partition rule, in code instead of a
-  * footnote: steady-state micro-batches want shuffle partitions sized
-  * to batch VOLUME, not cores. The measured cliff (BENCH_full
-  * `streaming`, r14): the golden feed in 1000-event batches runs
-  * 148 ev/s at cores-sized partitions (32 one-time state-store
-  * opens + commits per stateful operator per batch dominate 1000-row
-  * batches) and 802 ev/s at 4 — a 5.4x swing from one setting.
+  * footnote: a stateful micro-batch query wants shuffle (= state)
+  * partitions sized to batch VOLUME, not cores.
+  *
+  * Cost model (Structured Streaming, SIGMOD 2018: a trigger costs a
+  * fixed part plus per-row work). For the trip pipeline the fixed part
+  * is state-store commits: every state partition opens and commits one
+  * HDFS-backed store per stateful operator on every trigger (6 for
+  * [[StreamingTripPipeline.pipeline]]: two dedups, the join's four),
+  * each commit writing a checksummed delta file — and it is paid again
+  * on every no-data trigger after a watermark advance. Concurrent
+  * commits slow each other down, so adding partitions multiplies the
+  * fixed part instead of hiding it; they pay only once the per-row work
+  * of one partition outweighs it.
   *
   * The rule: `partitions = clamp(ceil(batchRows / targetRows), 1,
-  * cores)` with targetRows ≈ 256 (the measured optimum: 1000-row
-  * batches peak at 4 partitions = 250 rows each; below ~100 rows per
-  * partition, per-partition state-store fixed costs dominate; far
-  * above ~1000, single-task skew and lost parallelism do).
+  * cores)` with targetRows = 8192. Measured on the trip pipeline
+  * (4 vCPUs, a 16,000-event drain, state partitions 4 / 2 / 1):
+  * 4,000-event batches took 6.4 / 5.1 / 4.4 s, so partitions of 1-2k
+  * rows only lose; 16,000-event batches took 2.1 / 1.8 / 1.7 s, where 1
+  * and 2 partitions are within run-to-run noise — ~8k rows is where a
+  * second partition stops costing. Traced at 4,000-event batches, 4
+  * partitions -> 1 cut summed state-commit time 27.9 s -> 3.1 s and task
+  * wall 43.7 s -> 8.5 s at nearly equal task CPU (4.0 s -> 3.1 s): the
+  * removed time was commits waiting on each other.
   *
   * Caveat that keeps this a STARTUP decision, not a per-batch one:
   * Spark pins a stateful streaming query's state-store partition
@@ -26,10 +38,16 @@ import org.apache.spark.sql.SparkSession
   */
 object MicroBatchTuning {
 
-  /** The measured optimum rows-per-shuffle-partition for small
-    * stateful micro-batches on this pipeline family.
+  /** Rows per state partition at which one more partition's per-row
+    * parallelism pays for its per-trigger state-store commits.
     */
-  val TargetRowsPerPartition = 256L
+  val TargetRowsPerPartition = 8192L
+
+  /** Rows per shuffle partition for STATELESS batches, which open no
+    * state stores: there the fixed per-partition cost is only task
+    * launch, so smaller partitions keep the cores busy.
+    */
+  val StatelessRowsPerPartition = 256L
 
   /** Shuffle partitions for an expected steady-state micro-batch
     * volume: batch-volume-proportional, never more than the session's
@@ -57,9 +75,10 @@ object MicroBatchTuning {
     n
   }
 
-  /** Run `thunk` with the rule applied for one batch's actual volume,
-    * restoring the previous setting after — the per-batch variant for
-    * STATELESS foreachBatch sinks, where no checkpoint pins the count.
+  /** Run `thunk` with the rule applied for one batch's actual volume at
+    * [[StatelessRowsPerPartition]], restoring the previous setting after
+    * — the per-batch variant for STATELESS foreachBatch sinks, where no
+    * checkpoint pins the count and no state store is committed.
     *
     * Scope caveat (ADVICE r15): `spark.sql.shuffle.partitions` is
     * SESSION-global — any OTHER query planned against the same session
@@ -76,8 +95,8 @@ object MicroBatchTuning {
       thunk: => T): T = spark.conf.synchronized {
     val saved = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions",
-      shufflePartitionsFor(batchRows,
-        spark.sparkContext.defaultParallelism).toString)
+      shufflePartitionsFor(batchRows, spark.sparkContext.defaultParallelism,
+        StatelessRowsPerPartition).toString)
     try thunk
     finally spark.conf.set("spark.sql.shuffle.partitions", saved)
   }

@@ -86,6 +86,65 @@ class StreamingTripPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(out.count() === 1)
   }
 
+  test("completed trips do not depend on the state partition count") {
+    // 160 trips over 4 event days, one batch per day plus a tail batch:
+    // every 5th end arrives a batch before its start, every 7th trip is
+    // re-delivered (start in the same batch, end in the next), every
+    // 11th day-0 end is held back until the watermark has evicted its
+    // start, and each batch carries invalid events
+    val rnd = new scala.util.Random(7)
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+    val t0 = java.time.LocalDateTime.of(2024, 5, 20, 0, 0)
+    val batches = Array.fill(5)(Seq.newBuilder[String])
+    (0 until 160).foreach { i =>
+      val day = i / 40
+      val pickup = t0.plusDays(day).plusMinutes((i % 40) * 30L)
+      val start = startJson(s"p$i", pickup.format(fmt), i + 0.25)
+      val end = endJson(s"p$i", pickup.plusMinutes(20).format(fmt), i + 0.5)
+      val (sb, eb) =
+        if (day == 0 && i % 11 == 0) (day, 4)
+        else if (i % 5 == 0) (day + 1, day)
+        else (day, day)
+      batches(sb) += start
+      batches(eb) += end
+      if (i % 7 == 0) { batches(sb) += start; batches(math.min(eb + 1, 4)) += end }
+    }
+    batches.zipWithIndex.foreach { case (b, k) =>
+      b += "not json"
+      b += s"""{"trip_id":null,"data_type":"trip_start","pickup_datetime":"2024-05-2$k 10:00:00"}"""
+    }
+    val feed = batches.map(b => rnd.shuffle(b.result()))
+
+    def completedAt(partitions: Int): (Set[(String, String, String, Double)], Long) = {
+      implicit val ctx = spark.sqlContext
+      val saved = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      val input = MemoryStream[String]
+      n += 1
+      val name = s"completed_$n"
+      val q = try StreamingTripPipeline.pipeline(input.toDF())
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+        finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+      val removed = try {
+        feed.foreach { b => input.addData(b); q.processAllAvailable() }
+        assert(q.lastProgress.stateOperators.forall(_.numShufflePartitions == partitions))
+        q.recentProgress.flatMap(_.stateOperators).map(_.numRowsRemoved).sum
+      } finally q.stop()
+      (spark.table(name).select("trip_id", "pickup_datetime", "dropoff_datetime", "fare_amount")
+        .as[(String, String, String, Double)].collect().toSet, removed)
+    }
+
+    val (one, removedOne) = completedAt(1)
+    val (four, removedFour) = completedAt(4)
+    assert(one === four)
+    // the feed exercises what the answer must not depend on: watermark
+    // eviction happened, and the held-back ends found no start
+    assert(removedOne > 0 && removedFour > 0)
+    val ids = one.toSeq.map(_._1)
+    assert(ids.distinct.size === ids.size, "one completed row per trip")
+    assert(ids.nonEmpty && !ids.contains("p0") && !ids.contains("p11"))
+  }
+
   test("streaming daily KPI window aggregates completed trips") {
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[String]
