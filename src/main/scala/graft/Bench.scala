@@ -621,48 +621,43 @@ object Bench {
       s"""{"error":${jstr(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}}"""
     }
 
-    // Optimistic-commit CONTENTION probe (r18 verdict item 3): N
-    // same-JVM writers, each upserting a full-bucket-span batch into
-    // ONE shared store — every commit races every other, the shape that
-    // retry-stormed the concurrent topology pre-cooldown. Writers use
-    // DISJOINT keys (w mod writers) so the final state is deterministic
-    // while every BUCKET still overlaps (conflict detection is
-    // bucket-level). The locked twin (optimistic off) prices the
-    // protocol A/B under the same contention.
+    // Store-lease CONTENTION probe: N same-JVM writers, each upserting
+    // a full-bucket-span batch into ONE shared store, so every upsert
+    // queues on the lease behind every other — the shape of the
+    // concurrent two-hop topology, where both hops touch every bucket.
+    // Writers use DISJOINT keys (w mod writers) so the final state is
+    // deterministic; lease wait and per-flip commit counts ride the
+    // JSON row.
     val contention = try {
       import org.apache.spark.sql.functions.{col, lit}
       import graft.operators.KeyedUpsertSink
-      def probe(tag: String, writers: Int, batches: Int,
-          optimistic: Boolean): String = {
+      def probe(tag: String, writers: Int, batches: Int): String = {
         KeyedUpsertSink.commitStatsClear()
         KeyedUpsertSink.leaseWaitMs.clear()
-        if (!optimistic) sys.props("graft.store.optimistic") = "off"
         val dir = java.nio.file.Files
           .createTempDirectory(s"bench_cont_$tag").toString
         val errsQ = new java.util.concurrent.ConcurrentLinkedQueue[String]()
         val t0 = System.nanoTime()
-        try {
-          val threads = (0 until writers).map { w =>
-            val t = new Thread(() => {
-              try {
-                for (b <- 0 until batches) {
-                  val df = spark.range(2000)
-                    .select(((col("id") * writers + w) % 3000).as("k"),
-                      (col("id") * writers + w + b.toLong * 10000)
-                        .cast("long").as("ver"),
-                      lit(w).as("writer"))
-                  KeyedUpsertSink.upsertBatch(df, dir, Seq("k"), "ver",
-                    b.toLong, versionWins = true, numBuckets = 32,
-                    writerId = s"w$w")
-                }
-              } catch { case e: Throwable =>
-                errsQ.add(s"w$w: ${Option(e.getMessage).getOrElse(e.getClass.getName)}".take(160))
+        val threads = (0 until writers).map { w =>
+          val t = new Thread(() => {
+            try {
+              for (b <- 0 until batches) {
+                val df = spark.range(2000)
+                  .select(((col("id") * writers + w) % 3000).as("k"),
+                    (col("id") * writers + w + b.toLong * 10000)
+                      .cast("long").as("ver"),
+                    lit(w).as("writer"))
+                KeyedUpsertSink.upsertBatch(df, dir, Seq("k"), "ver",
+                  b.toLong, versionWins = true, numBuckets = 32,
+                  writerId = s"w$w")
               }
-            })
-            t.setDaemon(true); t
-          }
-          threads.foreach(_.start()); threads.foreach(_.join())
-        } finally if (!optimistic) sys.props.remove("graft.store.optimistic")
+            } catch { case e: Throwable =>
+              errsQ.add(s"w$w: ${Option(e.getMessage).getOrElse(e.getClass.getName)}".take(160))
+            }
+          })
+          t.setDaemon(true); t
+        }
+        threads.foreach(_.start()); threads.foreach(_.join())
         val secs = (System.nanoTime() - t0) / 1e9
         val stats = KeyedUpsertSink.commitStatsSnapshot()
         val statsObj = stats.toSeq.sortBy(_._1)
@@ -674,17 +669,10 @@ object Bench {
         System.err.println(f"[bench] contention $tag: $writers writers x " +
           f"$batches batches in $secs%.1f s, $rows rows, lease wait " +
           f"$waitSec%.2f s, stats $stats")
-        s""""$tag":{"writers":$writers,"batches_per_writer":$batches,"optimistic":$optimistic,"elapsed_sec":${jnum(secs)},"store_rows":$rows,"lease_wait_sec":${jnum(waitSec)},"commit_stats":$statsObj,"errors":[${errsQ.toArray.map(e => jstr(e.toString)).mkString(",")}]}"""
+        s""""$tag":{"writers":$writers,"batches_per_writer":$batches,"elapsed_sec":${jnum(secs)},"store_rows":$rows,"lease_wait_sec":${jnum(waitSec)},"commit_stats":$statsObj,"errors":[${errsQ.toArray.map(e => jstr(e.toString)).mkString(",")}]}"""
       }
       val parts = Seq(
-        probe("w1", 1, 8, optimistic = true),
-        probe("w2", 2, 8, optimistic = true),
-        // locked twins at BOTH contended widths (r19 verdict item 4:
-        // "w4 optimistic <= w4 locked, w2 speedup retained" needs the
-        // w2 A/B in the artifact, not just w4's)
-        probe("w2_locked", 2, 8, optimistic = false),
-        probe("w4", 4, 8, optimistic = true),
-        probe("w4_locked", 4, 8, optimistic = false))
+        probe("w1", 1, 8), probe("w2", 2, 8), probe("w4", 4, 8))
       s"""{${parts.mkString(",")}}"""
     } catch { case e: Throwable =>
       System.err.println(s"[bench] contention FAILED — ${e.getMessage}")

@@ -1114,8 +1114,8 @@ object ScaleBench {
       // compaction and the lease waits around it, so "does maintenance
       // stall the pipeline" is a number, not a guess. Completions must
       // still equal golden x 100 — a throughput row with wrong output
-      // is not data (and a mid-flight re-bucket exercises the config-
-      // conflict path of every concurrent optimistic commit).
+      // is not data (and a mid-flight re-bucket makes each hop's next
+      // upsert re-read the re-pinned bucket count under the lease).
       val topoJ = try {
         import graft.operators.KeyedUpsertSink
         import graft.streaming.{TripStore, TripTopology}

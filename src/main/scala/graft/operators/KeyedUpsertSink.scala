@@ -58,11 +58,15 @@ import org.apache.spark.sql.functions._
   * (default 5 min) so a crashed writer's lock is taken over rather
   * than deadlocking the table. Each writer names its generations with
   * its own `writerId`, so two writers' equal micro-batch ids can never
-  * collide on a generation directory. Lost-update safety comes from
-  * the lease (the pointer read and flip happen inside it); ROW-level
-  * convergence under interleaving comes from the merge itself
-  * (versionWins: a monotonic rank, so writer order cannot regress a
-  * row) — the same division of labor as DynamoDB's conditional writes.
+  * collide on a generation directory. There is ONE write path: the
+  * pointer read, the merge, the generation write, the flip and the
+  * prune all run inside the lease, so lost-update safety needs no
+  * conflict detection, and only the lease holder ever writes a
+  * generation. ROW-level convergence under interleaving comes from the
+  * merge itself (versionWins: a monotonic rank, so writer order cannot
+  * regress a row) — the same division of labor as DynamoDB's
+  * conditional writes. This is the Structured Streaming sink contract:
+  * one writer per micro-batch into an idempotent sink.
   *
   * 100 TB posture: bucketing caps the per-batch rewrite at the touched
   * buckets' data; size `numBuckets` so a bucket ≈ a few GB and a
@@ -83,12 +87,6 @@ object KeyedUpsertSink {
     * tests that install MUST restore it.
     */
   @volatile private[graft] var preFlipHold: () => Unit = () => ()
-
-  /** Test-only hook, run between an optimistic merge and its commit
-    * attempt (no locks held): specs install a peer write here to stage
-    * a COMMIT CONFLICT deterministically. Identity in production.
-    */
-  @volatile private[graft] var preCommitHold: () => Unit = () => ()
 
   /** Cumulative milliseconds writers spent acquiring the store lease
     * (monitor + lock-file wait), keyed by writer id — the measured face
@@ -119,19 +117,12 @@ object KeyedUpsertSink {
     leaseWaitMs.asScala.map { case (k, v) => k -> v.sum() }.toMap
   }
 
-  /** Optimistic-commit telemetry (r18 verdict item 3): conflict counts,
-    * retries, cooldown entries, and DISCARDED-merge milliseconds (the
-    * real cost of a lost optimistic race — a full Spark merge job whose
-    * result was thrown away), recorded globally and snapshotted by the
-    * bench's topology/contention sections so the retry-storm story
-    * rides the artifact, not prose. Instrumentation only.
+  /** Commit telemetry: `commits`, one per pointer flip (upsert or
+    * compact), recorded globally and snapshotted by the benches'
+    * topology/contention sections. Instrumentation only.
     */
   private[graft] val commitStats = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.atomic.LongAdder]()
-
-  private def stat(name: String, delta: Long = 1L): Unit =
-    commitStats.computeIfAbsent(name,
-      _ => new java.util.concurrent.atomic.LongAdder).add(delta)
 
   private[graft] def commitStatsSnapshot(): Map[String, Long] = {
     import scala.jdk.CollectionConverters._
@@ -162,15 +153,6 @@ object KeyedUpsertSink {
   }
 
   private[graft] def phaseClear(): Unit = phaseMs.clear()
-
-  /** `graft.store.optimistic` / `GRAFT_STORE_OPTIMISTIC` = "off" routes
-    * every upsert through the fully-locked path (the pre-r18 shape) —
-    * the measurement seam that prices the optimistic protocol's extra
-    * control-file round-trips A/B (r18 verdict item 2). Default on.
-    */
-  private def optimisticEnabled: Boolean =
-    !sys.props.get("graft.store.optimistic")
-      .orElse(sys.env.get("GRAFT_STORE_OPTIMISTIC")).contains("off")
 
   /** Per-store JVM monitors: two writers in one JVM (the composed
     * topology's two streaming queries under local[*]) serialize here
@@ -233,7 +215,8 @@ object KeyedUpsertSink {
       // system property first (test seam), env second, default last
       def knob(prop: String, env: String, dflt: String): Long =
         sys.props.get(prop).orElse(sys.env.get(env)).getOrElse(dflt).toLong
-      val leaseMs = leaseMsKnob()
+      val leaseMs =
+        knob("graft.store.lease.ms", "GRAFT_STORE_LEASE_MS", "300000")
       // 0 = auto: lease + 60 s. The cap must EXCEED the lease, or a
       // waiter behind a crashed writer (lock age < leaseMs) throws
       // before the lock ever goes stale enough to take over.
@@ -389,6 +372,8 @@ object KeyedUpsertSink {
       gens.toSeq.sortBy(_._1).map { case (b, g) => s"$b=$g" }))
       .mkString("\n")
     StoreCommit.forStore(spark, storeDir).commitPointer(body)
+    commitStats.computeIfAbsent("commits",
+      _ => new java.util.concurrent.atomic.LongAdder).increment()
   }
 
   /** The store's current content, or None before the first upsert.
@@ -454,169 +439,22 @@ object KeyedUpsertSink {
     * this writer's generation dirs — REQUIRED (any distinct non-empty
     * string per writer) when two writers share the store, since their
     * independent micro-batch ids would otherwise collide on `gen-<id>`.
-    * Commit protocol: the merge runs OPTIMISTICALLY outside the lease,
-    * the flip under it with conflict detection (see the body comment);
-    * the locked fallback serializes the whole section as before.
+    * The whole read-merge-write-flip-prune section runs under the store
+    * lease ([[withStoreLock]]): the pointer it merges against is the
+    * pointer it flips, so a peer's commit can never be lost.
     */
   def upsertBatch(batch: DataFrame, storeDir: String, keys: Seq[String],
       orderCol: String, batchId: Long, versionWins: Boolean = false,
       numBuckets: Int = DefaultNumBuckets, writerId: String = "",
-      bucketCols: Seq[String] = Seq.empty): Unit = {
-    // OPTIMISTIC COMMIT (r18): the merge job — the expensive part, a
-    // full Spark read-merge-write of the touched buckets — runs with NO
-    // lock held, against a pointer snapshot read up front; only the
-    // pointer flip takes the lease, and it re-reads the pointer there
-    // and commits IFF no peer moved any of this batch's touched buckets
-    // (and the bucket config is unchanged and the written generation
-    // still exists on disk). The FIRST conflict sends the batch down
-    // the fully-locked path (merge inside the lease — guaranteed
-    // progress) and opens the store-wide pessimistic cooldown (r19
-    // verdict item 4: optimistic RETRIES under sustained contention
-    // only burned more merge jobs — see the policy comment below).
-    // This is the Delta-style OCC shape, and it is what the r18
-    // topology bench said the table needed: under the concurrent
-    // two-hop schedule the ingest hop spent 10.7 of 41 s WAITING on
-    // the lease, almost all of it for peers' merge jobs rather than
-    // their pointer flips.
-    //
-    // Why the unlocked merge is safe to attempt: its input files are
-    // the snapshot's touched-bucket files, which the grace window
-    // guarantees survive ONE subsequent flip; a second concurrent flip
-    // can prune them mid-job, which surfaces as a job failure with a
-    // CHANGED pointer — retried like any conflict. A fence loss during
-    // the flip still aborts the batch (never retried in-process: the
-    // lease was usurped, re-delivery owns the retry).
-    val spark = batch.sparkSession
-    val fs = fileSystem(spark, storeDir)
-    val who = s"upsert:$writerId:$batchId"
-    val canonical = fs.makeQualified(new Path(storeDir)).toString
-    val optimistic = optimisticEnabled
-    val contended = optimistic && Option(pessimisticUntil.get(canonical))
-      .exists(_ > System.currentTimeMillis())
-    if (contended) stat("pessimistic_batches")
-    var committed = false
-    var conflicted = false
-    if (optimistic && !contended) {
-      val s0 = readState(spark, storeDir)
-      val tMerge0 = System.nanoTime()
-      def mergeMs: Long = (System.nanoTime() - tMerge0) / 1000000L
-      val prepared =
-        try prepareGeneration(batch, storeDir, keys, orderCol, batchId,
-          versionWins, numBuckets, writerId, bucketCols, s0)
-        catch { case e: Throwable =>
-          // merge failed: if the pointer moved under the job, the
-          // snapshot's input files may have been pruned — conflict, not
-          // error. An unchanged pointer means the failure is real.
-          if (readState(spark, storeDir) != s0) {
-            stat("merge_conflicts"); stat("discarded_merge_ms", mergeMs)
-            conflicted = true
-            null
-          } else throw e
-        }
-      val mergeDurMs = mergeMs // the merge job alone, not the flip below
-      recordPhase("merge", writerId, mergeDurMs)
-      prepared match {
-        case null => () // conflict during merge — serialize below
-        case None => return // batch touches no bucket — nothing to do
-        case Some(p) =>
-          preCommitHold()
-          committed = tryCommitPrepared(spark, fs, storeDir, s0, p, who)
-          if (committed) stat("optimistic_committed")
-          else {
-            stat("commit_conflicts"); stat("discarded_merge_ms", mergeDurMs)
-            conflicted = true
-          }
-      }
+      bucketCols: Seq[String] = Seq.empty): Unit =
+    withStoreLock(batch.sparkSession, storeDir,
+        s"upsert:$writerId:$batchId") { fence =>
+      upsertBatchLocked(batch, storeDir, keys, orderCol, batchId,
+        versionWins, numBuckets, writerId, bucketCols, fence)
     }
-    // FIRST-CONFLICT serialization (r19 verdict item 4): a conflict
-    // means a peer flipped this batch's buckets while our merge ran —
-    // re-merging optimistically would race the SAME peers again, and
-    // the r19 contention rows showed exactly that (w4: 11.6 s of
-    // discarded merge jobs, net slower than plain locking). So the
-    // first conflict (a) sends THIS batch straight down the locked
-    // path — the lease-held re-merge reads fresh state, so it cannot
-    // conflict — and (b) opens the store-wide cooldown immediately, so
-    // peer writers in this JVM stop burning merges too. Disjoint-bucket
-    // or single-writer traffic never conflicts and never pays either.
-    if (conflicted) {
-      stat("cooldown_entries")
-      pessimisticUntil.put(canonical, java.lang.Long.valueOf(
-        System.currentTimeMillis() + PessimisticCooldownMs))
-    }
-    if (!committed) {
-      if (optimistic) stat("locked_fallbacks")
-      withStoreLock(spark, storeDir, who) { fence =>
-        upsertBatchLocked(batch, storeDir, keys, orderCol, batchId,
-          versionWins, numBuckets, writerId, bucketCols, fence)
-      }
-    }
-  }
 
-  /** ADAPTIVE CONTENTION BACKOFF: a store whose optimistic commit just
-    * CONFLICTED goes PESSIMISTIC for this long — under sustained
-    * overlapping-bucket contention (two streaming hops both touching
-    * most buckets every batch, the two-hop topology's shape) optimism
-    * degenerates into a retry storm where every batch burns its merges
-    * twice or more before serializing anyway (measured r18: the
-    * concurrent topology schedule ran 40.7 s -> 66.0 s at 10x under
-    * always-optimistic commits, lease waits near zero but wall-clock
-    * dominated by discarded merge jobs; measured r19: even ONE
-    * optimistic retry per conflict left w4 contention at 28.4 s vs
-    * 25.3 s plain-locked, 11.6 s of discarded merges — hence the
-    * cooldown now opens on the FIRST conflict and conflicted batches
-    * never re-merge optimistically). The cooldown restores the
-    * serialized path while contention lasts and re-tries optimism
-    * afterwards; disjoint-bucket or single-writer traffic never
-    * conflicts and never enters it. JVM-local by design — a heuristic,
-    * not a correctness mechanism (cross-process writers settle the same
-    * way, one cooldown per process).
-    */
-  private val PessimisticCooldownMs = 60000L
-  private val pessimisticUntil =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private[graft] case class PreparedGen(gen: String, touched: Seq[Int],
+  private case class PreparedGen(gen: String, touched: Seq[Int],
       n: Int, pin: Seq[String])
-
-  /** The short LOCKED half of an optimistic upsert: re-read the
-    * pointer under the lease, verify nothing this batch depends on
-    * moved, flip, prune. False = conflict (caller re-merges).
-    */
-  private def tryCommitPrepared(spark: SparkSession, fs: FileSystem,
-      storeDir: String, s0: Option[StoreState], p: PreparedGen,
-      who: String): Boolean =
-    withStoreLock(spark, storeDir, who) { fence =>
-      val s1 = readState(spark, storeDir)
-      val g0 = s0.map(_.gens).getOrElse(Map.empty[Int, String])
-      val g1 = s1.map(_.gens).getOrElse(Map.empty[Int, String])
-      val configOk = s1.map(_.numBuckets).getOrElse(p.n) == p.n &&
-        s1.map(_.bucketCols).getOrElse(p.pin) == p.pin
-      val bucketsOk = p.touched.forall(b => g0.get(b) == g1.get(b))
-      // a peer's prune may only remove an UNKNOWN generation past the
-      // age guard; if ours fell to it (a merge that outlived the
-      // guard), re-merging is the only safe answer. Checked per TOUCHED
-      // BUCKET, not just the directory: a crashed partial prune can gut
-      // individual bucket subdirs while the dir (and its marker)
-      // survive — committing that would publish a bucket with no files
-      // (ADVICE r18). Every touched bucket wrote rows (it holds at
-      // least the batch's own), so an absent subdir always means loss.
-      val genIntact = p.touched.forall(b =>
-        fs.exists(bucketPath(storeDir, p.gen, b)))
-      if (!configOk || !bucketsOk || !genIntact) false
-      else {
-        val tFlip0 = System.nanoTime()
-        val newGens = g1 ++ p.touched.map(_ -> p.gen)
-        preFlipHold()
-        fence()
-        writePointer(spark, fs, storeDir, p.n, newGens, p.pin)
-        pruneGens(fs, storeDir, newGens, g1, p.gen)
-        clearInflight(fs, storeDir, p.gen)
-        recordPhase("flip",
-          who.split(":", -1).lift(1).getOrElse(""),
-          (System.nanoTime() - tFlip0) / 1000000L)
-        true
-      }
-    }
 
   private def upsertBatchLocked(batch: DataFrame, storeDir: String,
       keys: Seq[String], orderCol: String, batchId: Long,
@@ -633,20 +471,18 @@ object KeyedUpsertSink {
       val tFlip0 = System.nanoTime()
       val gens = state.map(_.gens).getOrElse(Map.empty[Int, String])
       val newGens = gens ++ p.touched.map(_ -> p.gen)
-      // test seam + fence exactly as in the optimistic flip
       preFlipHold()
       fence()
       writePointer(spark, fs, storeDir, p.n, newGens, p.pin)
       pruneGens(fs, storeDir, newGens, gens, p.gen)
-      clearInflight(fs, storeDir, p.gen)
       recordPhase("flip", writerId, (System.nanoTime() - tFlip0) / 1000000L)
     }
   }
 
-  /** The UNLOCKED half of an upsert: merge the batch over snapshot
-    * `state`'s touched buckets and write the new generation directory.
-    * Returns None for a batch that touches no bucket. Everything here
-    * is idempotent and invisible to readers until the pointer flip.
+  /** The merge half of an upsert: merge the batch over `state`'s
+    * touched buckets and write the new generation directory. Returns
+    * None for a batch that touches no bucket. Everything here is
+    * idempotent and invisible to readers until the pointer flip.
     */
   private def prepareGeneration(batch: DataFrame, storeDir: String,
       keys: Seq[String], orderCol: String, batchId: Long,
@@ -721,80 +557,35 @@ object KeyedUpsertSink {
       .sortWithinPartitions(col("bucket") +: keys.map(col): _*)
       .write.mode(SaveMode.Overwrite).partitionBy("bucket")
       .parquet(new Path(storeDir, gen).toString)
-    // mark the generation IN-FLIGHT (written, not yet flipped): a
-    // peer's prune must not reclaim it while this writer queues for
-    // the flip. Underscore-prefixed, so readers ignore it; removed
-    // after a successful flip; an orphaned marker (crash/conflict)
-    // ages out under [[pruneGens]]'s guard. The microsecond window
-    // between the parquet commit and this create is covered by the
-    // flip's existence re-check (a pruned gen re-merges).
-    val fs = fileSystem(spark, storeDir)
-    val mk = fs.create(new Path(storeDir, s"$gen/$InflightMarker"), true)
-    try mk.write("inflight".getBytes("UTF-8")) finally mk.close()
     Some(PreparedGen(gen, touched, n, pinned))
   }
 
-  private val InflightMarker = "_INFLIGHT"
-
-  /** The shared lease-window knob (system property first, env second). */
-  private def leaseMsKnob(): Long =
-    sys.props.get("graft.store.lease.ms")
-      .orElse(sys.env.get("GRAFT_STORE_LEASE_MS")).getOrElse("300000").toLong
-
-  /** Is this generation a peer's written-but-unflipped merge, still
-    * inside its protection window? Age comes from the _INFLIGHT marker
-    * FILE's mtime — never the generation directory's: object stores
-    * report 0/epoch for their synthetic directories, which would read
-    * as "ancient" and let every prune reclaim a live peer's merge on
-    * exactly the platform the seam targets (ADVICE r18). A missing or
-    * unreadable marker is "not in flight" (reclaimable).
-    */
-  private def inflightYoung(fs: FileSystem, genDir: Path): Boolean =
-    try {
-      val st = fs.getFileStatus(new Path(genDir, InflightMarker))
-      System.currentTimeMillis() - st.getModificationTime <= leaseMsKnob()
-    } catch { case _: Throwable => false }
-
-  private def clearInflight(fs: FileSystem, storeDir: String,
-      gen: String): Unit =
-    try fs.delete(new Path(storeDir, s"$gen/$InflightMarker"), false)
-    catch { case _: Throwable => () }
-
-  /** Prune with a one-generation grace window PER BUCKET (shared by the
-    * optimistic flip, the locked flip, and compaction): a bucket subdir
-    * survives while either the new map or the just-replaced map
-    * references it, so a lazy reader resolved just before this flip
-    * still finds its files; a generation dir with no surviving buckets
-    * is removed whole. A generation carrying an IN-FLIGHT marker that
-    * neither map knows is a peer's written-but-unflipped optimistic
-    * merge — left alone while younger than the lease window (the
-    * flip's existence re-check is the correctness net; this guard
-    * avoids churning a live peer's work); past the window it is an
-    * abandoned orphan (crashed or conflicted attempt) and is reclaimed.
+  /** Prune with a one-generation grace window PER BUCKET, run by the
+    * upsert flip: a bucket subdir survives while either the new map or
+    * the just-replaced map references it, so a lazy reader resolved
+    * just before this flip still finds its files; a generation dir with
+    * no surviving buckets is removed whole. Only the lease holder writes
+    * generations, so a dir that neither map names is a crashed writer's
+    * leftover and is reclaimed here.
     */
   private def pruneGens(fs: FileSystem, storeDir: String,
       newGens: Map[Int, String], oldGens: Map[Int, String],
       justWritten: String): Unit = {
     val live: Set[(String, Int)] =
       (newGens.toSeq ++ oldGens.toSeq).map { case (b, g) => (g, b) }.toSet
-    val known: Set[String] =
-      newGens.values.toSet ++ oldGens.values.toSet + justWritten
     fs.listStatus(new Path(storeDir))
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen-"))
       .foreach { g =>
         val genName = g.getPath.getName
-        val skip = !known(genName) && inflightYoung(fs, g.getPath)
-        if (!skip) {
-          val subs = fs.listStatus(g.getPath)
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-          var kept = 0
-          subs.foreach { s =>
-            val b = s.getPath.getName.stripPrefix("bucket=").toInt
-            if (live((genName, b))) kept += 1
-            else fs.delete(s.getPath, true)
-          }
-          if (kept == 0 && genName != justWritten) fs.delete(g.getPath, true)
+        val subs = fs.listStatus(g.getPath)
+          .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
+        var kept = 0
+        subs.foreach { s =>
+          val b = s.getPath.getName.stripPrefix("bucket=").toInt
+          if (live((genName, b))) kept += 1
+          else fs.delete(s.getPath, true)
         }
+        if (kept == 0 && genName != justWritten) fs.delete(g.getPath, true)
       }
   }
 
@@ -812,8 +603,10 @@ object KeyedUpsertSink {
     * is garbage the next compact overwrites) or the new pointer (fully
     * written files). A reader that resolved the pointer JUST before
     * compaction keeps its one-generation grace window: superseded files
-    * are pruned only on the NEXT write, exactly as with upserts.
-    * No-op on an empty store.
+    * are pruned only on the NEXT write, exactly as with upserts; every
+    * other generation dir (older copies, crashed writers' leftovers) is
+    * deleted at the flip. Runs under the same lease and fence as
+    * upserts. No-op on an empty store.
     *
     * `keys` must be the same key columns every upsert used — the bucket
     * assignment is recomputed with the shared [[bucketExpr]], so rows
@@ -867,15 +660,11 @@ object KeyedUpsertSink {
     fence()
     writePointer(spark, fs, storeDir, n, newGens, state.bucketCols)
     // grace window: keep the generations the JUST-replaced pointer named
-    // (one more write will reclaim them); everything older goes now —
-    // except a MARKED-in-flight young generation, a peer's
-    // written-but-unflipped optimistic merge (the [[pruneGens]] rule,
-    // same marker-mtime guard)
+    // (one more write will reclaim them); everything older goes now
     val live: Set[String] = state.gens.values.toSet + gen
     fs.listStatus(new Path(storeDir))
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen-"))
       .filterNot(s => live(s.getPath.getName))
-      .filterNot(s => inflightYoung(fs, s.getPath))
       .foreach(s => fs.delete(s.getPath, true))
   }
 

@@ -93,12 +93,17 @@ object StreamingTripPipeline {
       .withColumn("data_type", lit("completed_trip"))
       .withColumn("status", lit("completed"))
 
-  /** The full pipeline: raw value stream in, completed trips out. */
-  def pipeline(raw: DataFrame, cfg: Config = Config()): DataFrame = {
-    val validated = parseAndValidate(raw)
+  /** Validated events in, completed trips out: dedup each family, match,
+    * project. The one composition shared by [[pipeline]], the topology's
+    * matcher hop and the trip store's item stream.
+    */
+  def completed(validated: DataFrame, cfg: Config = Config()): DataFrame =
     completedTrips(matchTrips(
       dedupedStarts(validated, cfg), dedupedEnds(validated, cfg), cfg))
-  }
+
+  /** The full pipeline: raw value stream in, completed trips out. */
+  def pipeline(raw: DataFrame, cfg: Config = Config()): DataFrame =
+    completed(parseAndValidate(raw), cfg)
 
   /** A1 streaming flavor: the five daily KPIs over a 1-day event-time
     * tumbling window on completed trips (append mode once the watermark

@@ -150,11 +150,8 @@ object TripStore {
   def itemStream(raw: DataFrame,
       cfg: StreamingTripPipeline.Config = StreamingTripPipeline.Config()): DataFrame = {
     val validated = StreamingTripPipeline.parseAndValidate(raw)
-    val completed = StreamingTripPipeline.completedTrips(
-      StreamingTripPipeline.matchTrips(
-        StreamingTripPipeline.dedupedStarts(validated, cfg),
-        StreamingTripPipeline.dedupedEnds(validated, cfg), cfg))
-    rawItems(validated).unionByName(matcherItems(completed))
+    rawItems(validated).unionByName(
+      matcherItems(StreamingTripPipeline.completed(validated, cfg)))
   }
 
   /** The store-writer query: call `.start()` (after setting any options)

@@ -146,11 +146,7 @@ object TripTopology {
       Map("recursiveFileLookup" -> "true"))
     val inserts = feed.filter(col("status") === "raw" &&
       col("sk").startsWith("RAW#"))
-    val completed = StreamingTripPipeline.completedTrips(
-      StreamingTripPipeline.matchTrips(
-        StreamingTripPipeline.dedupedStarts(inserts, cfg),
-        StreamingTripPipeline.dedupedEnds(inserts, cfg), cfg))
-    TripStore.matcherItems(completed)
+    TripStore.matcherItems(StreamingTripPipeline.completed(inserts, cfg))
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(KeyedUpsertSink.upserter(storeDir, TripStore.Keys,

@@ -13,7 +13,8 @@ import graft.operators.KeyedUpsertSink
   * this spec proves the lease mechanics themselves through the public
   * API: mutual exclusion of racing writers, stale-lease takeover (the
   * crashed-writer case), the wait-cap error (the wedged-peer case),
-  * and writer-id generation namespacing.
+  * writer-id generation namespacing, and reclamation of a crashed
+  * writer's unflipped generation.
   */
 class StoreLeaseSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -193,52 +194,24 @@ class StoreLeaseSpec extends AnyFunSuite with SparkTestBase {
     } finally KeyedUpsertSink.preFlipHold = () => ()
   }
 
-  test("optimistic commit: a conflicting peer flip forces a re-merge, nothing is lost") {
+  test("an unflipped generation left by a crashed writer is reclaimed at the next flip") {
     val dir = freshDir()
-    // one bucket => every write touches it => the staged peer write
-    // below ALWAYS conflicts with the in-flight optimistic commit
     KeyedUpsertSink.upsertBatch(Seq(("k", 1L)).toDF("k", "ts"), dir,
-      Seq("k"), "ts", 0L, versionWins = true, numBuckets = 1)
-    // one-shot: between writer A's merge and its commit, writer B lands
-    // a full upsert of a DIFFERENT key into the same bucket — if A's
-    // stale merge committed anyway, B's k2 row would vanish from the
-    // bucket A rewrote
-    KeyedUpsertSink.commitStatsClear()
-    val fired = new java.util.concurrent.atomic.AtomicInteger(0)
-    KeyedUpsertSink.preCommitHold = () =>
-      if (fired.getAndIncrement() == 0)
-        KeyedUpsertSink.upsertBatch(Seq(("k2", 2L)).toDF("k", "ts"), dir,
-          Seq("k"), "ts", 10L, versionWins = true, writerId = "b")
-    try {
-      KeyedUpsertSink.upsertBatch(Seq(("k", 3L)).toDF("k", "ts"), dir,
-        Seq("k"), "ts", 20L, versionWins = true, writerId = "a")
-    } finally KeyedUpsertSink.preCommitHold = () => ()
-    // the conflict was DETECTED and the batch re-merged down the
-    // locked path (first-conflict serialization, r19 verdict item 4 —
-    // no optimistic retry, one discarded merge at most)
-    val stats = KeyedUpsertSink.commitStatsSnapshot()
-    assert(stats.getOrElse("commit_conflicts", 0L) >= 1L,
-      s"the staged peer flip must register as a commit conflict: $stats")
-    assert(stats.getOrElse("locked_fallbacks", 0L) >= 1L,
-      s"the conflicted batch must serialize via the locked path: $stats")
-    val rows = KeyedUpsertSink.readStore(spark, dir).get
-      .as[(String, Long)].collect().toSet
-    assert(rows === Set("k" -> 3L, "k2" -> 2L),
-      s"re-merge must carry the peer's row: $rows")
-    // the conflicted attempt left no unbounded garbage: the retry
-    // OVERWROTE its own generation (no orphan per attempt), so what
-    // remains is the live generation plus the one-generation grace
-    // window — and one more upsert reclaims the grace copy as usual
-    val gens0 = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("gen-"))
-      .map(_.getName).toSet
-    assert(gens0.size <= 2, s"conflict retries must not leak generations: $gens0")
-    KeyedUpsertSink.upsertBatch(Seq(("k3", 4L)).toDF("k", "ts"), dir,
-      Seq("k"), "ts", 30L, versionWins = true, writerId = "a")
-    val gens1 = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("gen-"))
-      .map(_.getName).toSet
-    assert(gens1.size <= 2, s"grace reclamation must keep storage bounded: $gens1")
+      Seq("k"), "ts", 0L, versionWins = true)
+    // what a writer that died between its generation write and its
+    // pointer flip leaves behind: a written bucket no pointer names,
+    // plus the fresh in-flight marker older writers stamped on it
+    val orphan = Paths.get(dir, "gen-x-9")
+    Files.createDirectories(orphan.resolve("bucket=0"))
+    Files.write(orphan.resolve("bucket=0/part-00000.parquet"),
+      "never flipped".getBytes("UTF-8"))
+    Files.write(orphan.resolve("_INFLIGHT"), "inflight".getBytes("UTF-8"))
+    KeyedUpsertSink.upsertBatch(Seq(("k2", 2L)).toDF("k", "ts"), dir,
+      Seq("k"), "ts", 1L, versionWins = true)
+    assert(!Files.exists(orphan),
+      "only the lease holder writes generations: an unnamed one is garbage")
+    assert(KeyedUpsertSink.readStore(spark, dir).get
+      .as[(String, Long)].collect().toSet === Set("k" -> 1L, "k2" -> 2L))
   }
 
   test("a crashed writer's FRESH lock is waited out and taken over (cap > lease)") {

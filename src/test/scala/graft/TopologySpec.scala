@@ -31,23 +31,30 @@ import graft.streaming.{StreamingTripPipeline, TripStore, TripTopology}
   *     feed contract leans on: the restart re-runs the same batch id,
   *     the upsert re-merges idempotently under versionWins, and the
   *     change log finally lands.
+  *
+  * A fourth test runs schedule 2 over a small generated feed
+  * (re-deliveries, ends before starts, invalid events, never-completed
+  * trips) and expects exactly the trips with a valid start and end, so
+  * the concurrent two-hop path is covered without the reference data.
   */
 class TopologySpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
-  /** The golden final-table assertions shared by every schedule. */
-  private def assertGolden(storeDir: String): Unit = {
+  /** The final-table assertions shared by every schedule: `expected`
+    * completed trips (4,468 on the golden feed, TripStoreSpec's
+    * published number), exactly their RAW pairs flipped.
+    */
+  private def assertGolden(storeDir: String, expected: Long = 4468L): Unit = {
     val store = KeyedUpsertSink.readStore(spark, storeDir).get.cache()
     try {
-      // golden: 4,468 completed trips (TripStoreSpec's published number)
       val completed = store.filter(col("sk").startsWith("COMPLETED#"))
-      assert(completed.count() === 4468L,
-        "two-hop topology must reach the golden 4,468 completed trips")
+      assert(completed.count() === expected,
+        s"two-hop topology must reach $expected completed trips")
       assert(completed.select("status").distinct()
         .collect().map(_.getString(0)).toSeq === Seq("completed"))
 
       // exactly the matched RAW pairs flipped to processed_by_matcher
-      val expected = completed.select(col("trip_id"),
+      val pairs = completed.select(col("trip_id"),
           concat_ws("#", lit("RAW"), lit("trip_start"),
             col("pickup_datetime")).as("sk"))
         .unionByName(completed.select(col("trip_id"),
@@ -56,17 +63,17 @@ class TopologySpec extends AnyFunSuite with SparkTestBase {
         .distinct()
       val processed = store.filter(col("status") === "processed_by_matcher")
         .select("trip_id", "sk")
-      assert(processed.exceptAll(expected).count() === 0,
+      assert(processed.exceptAll(pairs).count() === 0,
         "an unmatched RAW item was flagged processed")
-      assert(expected.exceptAll(processed).count() === 0,
+      assert(pairs.exceptAll(processed).count() === 0,
         "a matched RAW item was not flagged processed (a flip was lost)")
-      assert(processed.count() === 2 * 4468L)
+      assert(processed.count() === 2 * expected)
 
       // unmatched raw events persist as status='raw'; nothing regressed
       val raw = store.filter(col("sk").startsWith("RAW#"))
       assert(raw.filter(!col("status").isin("raw", "processed_by_matcher"))
         .count() === 0)
-      assert(raw.count() > 2 * 4468L,
+      assert(raw.count() > 2 * expected,
         "unmatched raw events must persist as status='raw'")
 
       // no phantom completions: every processed trip has its COMPLETED item
@@ -145,6 +152,69 @@ class TopologySpec extends AnyFunSuite with SparkTestBase {
     }
 
     assertGolden(storeDir)
+  }
+
+  test("both hops live concurrently over a generated feed complete exactly the valid pairs") {
+    implicit val ctx = spark.sqlContext
+    // 120 trips over 10 event hours (inside the 24 h watermark and trip
+    // bounds, so nothing is evicted), fed in 6 chunks: every 6th trip
+    // never ends, every 10th has no start, every 9th has an invalid
+    // start (no pickup time), every 5th end arrives a chunk before its
+    // start, every 7th trip is re-delivered a chunk later, and each
+    // chunk carries poison events
+    def startJson(id: String, ts: String) =
+      s"""{"trip_id":"$id","data_type":"trip_start","pickup_datetime":"$ts","estimated_fare_amount":10.0,"pickup_location_id":1,"dropoff_location_id":2,"vendor_id":3}"""
+    def endJson(id: String, ts: String) =
+      s"""{"trip_id":"$id","data_type":"trip_end","dropoff_datetime":"$ts","fare_amount":25.5,"passenger_count":1.0,"trip_distance":2.2}"""
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+    val t0 = java.time.LocalDateTime.of(2024, 5, 20, 6, 0)
+    val chunks = Array.fill(6)(Seq.newBuilder[String])
+    val expectedIds = Set.newBuilder[String]
+    (0 until 120).foreach { i =>
+      val id = s"g$i"
+      val pickup = t0.plusMinutes(i * 5L)
+      val c = i / 20
+      val (sc, ec) = if (i % 5 == 2 && c < 5) (c + 1, c) else (c, c)
+      val start =
+        if (i % 9 == 4) s"""{"trip_id":"$id","data_type":"trip_start"}"""
+        else startJson(id, pickup.format(fmt))
+      val end = endJson(id, pickup.plusMinutes(20).format(fmt))
+      // a re-delivery repeats only what was sent
+      val copies = if (i % 7 == 0) 2 else 1
+      (0 until copies).foreach { k =>
+        if (i % 10 != 3) chunks(math.min(sc + k, 5)) += start
+        if (i % 6 != 0) chunks(math.min(ec + k, 5)) += end
+      }
+      if (i % 6 != 0 && i % 10 != 3 && i % 9 != 4) expectedIds += id
+    }
+    chunks.foreach { b =>
+      b += "not json"
+      b += """{"trip_id":null,"data_type":"trip_end","dropoff_datetime":"2024-05-20 07:00:00"}"""
+    }
+    val expected = expectedIds.result()
+
+    val base = Files.createTempDirectory("graft-topology-gen").toString
+    val storeDir = s"$base/store"
+    val changesDir = s"$base/changes"
+    val input = MemoryStream[String]
+    val ingest = TripTopology.ingestWriter(input.toDF(), storeDir, changesDir,
+      s"$base/ckpt_ingest").start()
+    val matcher = TripTopology.matcherWriter(spark, changesDir, storeDir,
+      s"$base/ckpt_matcher", maxFilesPerTrigger = 2).start()
+    try {
+      // one ingest batch per chunk while the matcher races it for the lease
+      chunks.foreach { b => input.addData(b.result()); ingest.processAllAvailable() }
+      matcher.processAllAvailable()
+      matcher.processAllAvailable()
+    } finally {
+      ingest.stop(); matcher.stop()
+    }
+
+    assertGolden(storeDir, expected.size.toLong)
+    val completedIds = KeyedUpsertSink.readStore(spark, storeDir).get
+      .filter(col("sk").startsWith("COMPLETED#"))
+      .select("trip_id").as[String].collect().toSet
+    assert(completedIds === expected)
   }
 
   test("RocksDB provider + crash between store upsert and change-log write recovers to golden") {
