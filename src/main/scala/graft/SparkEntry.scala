@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{GramFunctions, TextAnalysis, TextHash}
-import graft.operators.{AsOfJoin, Cluster, Dedup, KpiAggregator, RawEventStore, SequencePack, Sessionize, SimilaritySearch, TripMatcher}
+import graft.operators.{AsOfJoin, Cluster, Dedup, KpiAggregator, Materialize, RawEventStore, SequencePack, Sessionize, SimilaritySearch, TripMatcher}
 import graft.sources.{MediaColumns, TripSources}
 
 /** Driver contract — one named query per implemented operator of
@@ -130,7 +130,7 @@ object SparkEntry {
       // checkpoint there just serializes the union behind a cache-write
       // barrier (measured flat-to-worse), so the final-state path keeps
       // the duplicate subtree.
-      .transform(d => if (shareEnds) d.localCheckpoint(false) else d)
+      .transform(d => if (shareEnds) Materialize.shared(d) else d)
     val sAttrs = Seq("pickup_datetime", "estimated_fare_amount")
     val eAttrs = Seq("dropoff_datetime", "fare_amount")
     val completed = starts
@@ -192,7 +192,7 @@ object SparkEntry {
         // inside the generic sink loses when batches are small/cheap
         // (the streaming micro-batch case) — only a batch whose
         // recompute dwarfs one cache write should opt in.
-        val batch = items.withColumn("_ord", ord).localCheckpoint(false)
+        val batch = Materialize.shared(items.withColumn("_ord", ord))
         KeyedUpsertSink.upsertBatch(batch, storeDir,
           TripStore.Keys, "_ord", batchId = i.toLong, versionWins = true,
           numBuckets = 32, bucketCols = Seq("trip_id"))
@@ -1023,7 +1023,7 @@ object SparkEntry {
         .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
         .select((col("l_suppkey").cast("long") * 2).as("a"),
           (col("o_custkey").cast("long") * 2 + 1).as("b"))
-        .localCheckpoint(false))
+        .transform(Materialize.shared))
 
   /** Decode a long co-purchase node id back to the contract's string
     * form: even 2k -> "s<k>" (supplier), odd 2k+1 -> "c<k>" (customer).

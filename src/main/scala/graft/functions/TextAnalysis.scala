@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import graft.operators.Materialize
 
 /** Text-analysis operators for the training-data pipeline over the
   * `documents` table: token counting, quality scoring, language-ID,
@@ -227,18 +229,9 @@ object TextAnalysis {
     // the fold (an interpreted HOF) serially for the whole training
     // loop, and the rewrite passes inherit the partitioning through
     // every round (map-only). Size-adaptive: no-op at scale.
-    bpeCk(graft.operators.Dedup.fanOutSmall(
+    Bridge.severOrigin(Materialize.shared(graft.operators.Dedup.fanOutSmall(
         docs.select(col(idCol).as("id"), col(textCol)), col("id"))
-      .select(col("id"), split(trim(col(textCol)), "\\s+").as("toks")))
-
-  /** LAZY checkpoint + origin sever — the per-pass materialization
-    * rides the NEXT consumer's job (pair count / encode output) instead
-    * of paying its own job barrier per pass; a trainer's final rewrite
-    * is never materialized at all.
-    */
-  private def bpeCk(df: DataFrame): DataFrame =
-    df.localCheckpoint(false)
-      .transform(org.apache.spark.sql.graftbridge.Bridge.severOrigin)
+      .select(col("id"), split(trim(col(textCol)), "\\s+").as("toks"))))
 
   /** Adjacent-pair rows (tok, next) from the token arrays — zip each
     * array against its own 1-shifted slice and explode. Same pair
@@ -286,11 +279,16 @@ object TextAnalysis {
   /** [[bpeFoldMerge]] applied to the (id, toks) relation, checkpointed:
     * each pass's result is read at least twice (next round's pair count
     * + its rewrite, or the next encode group), and the materialized
-    * relation is corpus-doc-sized (one array row per doc).
+    * relation is corpus-doc-sized (one array row per doc). LAZY
+    * materialization + origin sever: each pass's materialization rides
+    * the NEXT consumer's job (pair count / encode output) instead of
+    * paying its own job barrier per pass; a trainer's final rewrite is
+    * never materialized at all.
     */
   private def bpeApplyMergeArrays(toks: DataFrame,
       pairs: Seq[(String, String)]): DataFrame =
-    bpeCk(toks.select(col("id"), bpeFoldMerge(col("toks"), pairs).as("toks")))
+    Bridge.severOrigin(Materialize.shared(
+      toks.select(col("id"), bpeFoldMerge(col("toks"), pairs).as("toks"))))
 
   def bpeMergeSequence(docs: DataFrame, steps: Int,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
@@ -439,7 +437,8 @@ object TextAnalysis {
     var toks = bpeTokArrays(docs, idCol, textCol)
     groups.grouped(4).foreach { chunk =>
       val folded = chunk.foldLeft(col("toks")) { (c, g) => bpeFoldMerge(c, g) }
-      toks = bpeCk(toks.select(col("id"), folded.as("toks")))
+      toks = Bridge.severOrigin(Materialize.shared(
+        toks.select(col("id"), folded.as("toks"))))
     }
     bpeStream(toks, idCol)
   }

@@ -42,7 +42,7 @@ object CorpusSelect {
   def budgetSelect(docs: DataFrame, ordCol: String, tokensCol: String,
       budget: Long, buckets: Int = 256): DataFrame = {
     val spark = docs.sparkSession
-    val base = docs.localCheckpoint(false)
+    val base = Materialize.shared(docs)
     val stats = base.agg(min(col(ordCol)).cast("long").as("lo"),
       max(col(ordCol)).cast("long").as("hi")).head()
     if (stats.isNullAt(0)) return base.withColumn("cum_before", lit(0L))
@@ -90,7 +90,7 @@ object CorpusSelect {
   def budgetSelectPerGroup(docs: DataFrame, groupCol: String,
       ordCol: String, tokensCol: String, budgetPerGroup: Long,
       buckets: Int = 256): DataFrame = {
-    val base = docs.localCheckpoint(false)
+    val base = Materialize.shared(docs)
     val stats = base.agg(min(col(ordCol)).cast("long").as("lo"),
       max(col(ordCol)).cast("long").as("hi")).head()
     if (stats.isNullAt(0)) return base.withColumn("cum_before", lit(0L))

@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * anti-join each; the near-dup join is the df-capped inverted-index
   * equi-join (Σdf², never corpus²); packing is the two-phase
   * bucket-prefix-sum (≤`buckets` driver rows). The post-unit-dedup
-  * relation is localCheckpointed once — it feeds the pair join, the
+  * relation is materialized once — it feeds the pair join, the
   * split, AND the pack, and its lineage (two window rebuilds over
   * exploded units) would otherwise be recomputed by each consumer.
   */
@@ -73,7 +73,7 @@ object CurationPipeline {
     // see Dedup.fanOutSmall)
     val extracted = Dedup.fanOutSmall(html, col(idCol)).select(col(idCol),
       TextAnalysis.htmlToText(col(htmlCol)).as("text"))
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
 
     // S2: strict gates. One text_stats kernel pass + one repetition
     // kernel pass; the exact-dedup keep-first rides a left-semi join
@@ -90,7 +90,7 @@ object CurationPipeline {
       // each unit pass references its input THREE times (unit explode,
       // per-doc totals, the doc-survival anchor) — checkpoint the stage
       // boundaries or the kernel/gate lineage runs multiplicatively
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
 
     // S3+S4 FUSED (r21): corpus-wide boilerplate-unit removal and
     // intra-doc unit dedup in ONE unit pass
@@ -103,7 +103,7 @@ object CurationPipeline {
     val unitDeduped = Dedup.dropBoilerThenDedupUnits(curated, minDocFreq,
         idCol = idCol)
       .select(col(idCol), col("text_clean").as("text"))
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
 
     // the S3-only intermediate, for stage-by-stage inspection
     // ([[Stages.deboilered]], CurationPipelineSpec): LAZY and UNCONSUMED

@@ -114,20 +114,6 @@ object Dedup {
       rows.join(broadcast(hot), Seq(keyCol), "left_anti")
   }
 
-  /** Lazy lineage-truncating materialization for relations scanned by
-    * several downstream branches (df-cap aggregate, both self-join
-    * sides): RELIABLE `checkpoint(eager=false)` when the context has a
-    * checkpoint dir (the cluster deploy — survives executor loss),
-    * executor-local `localCheckpoint(eager=false)` otherwise
-    * (single-node/test: no dir needed, but a lost executor forces
-    * recompute-from-nothing). Lazy either way: no job at
-    * plan-construction time; the first action materializes once.
-    */
-  private[graft] def sharedRelation(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(false)
-    else df.localCheckpoint(false)
-
   /** SIZE-ADAPTIVE fan-out for map-heavy kernel stages: a small corpus
     * parquet arrives as one file split (`maxPartitionBytes`/
     * `openCostInBytes` floors), which would run every per-row kernel
@@ -158,7 +144,7 @@ object Dedup {
     */
   private[graft] def noveltyRows(docs: DataFrame, n: Int, idCol: String,
       textCol: String, maxDocFreq: Option[Long]): DataFrame =
-    dfCap(sharedRelation(shingleRows(docs, idCol, textCol, n)), "s",
+    dfCap(Materialize.shared(shingleRows(docs, idCol, textCol, n)), "s",
       maxDocFreq).withColumnRenamed("s", "shingle")
 
   def shingles(docs: DataFrame, n: Int = 3, idCol: String = "doc_id",
@@ -175,7 +161,7 @@ object Dedup {
         .select(col("id"), explode(col("_arr")).as("shingle"),
           size(col("_arr")).cast("long").as("sz"))
         .select(col("id"), col("shingle"), col("sz"))
-      if (materialize) sharedRelation(rows) else rows
+      if (materialize) Materialize.shared(rows) else rows
     case cap @ Some(_) =>
       // materialize AFTER the cap + sz window (r20): a self-joining
       // consumer then scans the final relation twice instead of
@@ -185,7 +171,7 @@ object Dedup {
       val capped = dfCap(shingleRows(docs, idCol, textCol, n), "s", cap)
         .withColumn("sz", count(lit(1)).over(Window.partitionBy("id")))
         .withColumnRenamed("s", "shingle")
-      if (materialize) sharedRelation(capped) else capped
+      if (materialize) Materialize.shared(capped) else capped
   }
 
   /** Pair intersection counts with both sides' set sizes carried through
@@ -297,7 +283,7 @@ object Dedup {
       textCol: String = "text", maxDocFreq: Option[Long] = None): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0,1], got $threshold")
-    val sh = sharedRelation(
+    val sh = Materialize.shared(
       shingles(docs, n, idCol, textCol, maxDocFreq))
     val prefix = sh
       .withColumn("df", count(lit(1)).over(Window.partitionBy("shingle")))
@@ -308,7 +294,7 @@ object Dedup {
     // materialized: read twice below (candidate-id semi-join + the
     // verification join) — unmaterialized, the prefix windows + join
     // would run twice
-    val cand = sharedRelation(prefix.as("a")
+    val cand = Materialize.shared(prefix.as("a")
       .join(prefix.as("b"), col("a.shingle") === col("b.shingle") &&
         col("a.id") < col("b.id") &&
         col("a.sz") * threshold <= col("b.sz") &&
@@ -389,7 +375,7 @@ object Dedup {
     // 0-based start): map-only explode instead of the token posexplode
     // + count/lead windows — one Exchange removed ahead of the
     // self-join, byte-identical (id, pos, s) rows
-    val psh = sharedRelation(dfCap(
+    val psh = Materialize.shared(dfCap(
       fanOutSmall(docs, col(idCol)).select(col(idCol).as("id"),
           explode(graft.functions.GramFunctions
             .wordShinglePositions(col(textCol), n)).as("ps"))
@@ -454,15 +440,15 @@ object Dedup {
       minTokens: Int = 10, idCol: String = "doc_id",
       textCol: String = "text", maxDocFreq: Option[Long] = None,
       maxRounds: Int = 20): (DataFrame, Int, Boolean) = {
-    var cur = iterCheckpoint(docs.select(col(idCol), col(textCol)))
+    var cur = Materialize.round(docs.select(col(idCol), col(textCol)))
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {
-      val runs = iterCheckpoint(
+      val runs = Materialize.round(
         alignedSpanRuns(cur, n, minTokens, idCol, textCol, maxDocFreq))
       if (runs.isEmpty) converged = true
       else {
-        cur = iterCheckpoint(pruneSharedSpans(cur, runs, idCol, textCol)
+        cur = Materialize.round(pruneSharedSpans(cur, runs, idCol, textCol)
           .select(col(idCol), col("text_pruned").as(textCol)))
         rounds += 1
       }
@@ -530,7 +516,7 @@ object Dedup {
       textCol: String = "text", maxDocFreq: Option[Long] = None): DataFrame = {
     val all = graft.functions.TextAnalysis
       .winnowFingerprints(docs, idCol, textCol, k, w)
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
     val fps = dfCap(all, "fingerprint", maxDocFreq)
     fps.as("a")
       .join(fps.as("b"), col("a.fingerprint") === col("b.fingerprint") &&
@@ -572,7 +558,7 @@ object Dedup {
     // instead of re-running the whole signature pipeline
     val banded = bandedSignatures(
         minHashSignatures(docs, n, numHashes, idCol, textCol), numHashes, bands)
-      .transform(sharedRelation)
+      .transform(Materialize.shared)
     val cand = banded.as("a")
       .join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
@@ -667,7 +653,7 @@ object Dedup {
         struct(lit(b).as("block"),
           shiftright(col("simhash"), b * 8).bitwiseAND(0xFF).as("byte"))): _*)).as("bb"))
       .select(col("id"), col("simhash"), col("bb.block"), col("bb.byte"))
-      .transform(sharedRelation) // both self-join sides scan this, not the pipeline
+      .transform(Materialize.shared) // both self-join sides scan this, not the pipeline
     blocked.as("a")
       .join(blocked.as("b"),
         col("a.block") === col("b.block") && col("a.byte") === col("b.byte") &&
@@ -719,7 +705,7 @@ object Dedup {
           struct(lit(b).as("block"),
             shiftright(col("h"), b * blockBits).bitwiseAND(mask).as("byte"))): _*)).as("bb"))
       .select(col("id"), col("h"), col("bb.block"), col("bb.byte"))
-    val blocked = sharedRelation(maxBlockFreq match {
+    val blocked = Materialize.shared(maxBlockFreq match {
       case Some(cap) =>
         val hot = blocked0.groupBy("block", "byte")
           .agg(count(lit(1)).as("_df")).filter(col("_df") > cap)
@@ -903,17 +889,6 @@ object Dedup {
         coalesce(col("text_clean"), lit("")).as("text_clean"))
   }
 
-  /** Eager lineage-truncating materialization for iterative fixpoints:
-    * RELIABLE `checkpoint()` when the context has a checkpoint dir (the
-    * cluster deploy — survives executor loss), executor-local
-    * `localCheckpoint()` otherwise (single-node/test: no dir needed, but
-    * a lost executor would force recompute-from-nothing).
-    */
-  private[graft] def iterCheckpoint(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftbridge.Bridge.severOrigin(
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint())
-
   /** Near-dup CLUSTERS from a pair list: connected components,
     * cluster_id = min id reachable. Pair lists alone can't drive dedup —
     * transitive chains (a~b, b~c) must collapse to one cluster so
@@ -932,7 +907,7 @@ object Dedup {
     * result — bounded by component diameter (near-dup components are
     * shallow; large/small-star would halve rounds for deep graphs). Set
     * `sparkContext.setCheckpointDir` to make the per-round
-    * materialization fault-tolerant (see [[iterCheckpoint]]).
+    * materialization fault-tolerant (see [[Materialize]]).
     */
   /** The consumable end of the dedup pipeline: drop every document that
     * belongs to a near-dup cluster but is not its representative (the
@@ -963,7 +938,7 @@ object Dedup {
     // round-trip saved per caller; the collect/fixpoint below reads
     // cached blocks either way)
     val edges = org.apache.spark.sql.graftbridge.Bridge.severOrigin(
-      sharedRelation(
+      Materialize.shared(
         pairs.select(col("id_a").cast("long").as("src"),
             col("id_b").cast("long").as("dst"))
           .unionByName(pairs.select(col("id_b").cast("long").as("src"),
@@ -981,7 +956,7 @@ object Dedup {
     */
   private[graft] def minLabelClusters(edges: DataFrame,
       maxRounds: Int = Int.MaxValue): (DataFrame, Int, Boolean) = {
-    var labels = iterCheckpoint(
+    var labels = Materialize.round(
       edges.select(col("src").as("id")).distinct()
         .withColumn("cluster_id", col("id")))
     var changed = 1L
@@ -992,7 +967,7 @@ object Dedup {
         .select(col("src").as("id"), col("cluster_id").as("nbr"))
         .groupBy("id").agg(min(col("nbr")).as("nbr"))
       // new label AND the convergence flag in one checkpointed pass
-      val next = iterCheckpoint(
+      val next = Materialize.round(
         labels.join(nbrMin, Seq("id"), "left")
           .select(col("id"),
             least(col("cluster_id"),
@@ -1028,7 +1003,7 @@ object Dedup {
     * two counts + one exceptAll over checkpointed blocks).
     */
   def nearDupClustersStar(pairs: DataFrame): DataFrame = {
-    val edges = iterCheckpoint(
+    val edges = Materialize.round(
       pairs.select(col("id_a").cast("long").as("src"),
         col("id_b").cast("long").as("dst"))).distinct()
     starClusters(edges)._1
@@ -1088,12 +1063,8 @@ object Dedup {
     // so an unmaterialized large-star output would be computed twice.
     // The inner checkpoint is LAZY — it materializes as part of the
     // outer round's first job instead of paying its own job barrier.
-    def lazyCheckpoint(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(false)
-      else df.localCheckpoint(false)
     def round(e: DataFrame): DataFrame =
-      iterCheckpoint(smallStar(lazyCheckpoint(largeStar(e))))
+      Materialize.round(smallStar(Materialize.shared(largeStar(e))))
     // (row count, XOR of row hashes) in ONE agg job over the checkpointed
     // set. The signature is an exact NEGATIVE convergence filter:
     // different signatures ⇒ different edge sets, so the expensive
@@ -1197,7 +1168,7 @@ object Dedup {
     val e = embs.select(col(idCol).as("id"), col(vecCol).as("v"),
       sqrt(dot(col(vecCol), col(vecCol))).as("nrm"),
       SimilaritySearch.lshBucket(col(vecCol), bits).as("bucket"))
-      .localCheckpoint(false) // bucket projections compute once, not per side
+      .transform(Materialize.shared) // bucket projections compute once, not per side
     e.as("a").join(e.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
       .withColumn("cosine", SimilaritySearch.cosineFromNorms(
@@ -1233,7 +1204,7 @@ object Dedup {
       // (bit-identical to the per-plane form — see BandBucketsFloat)
       graft.functions.VectorFunctions.bandBucketsF(col(vecCol),
         tables, bitsPerTable).as("tbl"))
-      .localCheckpoint(false) // hyperplane projections compute once, not per side
+      .transform(Materialize.shared) // hyperplane projections compute once, not per side
     val x = e.select(col("id"), posexplode(col("tbl")).as(Seq("t", "bucket")))
     val pairs = x.as("a").join(x.as("b"),
         col("a.t") === col("b.t") && col("a.bucket") === col("b.bucket") &&

@@ -132,7 +132,7 @@ private[graft] object DeltaLog {
   private def writeBucketedSnapshot(spark: SparkSession, folded0: DataFrame,
       path: String, hashCols: Seq[String],
       targetRowsPerBucket: Long): Unit = {
-    val folded = folded0.localCheckpoint(false)
+    val folded = Materialize.shared(folded0)
     val n = folded.count()
     val b = math.max(1L, (n + targetRowsPerBucket - 1) / targetRowsPerBucket)
       .min(1L << 20).toInt

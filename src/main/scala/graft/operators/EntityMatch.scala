@@ -80,7 +80,7 @@ object EntityMatch {
     // the shared variant", hence distance ≤ 1.
     // materialized once: both self-join sides scan it, and its lineage
     // (scan + explode + dedup aggregate) would otherwise run twice
-    val keyed = Dedup.sharedRelation(
+    val keyed = Materialize.shared(
       df.select(col(idCol).as("_id"), col(nameCol).as("_name"))
         .select(col("_id"), col("_name"), posexplode(expr(
           """transform(sequence(0, length(_name)),

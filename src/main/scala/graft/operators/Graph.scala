@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Graph propagation over an edge table — PageRank as iterated
   * relational algebra, made integer-exact so it is reproducible at any
@@ -39,9 +40,10 @@ import org.apache.spark.sql.functions._
   * the N-row rank table moves. Hub skew (a node with 10⁸ in-edges) is absorbed
   * by partial aggregation — contributions combine map-side before the
   * exchange, the same shape that makes the daily-KPI aggregate safe.
-  * Lineage grows linearly in iterations; past ~10 supersteps a
-  * `localCheckpoint` per iteration keeps the plan bounded (documented,
-  * not needed at k=3).
+  * Below the broadcast gate each superstep's N-row rank table is
+  * materialized ([[Materialize]], reliable when a checkpoint dir is set)
+  * and severed from its origin plan, so the plan stays bounded; on the
+  * large-graph path lineage grows linearly in iterations.
   *
   * No dangling-node term: callers feed SYMMETRIZED edges (see
   * [[undirect]]) or accept that sink mass leaks, the common
@@ -136,12 +138,7 @@ object PageRank {
     // materialize the edge list and out-weights ONCE: every superstep
     // (plus the node count) re-reads them, and their lineage is whatever
     // produced the edges (joins/unions/distinct) — without this each
-    // iteration re-pays the full edge construction. Reliable checkpoint
-    // when a dir is set (cluster), executor-local otherwise.
-    def materialized(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(false)
-      else df.localCheckpoint(false)
+    // iteration re-pays the full edge construction (see [[Materialize]]).
     // uniform = the all-weights-1 special case of the same arithmetic
     val w = wCol.map(col).getOrElse(lit(1L)).cast("long")
     val e0 = edges.select(col(src).as("src"), col(dst).as("dst"), w.as("w"))
@@ -162,7 +159,7 @@ object PageRank {
     // doubled block footprint overflowed the block manager's storage
     // fraction and eviction/recompute made prep 2x-above-linear.
     val bySrc = org.apache.spark.sql.expressions.Window.partitionBy("src")
-    materialized(e0.withColumn("outw", sum(col("w")).over(bySrc)))
+    Materialize.shared(e0.withColumn("outw", sum(col("w")).over(bySrc)))
   }
 
   /** [[ranks]] over a [[prepare]]d relation (weights were folded at
@@ -301,13 +298,10 @@ object PageRank {
     // rank table in a join, and checkpointed Datasets carry origin-plan
     // baggage that NESTS per round — analysis time doubles per
     // superstep without it (see Bridge.severOrigin)
-    private def ckpt(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftbridge.Bridge.severOrigin(
-        df.localCheckpoint(false))
     def init: DataFrame = {
       val r0 = nodes.select(col("src").as("node"))
         .withColumn("rank", restart(col("node"), scale / n))
-      if (small) ckpt(r0) else r0
+      if (small) Bridge.severOrigin(Materialize.shared(r0)) else r0
     }
     /** For per-round-ACTION loops (convergence probes): the round
       * result eagerly materialized on BOTH gate paths. step() already
@@ -317,7 +311,8 @@ object PageRank {
       * round 0 (O(R²) supersteps, unbounded plan), the exact blowup
       * severOrigin exists to prevent. Identity on the small path.
       */
-    def materialized(r: DataFrame): DataFrame = if (small) r else ckpt(r)
+    def materialized(r: DataFrame): DataFrame =
+      if (small) r else Bridge.severOrigin(Materialize.shared(r))
     def step(r: DataFrame): DataFrame = {
       // broadcasting a lazy multi-superstep plan would re-execute the
       // whole chain per round — the small path checkpoints each round's
@@ -330,7 +325,7 @@ object PageRank {
         .groupBy(col("node"))
         .agg((restart(col("node"), base) +
           expr("(85 * sum(contrib)) div 100")).as("rank"))
-      if (small) ckpt(next) else next
+      if (small) Bridge.severOrigin(Materialize.shared(next)) else next
     }
   }
 }
@@ -420,7 +415,7 @@ object ConnectedComponents {
       }
       case _ => return None
     }
-    val e = Dedup.iterCheckpoint(
+    val e = Materialize.round(
       clean.select(col(src).as("src"), col(dst).as("dst")).distinct())
     if (e.count() > driverMaxEdges) return None
     val parent = scala.collection.mutable.HashMap.empty[Any, Any]

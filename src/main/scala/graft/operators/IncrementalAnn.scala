@@ -126,7 +126,7 @@ object IncrementalAnn {
     DeltaLog.pinParams(batch.sparkSession, storeDir,
       Map("tables" -> tables.toString,
         "bitsPerTable" -> bitsPerTable.toString))
-    val idx = Dedup.sharedRelation(
+    val idx = Materialize.shared(
       indexRows(batch, tables, bitsPerTable, idCol, vecCol))
     val topk = readIndex(batch.sparkSession, storeDir) match {
       case Some(corpusIdx) =>
@@ -134,7 +134,7 @@ object IncrementalAnn {
       case None =>
         incrementalTopK(idx, idx.filter(lit(false)), k, bitsPerTable, multiProbe)
     }
-    val out = Dedup.iterCheckpoint(topk)
+    val out = Materialize.round(topk)
     upsertIndex(idx, storeDir, batchId, numBuckets)
     out
   }

@@ -48,7 +48,7 @@ object IncrementalCdc {
     */
   def incrementalChunkPairs(batchChunks: DataFrame, corpusChunks: DataFrame,
       maxDocFreq: Option[Long] = None): DataFrame = {
-    val b0 = Dedup.sharedRelation(batchChunks)
+    val b0 = Materialize.shared(batchChunks)
     val uni0 = corpusChunks.unionByName(b0).distinct()
     val (uni, b) = maxDocFreq match {
       case Some(cap) =>
@@ -118,12 +118,12 @@ object IncrementalCdc {
       w: Int = 8, divisor: Int = 64, maxDocFreq: Option[Long] = None,
       idCol: String = "doc_id", textCol: String = "text",
       numBuckets: Int = KeyedUpsertSink.DefaultNumBuckets): DataFrame = {
-    val ch = Dedup.sharedRelation(chunkHashes(batch, w, divisor, idCol, textCol))
+    val ch = Materialize.shared(chunkHashes(batch, w, divisor, idCol, textCol))
     val pairs = readChunksForBatch(batch.sparkSession, storeDir, ch) match {
       case Some(corpus) => incrementalChunkPairs(ch, corpus, maxDocFreq)
       case None         => incrementalChunkPairs(ch, ch.filter(lit(false)), maxDocFreq)
     }
-    val out = Dedup.iterCheckpoint(pairs)
+    val out = Materialize.round(pairs)
     upsertChunks(ch, storeDir, batchId, numBuckets)
     out
   }

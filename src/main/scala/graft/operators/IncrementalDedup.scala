@@ -60,7 +60,7 @@ object IncrementalDedup {
       numHashes: Int = 16, bands: Int = 4,
       minAgreement: Double = 0.5): DataFrame = {
     val bb = Dedup.bandedSignatures(batchSigs, numHashes, bands)
-      .transform(Dedup.sharedRelation) // self-join sides + cross join scan it
+      .transform(Materialize.shared) // self-join sides + cross join scan it
     val bc = Dedup.bandedSignatures(corpusSigs, numHashes, bands)
       .select(col("id"), col("band"), col("key")) // ids only: bytes-narrow
     val within = bb.as("a")
@@ -269,10 +269,10 @@ object IncrementalDedup {
       minAgreement: Double = 0.5, idCol: String = "doc_id",
       textCol: String = "text",
       numBuckets: Int = KeyedUpsertSink.DefaultNumBuckets): DataFrame = {
-    val sigs = Dedup.sharedRelation(
+    val sigs = Materialize.shared(
       Dedup.minHashSignatures(batch, n, numHashes, idCol, textCol))
     val pairs = minePairs(sigs, storeDir, numHashes, bands, minAgreement)
-    val out = Dedup.iterCheckpoint(pairs)
+    val out = Materialize.round(pairs)
     upsertSignatures(sigs, storeDir, batchId, numBuckets, numHashes, bands)
     out
   }
@@ -301,7 +301,7 @@ object IncrementalDedup {
     val spark = sigs.sparkSession
     DeltaLog.readFolded(spark, blogDir(storeDir), bandLww) match {
       case Some(_) =>
-        val bb = Dedup.sharedRelation(
+        val bb = Materialize.shared(
           Dedup.bandedSignatures(sigs, numHashes, bands))
         val corpusBands = DeltaLog.readFoldedFor(spark, blogDir(storeDir),
           bandLww, Seq("band", "key"), bb.select("band", "key"))
@@ -318,7 +318,7 @@ object IncrementalDedup {
             greatest(col("_bid"), col("_cid")).as("id_b"))
         // materialized BEFORE the point-lookups below collect its bucket
         // ids (no double-compute) and before the upserts prune past it
-        val cand = Dedup.iterCheckpoint(within.unionByName(cross).distinct())
+        val cand = Materialize.round(within.unionByName(cross).distinct())
         val candIds = cand.select(col("id_a").as("id"))
           .unionByName(cand.select(col("id_b").as("id"))).distinct()
         val corpusSigs = DeltaLog.readFoldedFor(spark, slogDir(storeDir),
@@ -326,7 +326,7 @@ object IncrementalDedup {
         // batch sig wins where both sides know an id (the store's LWW);
         // shared: the relation feeds BOTH scoring joins below, and the
         // store fold behind it must not run twice
-        val all = Dedup.sharedRelation(sigs.select("id", "sig").unionByName(
+        val all = Materialize.shared(sigs.select("id", "sig").unionByName(
           corpusSigs.join(broadcast(sigs.select("id")), Seq("id"), "left_anti")))
         cand
           .join(all.select(col("id").as("id_a"), col("sig").as("sig_a")),

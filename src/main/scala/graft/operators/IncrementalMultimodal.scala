@@ -39,8 +39,8 @@ object IncrementalMultimodal {
       minAgreement: Double = 0.5,
       maxBlockFreq: Option[Long] = None): DataFrame = {
     val spark = paired.sparkSession
-    val ph = Dedup.sharedRelation(IncrementalPhash.phashes(paired))
-    val sigs = Dedup.sharedRelation(Dedup.minHashSignatures(paired, n,
+    val ph = Materialize.shared(IncrementalPhash.phashes(paired))
+    val sigs = Materialize.shared(Dedup.minHashSignatures(paired, n,
       numHashes, idCol = "doc_id", textCol = "caption"))
     val img = (IncrementalPhash.readHashes(spark, s"$baseDir/phash") match {
       case Some(corpus) => IncrementalPhash.incrementalPhashPairs(ph, corpus,
@@ -56,7 +56,7 @@ object IncrementalMultimodal {
     val cap = IncrementalDedup.minePairs(sigs, s"$baseDir/capsigs",
         numHashes, bands, minAgreement)
       .select(col("id_a"), col("id_b"), lit("caption").as("modality"))
-    val out = Dedup.iterCheckpoint(img.unionByName(cap))
+    val out = Materialize.round(img.unionByName(cap))
     IncrementalPhash.upsertHashes(ph, s"$baseDir/phash", batchId)
     IncrementalDedup.upsertSignatures(sigs, s"$baseDir/capsigs", batchId)
     out

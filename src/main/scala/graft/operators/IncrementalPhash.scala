@@ -52,7 +52,7 @@ object IncrementalPhash {
     val mask = (1L << blockBits) - 1L
     require(maxHamming >= 0 && maxHamming < blocks,
       s"pigeonhole blocking needs 0 <= maxHamming < $blocks, got $maxHamming")
-    val b0 = Dedup.sharedRelation(batchHashes.select("id", "h"))
+    val b0 = Materialize.shared(batchHashes.select("id", "h"))
     val uni0 = corpusHashes.select("id", "h").unionByName(b0).distinct()
     def blockRows(df: DataFrame) = df.select(col("id"), col("h"),
       explode(array((0 until blocks).map(b =>
@@ -103,7 +103,7 @@ object IncrementalPhash {
       maxBlockFreq: Option[Long] = None,
       idCol: String = "doc_id", payloadCol: String = "payload",
       numBuckets: Int = KeyedUpsertSink.DefaultNumBuckets): DataFrame = {
-    val ph = Dedup.sharedRelation(phashes(batch, idCol, payloadCol))
+    val ph = Materialize.shared(phashes(batch, idCol, payloadCol))
     val pairs = readHashes(batch.sparkSession, storeDir) match {
       case Some(corpus) =>
         incrementalPhashPairs(ph, corpus, maxHamming, blockBits, maxBlockFreq)
@@ -111,7 +111,7 @@ object IncrementalPhash {
         incrementalPhashPairs(ph, ph.filter(lit(false)), maxHamming,
           blockBits, maxBlockFreq)
     }
-    val out = Dedup.iterCheckpoint(pairs)
+    val out = Materialize.round(pairs)
     upsertHashes(ph, storeDir, batchId, numBuckets)
     out
   }

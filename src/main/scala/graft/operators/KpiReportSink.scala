@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Report sinks (SURVEY.md par.2.1 S7/S8).
   *
@@ -37,9 +38,10 @@ object KpiReportSink {
 
   /** S7: dated path + `latest` alias, both overwrite-idempotent. Returns
     * the row count actually written. The report materializes ONCE
-    * (localCheckpoint) so its full upstream lineage runs a single time —
-    * not once per write plus once per count — and the count can never
-    * disagree with the written bytes if the source moves underneath.
+    * ([[Materialize.now]]) so its full upstream lineage runs a single
+    * time — not once per write plus once per count — and the count can
+    * never disagree with the written bytes if the source moves
+    * underneath. The materialization is released after the writes.
     *
     * EMPTY-INPUT ABORT: an empty report frame throws BEFORE either write
     * — in particular `latest/` is never overwritten with a degenerate
@@ -47,15 +49,17 @@ object KpiReportSink {
     * golden behavior (test/test.py:211-221).
     */
   def writeJsonReport(report: DataFrame, baseDir: String, datePath: String): Long = {
-    val mat = report.localCheckpoint()
-    val rows = mat.count()
-    if (rows == 0L)
-      throw new IllegalStateException(
-        s"refusing to write an EMPTY KPI report to $baseDir/$datePath " +
-          "(reference aborts before any put_object on an empty scan)")
-    mat.coalesce(1).write.mode(SaveMode.Overwrite).text(s"$baseDir/$datePath")
-    mat.coalesce(1).write.mode(SaveMode.Overwrite).text(s"$baseDir/latest")
-    rows
+    val mat = Materialize.now(report)
+    try {
+      val rows = mat.count()
+      if (rows == 0L)
+        throw new IllegalStateException(
+          s"refusing to write an EMPTY KPI report to $baseDir/$datePath " +
+            "(reference aborts before any put_object on an empty scan)")
+      mat.coalesce(1).write.mode(SaveMode.Overwrite).text(s"$baseDir/$datePath")
+      mat.coalesce(1).write.mode(SaveMode.Overwrite).text(s"$baseDir/latest")
+      rows
+    } finally Bridge.unpersistCheckpoint(mat)
   }
 
   /** S7 with the reference's completion signal (SNS publish + Step

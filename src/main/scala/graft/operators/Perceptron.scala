@@ -27,7 +27,7 @@ import graft.functions.TextAnalysis
   * an `element_at`), one hash aggregate by doc, one filter, one hash
   * aggregate by bucket, and a ≤ dim-row collect. Driver traffic is
   * O(dim) per epoch; executor work is two passes over the feature
-  * relation (localCheckpointed once). No per-sample sequencing — the
+  * relation (materialized once). No per-sample sequencing — the
   * batch rule is order-free, which is exactly what makes it
   * distributable where SGD is not. Overflow headroom: |w_b| ≤
   * epochs · Σ_d n_{d,b} ≤ epochs · corpus tokens < 2^63 for any corpus
@@ -48,16 +48,16 @@ object Perceptron {
       textCol: String = "text"): DataFrame = {
     require(dim > 0 && epochs > 0, s"need dim>0, epochs>0: $dim, $epochs")
     val spark = docs.sparkSession
-    val feats = Dedup.sharedRelation(
+    val feats = Materialize.shared(
       TextAnalysis.hashedFeatures(docs, idCol, textCol, dim))
-    val labels = Dedup.sharedRelation(docs.select(col(idCol).as("id"),
+    val labels = Materialize.shared(docs.select(col(idCol).as("id"),
       when(isPositive, 1L).otherwise(-1L).as("y")))
 
     val w = Array.fill(dim)(0L)
     val history = Seq.newBuilder[(Int, Int, Long, Long)]
     for (epoch <- 1 to epochs) {
       val arr = array(w.map(lit(_)): _*)
-      val mis = Dedup.sharedRelation(labels
+      val mis = Materialize.shared(labels
         .join(feats, Seq("id"), "left")
         .withColumn("contrib",
           coalesce(col("n") * element_at(arr, col("bucket").cast("int") + 1),

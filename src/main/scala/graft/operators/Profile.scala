@@ -115,8 +115,8 @@ object Profile {
   def psiFromCounts(before: DataFrame, after: DataFrame,
       colName: String, eps: Double = 1e-6): DataFrame = {
     // read twice each (total + join): materialize the |bins|-row counts
-    val cb = before.select(col("bin"), col("n").as("nb")).localCheckpoint(false)
-    val ca = after.select(col("bin"), col("n").as("na")).localCheckpoint(false)
+    val cb = Materialize.shared(before.select(col("bin"), col("n").as("nb")))
+    val ca = Materialize.shared(after.select(col("bin"), col("n").as("na")))
     val (rb, ra) = (cb.agg(sum("nb")).head(), ca.agg(sum("na")).head())
     require(!rb.isNullAt(0) && !ra.isNullAt(0),
       s"psi($colName): empty snapshot (no bins on one side)")
@@ -318,7 +318,7 @@ object Profile {
         "shiftleft(CAST(1 AS BIGINT), CAST(bin_id div 16 AS INT))" +
           " + (((bin_id % 16) * shiftleft(CAST(1 AS BIGINT)," +
           " CAST(bin_id div 16 AS INT))) div 16) - 1"))
-      .localCheckpoint(false) // |bins| rows, read once per quantile
+      .transform(Materialize.shared) // |bins| rows, read once per quantile
     qs.map { case (label, num, den) =>
       cum.filter(col("cum") >= expr(s"(ntot * $num + ${den - 1}) div $den"))
         .groupBy("g").agg(min(col("lb")).as("est"))

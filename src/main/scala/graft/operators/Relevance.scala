@@ -112,7 +112,7 @@ object Relevance {
         explode(split(trim(col(textCol)), "\\s+")).as("tok"))
       .filter(col("tok") =!= "")
     val counts = toks.groupBy("label", "tok").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false) // read twice: per-label stats + projection
+      .transform(Materialize.shared) // read twice: per-label stats + projection
     val stats = counts.groupBy("label")
       .agg(sum(col("cnt")).as("n"), count(lit(1)).as("v"))
     counts.join(broadcast(stats), "label")
@@ -134,7 +134,7 @@ object Relevance {
   def classifyWithModels(docs: DataFrame, models: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val labels = models.select("label", "oov_logp").distinct()
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
     require(!labels.isEmpty,
       "classifyWithModels: model relation has no labels " +
         "(was unigramModels trained on an empty corpus?)")
@@ -175,10 +175,10 @@ object Relevance {
       .filter(col("tok") =!= "")
     // N and V both derive from the VOCABULARY-sized counts relation
     // (N = Σcnt, V = |rows|), so only counts is materialized — never
-    // the corpus-sized token stream (a localCheckpoint of `toks` would
+    // the corpus-sized token stream (materializing `toks` would
     // cache every token of a 100 TB training corpus for two scalars)
     val counts = toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false) // read twice: stats + the model projection
+      .transform(Materialize.shared) // read twice: stats + the model projection
     val r = counts.agg(sum(col("cnt")), count(lit(1))).head()
     require(!r.isNullAt(0),
       "unigramModel: training corpus has no tokens (empty or all-blank text)")
@@ -480,7 +480,7 @@ object Relevance {
     val model = toks.groupBy(col("bucket"))
       .agg(sum(when(col("tgt"), 1L).otherwise(0L)).as("ct"),
         sum(when(col("tgt"), 0L).otherwise(1L)).as("cr"))
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
     // totals to the driver: 2 longs, bounded — inlined as literals so
     // no 1-row broadcast join appears in the plan
     val t = model.agg(sum(col("ct")), sum(col("cr"))).head()
@@ -604,7 +604,7 @@ object Relevance {
   def tfidfCosinePairs(docs: DataFrame, threshold: Double,
       maxDocFreq: Option[Long] = Some(100), idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val w = Dedup.sharedRelation(
+    val w = Materialize.shared(
       tfidfTerms(docs, idCol, textCol, maxDocFreq))
     val nrm = w.groupBy(col("id"))
       .agg(sqrt(sum((col("w") * col("w")).cast("decimal(38,12)"))

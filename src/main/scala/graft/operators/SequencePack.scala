@@ -64,7 +64,7 @@ object SequencePack {
     val spark = docs.sparkSession
     val pcols = partitionCols.map(col)
     val base = docs.select((pcols :+ col(idCol) :+ col(tokensCol)): _*)
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
     val stats = base.agg(min(col(idCol)).cast("long").as("lo"),
       max(col(idCol)).cast("long").as("hi")).head()
     if (stats.isNullAt(0)) {

@@ -336,7 +336,7 @@ object SimilaritySearch {
     // one corpus-wide centroid selection, lazily materialized (64 rows)
     // — both the assignment pass and the probe pass read it
     ivfTopKFromCents(corpus, queries, k,
-      ivfCentroids(corpus, numCentroids, idCol, vecCol).localCheckpoint(false),
+      Materialize.shared(ivfCentroids(corpus, numCentroids, idCol, vecCol)),
       nprobe, idCol, vecCol)
 
   /** K-MEANS-TRAINED IVF centroids in [[ivfCentroids]]' layout
@@ -373,7 +373,7 @@ object SimilaritySearch {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     ivfTopKFromCents(corpus, queries, k,
       ivfTrainedCentroids(corpus, numCentroids, iters, idCol, vecCol)
-        .localCheckpoint(false),
+        .transform(Materialize.shared),
       nprobe, idCol, vecCol)
 
   /** Probe + assign + rank against a prebuilt (centroid_id, cv, cnrm)
@@ -650,7 +650,7 @@ object SimilaritySearch {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val dot = graft.functions.VectorFunctions.dotF _
     val cents = ivfCentroids(corpus, numCentroids, idCol, vecCol)
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
     val assigned = ivfAssignmentsFromCentroids(corpus, cents, idCol, vecCol)
     val cb = pqCodebook(corpus, subspaces, codebookSize, idCol, vecCol)
     val encoded = pqEncode(assigned.select(col("id"), col("v"), col("centroid_id")),
@@ -788,7 +788,7 @@ object SimilaritySearch {
       numCentroids: Int = 64, nprobe: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     ivfCandidatesFromCents(corpus, queries,
-      ivfCentroids(corpus, numCentroids, idCol, vecCol).localCheckpoint(false),
+      Materialize.shared(ivfCentroids(corpus, numCentroids, idCol, vecCol)),
       nprobe, idCol, vecCol)
 
   /** [[ivfCandidates]] against a prebuilt (centroid_id, cv, cnrm) table —

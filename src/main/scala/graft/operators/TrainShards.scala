@@ -69,7 +69,7 @@ object TrainShards {
     // materialize once: both phases (bucket counts, rank) re-read the
     // input, and its lineage may be an expensive packing chain
     val base = docs.withColumn("_skey", TextHash.hash60(col(idCol)))
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
     // fixed range split of the 60-bit hash space — deterministic across
     // passes, no sampling (unlike repartitionByRange boundaries)
     val width = (1L << 60) / buckets + 1L

@@ -1,9 +1,10 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import graft.operators.{BloomSet, FreqSketch, IncrementalBoilerplate, IncrementalDedup, IncrementalProfile}
+import graft.operators.{BloomSet, FreqSketch, IncrementalBoilerplate, IncrementalDedup, IncrementalProfile, Materialize}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, explode, split, trim}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The COMPOSED ingestion sink a production training-data corpus runs —
   * the end-to-end shape every piece of this library exists for, wired
@@ -75,14 +76,16 @@ object IngestPipeline {
       tokenFreq: Boolean = false): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val curated = curate(batch).localCheckpoint(false)
+      val curated = Materialize.shared(curate(batch))
       // size this batch's shuffles to its VOLUME, not the session
       // default: MicroBatchTuning's rule at its stateless sizing (256
       // rows per partition — no state store is committed here, so only
       // task launch is fixed per partition). Safe per-batch: foreachBatch
       // is stateless, so no checkpoint pins the partition count. The
-      // count is a cheap post-checkpoint scan.
-      MicroBatchTuning.withBatchVolume(spark, curated.count()) {
+      // count is a cheap post-checkpoint scan. The materialization is
+      // released once every step has read it: the sink lives as long as
+      // the stream, so its batches must not pile up in the block manager.
+      try MicroBatchTuning.withBatchVolume(spark, curated.count()) {
         curated.write.mode(SaveMode.Overwrite)
           .parquet(s"$baseDir/docs/batch=$batchId")
         IncrementalDedup.ingestBatch(curated, s"$baseDir/sigs", batchId)
@@ -110,7 +113,7 @@ object IngestPipeline {
             curated.select(explode(split(trim(col("text")), "\\s+"))
               .as("tok")).filter(col("tok") =!= ""),
             Seq.empty, "tok")
-      }
+      } finally Bridge.unpersistCheckpoint(curated)
     }
   }
 
@@ -180,7 +183,7 @@ object IngestPipeline {
       .select(col("doc_id"), col("text_clean").as("text"))
     val unitDeduped = graft.operators.Dedup.dedupUnitsWithinDocs(cleaned)
       .select(col("doc_id"), col("text_clean").as("text"))
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
     val clusters = graft.operators.Dedup.nearDupClusters(
       minedPairs(spark, baseDir).select("id_a", "id_b"))
     graft.operators.CurationPipeline.splitAndPack(unitDeduped, clusters,

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import graft.operators.{Profile, Relevance}
+import graft.operators.{Materialize, Profile, Relevance}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Label-mix monitoring AT INGEST — the streaming face of the trained
   * multi-class classifier ([[graft.operators.Relevance.unigramModels]]
@@ -53,23 +54,25 @@ object StreamingClassify {
       val models = spark.read.parquet(modelsDir)
       val dist = Relevance.classifyWithModels(batch, models, idCol, textCol)
         .groupBy(col("predicted").as("bin")).agg(count(lit(1)).as("n"))
-        .localCheckpoint(false) // written AND psi-scored
-      dist.coalesce(1).write.mode("overwrite")
-        .parquet(s"$distDir/batch=$batchId")
-      // an empty batch (restart replays, all-blank texts — classify
-      // excludes them) has no distribution to score; psiFromCounts
-      // would `require`-throw and kill the stream, the opposite of a
-      // monitor's availability contract. Land a sentinel (n_bins=0,
-      // psi null) so every batch still has a psi artifact and
-      // re-delivery stays an equal-bytes overwrite.
-      val psi =
-        if (dist.isEmpty)
-          spark.range(1).select(lit("label_mix").as("col_name"),
-            lit(0L).as("n_bins"), lit(null).cast("double").as("psi"))
-        else Profile.psiFromCounts(spark.read.parquet(refDir), dist,
-          "label_mix", eps)
-      psi.coalesce(1).write.mode("overwrite")
-        .parquet(s"$psiDir/batch=$batchId")
+        .transform(Materialize.shared) // written AND psi-scored
+      try {
+        dist.coalesce(1).write.mode("overwrite")
+          .parquet(s"$distDir/batch=$batchId")
+        // an empty batch (restart replays, all-blank texts — classify
+        // excludes them) has no distribution to score; psiFromCounts
+        // would `require`-throw and kill the stream, the opposite of a
+        // monitor's availability contract. Land a sentinel (n_bins=0,
+        // psi null) so every batch still has a psi artifact and
+        // re-delivery stays an equal-bytes overwrite.
+        val psi =
+          if (dist.isEmpty)
+            spark.range(1).select(lit("label_mix").as("col_name"),
+              lit(0L).as("n_bins"), lit(null).cast("double").as("psi"))
+          else Profile.psiFromCounts(spark.read.parquet(refDir), dist,
+            "label_mix", eps)
+        psi.coalesce(1).write.mode("overwrite")
+          .parquet(s"$psiDir/batch=$batchId")
+      } finally Bridge.unpersistCheckpoint(dist) // the stream outlives it
     }
   }
 }

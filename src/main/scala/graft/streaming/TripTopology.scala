@@ -2,10 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.operators.KeyedUpsertSink
+import graft.operators.{KeyedUpsertSink, Materialize}
 import graft.sources.TripStreams
 
 /** The reference's LITERAL two-hop architecture, composed from the
@@ -91,17 +92,20 @@ object TripTopology {
       changesDir: String, id: Long, numBuckets: Int,
       afterUpsert: Long => Unit = _ => ()): Unit = {
     // materialize once: the upsert and the change-log write must see
-    // the same bytes (and not re-parse the wire JSON twice)
-    val items = batch.localCheckpoint()
-    KeyedUpsertSink.upsertBatch(items, storeDir, TripStore.Keys,
-      TripStore.OrderCol, id, versionWins = true, numBuckets = numBuckets,
-      writerId = "ing")
-    afterUpsert(id)
-    val tLog0 = System.nanoTime()
-    items.write.mode(SaveMode.Overwrite)
-      .parquet(s"$changesDir/batch=$id")
-    KeyedUpsertSink.recordPhase("changelog", "ing",
-      (System.nanoTime() - tLog0) / 1000000L)
+    // the same bytes (and not re-parse the wire JSON twice); released
+    // once both are written, so a long-running hop holds no old batches
+    val items = Materialize.now(batch)
+    try {
+      KeyedUpsertSink.upsertBatch(items, storeDir, TripStore.Keys,
+        TripStore.OrderCol, id, versionWins = true, numBuckets = numBuckets,
+        writerId = "ing")
+      afterUpsert(id)
+      val tLog0 = System.nanoTime()
+      items.write.mode(SaveMode.Overwrite)
+        .parquet(s"$changesDir/batch=$id")
+      KeyedUpsertSink.recordPhase("changelog", "ing",
+        (System.nanoTime() - tLog0) / 1000000L)
+    } finally Bridge.unpersistCheckpoint(items)
   }
 
   /** Hop 1 — the Lambda1 analogue: raw wire JSON in, every validated

@@ -231,18 +231,13 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("nearDupClusters uses reliable checkpoints when a checkpoint dir is set") {
-    // NOTE: a SparkContext's checkpoint dir cannot be unset; the shared
-    // test session keeps it for the rest of the JVM, which only makes
-    // later fixpoints use the reliable (slower, fault-tolerant) path.
-    // This test therefore runs AFTER the job-budget test above, which
-    // assumes the local-checkpoint job shape.
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    val out = Dedup.nearDupClusters(Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
-    val sub = new java.io.File(dir).listFiles()
-    assert(sub != null && sub.nonEmpty, "no reliable checkpoint data written")
+    withCheckpointDir { dir =>
+      val out = Dedup.nearDupClusters(Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(out === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+      val sub = new java.io.File(dir).listFiles()
+      assert(sub != null && sub.nonEmpty, "no reliable checkpoint data written")
+    }
   }
 
   test("contaminationPairs flags a quoted benchmark prompt against its source only") {
@@ -309,27 +304,26 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       s"min-label unexpectedly converged in $mlRounds rounds on a ${n}-path")
   }
 
-  test("sharedRelation materializes reliably when a checkpoint dir is set") {
-    // Runs after the test above, so the shared context HAS a checkpoint
-    // dir: the shingles/LSH/simhash shared relations must route their
-    // materialization through reliable checkpoint files (fault-tolerant
-    // on a cluster), not executor-local blocks.
-    assert(spark.sparkContext.getCheckpointDir.isDefined,
-      "suite ordering broke: expected the checkpoint dir set by the CC test")
-    val docs = Seq((1L, "a b c d e"), (2L, "a b c d e"), (3L, "x y z w v"))
-      .toDF("doc_id", "text")
-    val sh = Dedup.shingles(docs, materialize = true)
-    sh.count() // lazy checkpoint materializes on first action
-    def reliablyCheckpointed(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
-      (rdd.isCheckpointed && rdd.getCheckpointFile.isDefined) ||
-        rdd.dependencies.exists(d => reliablyCheckpointed(d.rdd))
-    assert(reliablyCheckpointed(sh.queryExecution.toRdd),
-      "no reliable checkpoint file in the materialized shingle relation's lineage")
-    // and the lazy construction ran no job at plan time: a fresh frame
-    // before any action has no checkpoint yet
-    val fresh = Dedup.shingles(docs, materialize = true)
-    assert(!reliablyCheckpointed(fresh.queryExecution.toRdd),
-      "materialization must stay lazy (no job at plan construction)")
+  test("shared relations materialize reliably when a checkpoint dir is set") {
+    // with a checkpoint dir the shingles/LSH/simhash shared relations
+    // must route their materialization through reliable checkpoint
+    // files (fault-tolerant on a cluster), not executor-local blocks
+    withCheckpointDir { _ =>
+      val docs = Seq((1L, "a b c d e"), (2L, "a b c d e"), (3L, "x y z w v"))
+        .toDF("doc_id", "text")
+      val sh = Dedup.shingles(docs, materialize = true)
+      sh.count() // lazy checkpoint materializes on first action
+      def reliablyCheckpointed(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
+        (rdd.isCheckpointed && rdd.getCheckpointFile.isDefined) ||
+          rdd.dependencies.exists(d => reliablyCheckpointed(d.rdd))
+      assert(reliablyCheckpointed(sh.queryExecution.toRdd),
+        "no reliable checkpoint file in the materialized shingle relation's lineage")
+      // and the lazy construction ran no job at plan time: a fresh frame
+      // before any action has no checkpoint yet
+      val fresh = Dedup.shingles(docs, materialize = true)
+      assert(!reliablyCheckpointed(fresh.queryExecution.toRdd),
+        "materialization must stay lazy (no job at plan construction)")
+    }
   }
 
   test("dropNearDups keeps one representative per cluster and no surviving pair") {

@@ -18,6 +18,11 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
     .appName("graft-test")
     .getOrCreate()
 
+  /** A checkpoint dir scoped to `body` (see CheckpointDirs). */
+  def withCheckpointDir[T](body: String => T): T =
+    org.apache.spark.graftbridge.CheckpointDirs.withCheckpointDir(
+      spark.sparkContext)(body)
+
   override def beforeAll(): Unit = {
     super.beforeAll()
     Tables.configure(spark)

@@ -36,6 +36,8 @@ import graft.streaming.{StreamingTripPipeline, TripStore, TripTopology}
   * (re-deliveries, ends before starts, invalid events, never-completed
   * trips) and expects exactly the trips with a valid start and end, so
   * the concurrent two-hop path is covered without the reference data.
+  * A fifth drives the ingest hop's batch body 20 times and checks that
+  * it leaves no materialization behind in the block manager.
   */
 class TopologySpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -215,6 +217,23 @@ class TopologySpec extends AnyFunSuite with SparkTestBase {
       .filter(col("sk").startsWith("COMPLETED#"))
       .select("trip_id").as[String].collect().toSet
     assert(completedIds === expected)
+  }
+
+  test("the ingest hop releases each batch's materialization") {
+    val base = Files.createTempDirectory("graft-topology-release").toString
+    def batch(i: Int): DataFrame = TripStore.rawItems(
+      StreamingTripPipeline.parseAndValidate(Seq(
+        s"""{"trip_id":"r$i","data_type":"trip_start","pickup_datetime":"2024-05-20 06:00:00","estimated_fare_amount":10.0,"pickup_location_id":1,"dropoff_location_id":2,"vendor_id":3}""",
+        s"""{"trip_id":"r$i","data_type":"trip_end","dropoff_datetime":"2024-05-20 06:20:00","fare_amount":25.5,"passenger_count":1.0,"trip_distance":2.2}""")
+        .toDF("value")))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    (0 until 20).foreach { i =>
+      TripTopology.ingestBatch(batch(i), s"$base/store", s"$base/changes",
+        i.toLong, numBuckets = 4)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- before === Set.empty,
+      "20 ingest batches left materializations in the block manager")
+    assert(spark.read.parquet(s"$base/changes").count() === 40L)
   }
 
   test("RocksDB provider + crash between store upsert and change-log write recovers to golden") {
