@@ -55,7 +55,7 @@ object SparkEntry {
 
   private def eventKeys(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir).select(col("event_id"),
-      concat_ws("#", lit("RAW"), col("event_type"),
+      RawEventStore.rawSortKey(col("event_type"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss")).as("sk"))
 
   /** The salted-skew-join contract query: a fifth of all events remapped
@@ -1355,17 +1355,18 @@ object SparkEntry {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
-    // A1+P10: the five daily KPIs as ONE fused hash aggregate
-    // (glue_scripts.py:139-161 rewritten per SURVEY.md par.4 rewrite 1).
+    // P9+A1+P10: the five daily KPIs as ONE fused hash aggregate
+    // (glue_scripts.py:139-161 rewritten per SURVEY.md par.4 rewrite 1)
+    // over the coerced measure, truncated afterwards.
     "trip_kpis_daily" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .filter(col("value").isNotNull && !isnan(col("value")))
-        .groupBy(to_date(col("ts")).as("pickup_date"))
-        .agg(trunc(sum(col("value")), 4).as("total_fare"),
-          count(col("event_id")).as("trip_count"),
-          trunc(avg(col("value")), 4).as("average_fare"),
-          max(col("value")).as("maximum_fare"),
-          min(col("value")).as("minimum_fare"))
+      KpiAggregator.dailyKpis(
+          KpiAggregator.withParsedFare(Tables.events(s, dir), "value"),
+          to_date(col("ts")), col("value"), col("event_id"))
+        .select(col("pickup_date"),
+          trunc(col("total_fare"), 4).as("total_fare"),
+          col("trip_count"),
+          trunc(col("average_fare"), 4).as("average_fare"),
+          col("maximum_fare"), col("minimum_fare"))
     }),
 
     // J4: the reference's literal 5-aggregate + 4-left-join KPI assembly
@@ -1567,23 +1568,21 @@ object SparkEntry {
     // P8: timestamp parse with coercion; invalid -> null -> dropped
     // (glue_scripts.py:113-119). Malformed strings injected.
     "ts_parse_coerce" -> ((s, dir) => {
-      Tables.events(s, dir).select(col("event_id"),
-          when(col("event_id") % 10 === 0, lit("not-a-date"))
-            .otherwise(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss")).as("ts_str"))
-        .withColumn("parsed_ts",
-          try_to_timestamp(col("ts_str"), lit("yyyy-MM-dd HH:mm:ss")))
-        .filter(col("parsed_ts").isNotNull)
+      KpiAggregator.withParsedPickupTs(
+          Tables.events(s, dir).select(col("event_id"),
+            when(col("event_id") % 10 === 0, lit("not-a-date"))
+              .otherwise(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss")).as("ts_str")),
+          "ts_str", "parsed_ts")
         .select("event_id", "parsed_ts")
     }),
 
     // P9: numeric parse with coercion + null-drop (glue_scripts.py:121-126).
     "numeric_parse_coerce" -> ((s, dir) => {
-      Tables.events(s, dir).select(col("event_id"),
-          when(col("event_id") % 13 === 0, lit("abc"))
-            .otherwise(col("value").cast("string")).as("fare_str"))
-        .withColumn("fare", expr("try_cast(fare_str AS DOUBLE)"))
-        .filter(col("fare").isNotNull && !isnan(col("fare")))
-        .select("event_id", "fare")
+      KpiAggregator.withParsedFare(
+          Tables.events(s, dir).select(col("event_id"),
+            when(col("event_id") % 13 === 0, lit("abc"))
+              .otherwise(col("value").cast("string")).as("fare")),
+          "fare")
     }),
 
     // P10: timestamp -> date projection (glue_scripts.py:136).

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sources.TripSources
+
 /** Daily-KPI aggregation stage (reference Glue job).
   *
   * Covers SURVEY.md par.2.5 + the coercion filters P8-P10:
@@ -26,12 +28,12 @@ import org.apache.spark.sql.functions._
   */
 object KpiAggregator {
 
-  /** P8: parse with coercion (invalid -> null, = pandas errors='coerce';
-    * `try_to_timestamp` keeps this semantics under ANSI mode) then drop.
+  /** P8: parse with coercion ([[TripSources.parseTimestamp]], the
+    * streaming pipeline's own parse) then drop.
     */
   def withParsedPickupTs(df: DataFrame, src: String = "pickup_datetime",
       dst: String = "pickup_ts"): DataFrame =
-    df.withColumn(dst, try_to_timestamp(col(src)))
+    df.withColumn(dst, TripSources.parseTimestamp(col(src)))
       .filter(col(dst).isNotNull)
 
   /** P9: numeric coercion + null-drop on the measure. */

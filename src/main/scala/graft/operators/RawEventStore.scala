@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,12 +23,19 @@ import org.apache.spark.sql.functions._
   */
 object RawEventStore {
 
-  /** P5: SK = RAW#{data_type}#{event timestamp-string}. */
+  /** P5: the one RAW item sort-key format, SK =
+    * RAW#{data_type}#{event timestamp-string} (lambda1.py:56) — shared by
+    * the contract queries, the trip store's RAW and processed items, and
+    * [[rawOnly]]'s prefix.
+    */
+  def rawSortKey(dataType: Column, ts: Column): Column =
+    concat_ws("#", lit("RAW"), dataType, ts)
+
+  /** P5 over trip events: the family's own timestamp string. */
   def withSortKey(events: DataFrame): DataFrame =
-    events.withColumn("sk",
-      concat_ws("#", lit("RAW"), col("data_type"),
-        coalesce(col("pickup_datetime").cast("string"),
-          col("dropoff_datetime").cast("string"))))
+    events.withColumn("sk", rawSortKey(col("data_type"),
+      coalesce(col("pickup_datetime").cast("string"),
+        col("dropoff_datetime").cast("string"))))
 
   /** P11 + P12: processing metadata. Non-deterministic columns — excluded
     * from verified outputs (SURVEY.md par.7.3).

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Readers / parsers for the trip pipeline inputs.
@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
   *  - P1 projection+cast (scripts/to_kinesis.py:48-57,72-83)
   *  - P2 required-field validation (scripts/lambda1.py:38-47)
   *  - P3 NaN/Infinity sanitization (scripts/lambda1.py:72-82)
+  *  - P8 timestamp parse with coercion (scripts/glue_scripts.py:113-119)
   *  - O1/O2 event-time sort + union interleave (scripts/to_kinesis.py:21,34,117-123)
   *
   * Scale note: CSV/JSON scans are directory-globbed, schema-pinned (no
@@ -78,6 +79,12 @@ object TripSources {
         when(col("data_type") === "trip_start", col("pickup_datetime").isNotNull)
           .when(col("data_type") === "trip_end", col("dropoff_datetime").isNotNull)
           .otherwise(lit(false)))
+
+  /** P8: the one event-timestamp parse. Coercing (invalid -> null, =
+    * pandas errors='coerce'), so under ANSI mode a malformed timestamp
+    * becomes a droppable null instead of a CAST_INVALID_INPUT failure.
+    */
+  def parseTimestamp(c: Column): Column = try_to_timestamp(c)
 
   /** P3: NaN/Infinity sanitization (scripts/lambda1.py:72-82) — per numeric
     * attribute, a non-finite value nulls the ATTRIBUTE but keeps the row.

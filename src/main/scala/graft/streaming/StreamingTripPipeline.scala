@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.KpiAggregator
 import graft.sources.TripSources
 
 /** The reference's hot path (SURVEY.md par.3.1) as ONE Structured
@@ -22,7 +23,7 @@ import graft.sources.TripSources
   *
   * State & scale (SURVEY.md par.2.7): the reference parks unmatched events
   * in DynamoDB forever; Spark bounds join state with watermarks. The
-  * tolerance is config — at 24h it covers any plausible trip while
+  * tolerance is a constant — at 24h it covers any plausible trip while
   * keeping state O(events/day). Join state is hash-partitioned by
   * trip_id across executors; dedup state likewise. At 100 TB/day both
   * scale horizontally — no single-node state bottleneck, unlike the
@@ -30,58 +31,59 @@ import graft.sources.TripSources
   */
 object StreamingTripPipeline {
 
-  /** Watermark/State tuning knobs; defaults mirror the reference's
-    * "wait all day" behavior while keeping state bounded.
+  /** Event-time tolerance of both dedup branches: the reference's "wait
+    * all day" behavior while keeping state bounded.
     */
-  final case class Config(
-      watermarkTolerance: String = "24 hours",
-      maxTripDuration: String = "24 hours")
+  val WatermarkTolerance = "24 hours"
 
-  /** S3+P2: parse the raw JSON event stream (Kafka-shaped `value` column)
-    * and drop invalid events. Adds the per-family event timestamp.
+  /** Longest trip the matcher's interval bound admits. */
+  val MaxTripDuration = "24 hours"
+
+  /** S3+P2+P8: parse the raw JSON event stream (Kafka-shaped `value`
+    * column), drop invalid events, and add the per-family event
+    * timestamps. An event whose family timestamp is present but does not
+    * parse is invalid too: it is dropped here rather than failing the
+    * query.
     */
   def parseAndValidate(raw: DataFrame): DataFrame =
     TripSources.validated(TripSources.parseEvents(raw))
-      .withColumn("pickup_ts", to_timestamp(col("pickup_datetime")))
-      .withColumn("dropoff_ts", to_timestamp(col("dropoff_datetime")))
+      .withColumn("pickup_ts", TripSources.parseTimestamp(col("pickup_datetime")))
+      .withColumn("dropoff_ts", TripSources.parseTimestamp(col("dropoff_datetime")))
+      .filter(when(col("data_type") === "trip_start", col("pickup_ts"))
+        .otherwise(col("dropoff_ts")).isNotNull)
       .withColumn("event_ts", coalesce(col("pickup_ts"), col("dropoff_ts")))
 
   /** Start-family branch: watermark (defined ONCE per branch — Spark
     * forbids redefinition downstream), then D1 first-wins dedup with
     * watermark-bounded state (strictly stronger than the reference's
-    * per-invocation dict, SURVEY.md par.2.3 note).
+    * per-invocation dict, SURVEY.md par.2.3 note). Carries exactly the
+    * trip store's start attrs.
     */
-  def dedupedStarts(validated: DataFrame, cfg: Config = Config()): DataFrame =
+  def dedupedStarts(validated: DataFrame): DataFrame =
     validated.filter(col("data_type") === "trip_start")
-      .select(col("trip_id"), col("pickup_datetime"), col("pickup_ts"),
-        col("pickup_location_id"), col("dropoff_location_id"), col("vendor_id"),
-        col("estimated_dropoff_datetime"), col("estimated_fare_amount"))
-      .withWatermark("pickup_ts", cfg.watermarkTolerance)
+      .select((col("trip_id") +: TripStore.StartAttrs.map(col)): _*)
+      .withWatermark("pickup_ts", WatermarkTolerance)
       .dropDuplicatesWithinWatermark("trip_id")
 
   /** End-family branch, same structure. */
-  def dedupedEnds(validated: DataFrame, cfg: Config = Config()): DataFrame =
+  def dedupedEnds(validated: DataFrame): DataFrame =
     validated.filter(col("data_type") === "trip_end")
-      .select(col("trip_id").as("end_trip_id"), col("dropoff_datetime"),
-        col("dropoff_ts"), col("rate_code"), col("payment_type"),
-        col("fare_amount"), col("trip_distance"), col("tip_amount"),
-        col("trip_type"), col("passenger_count"))
-      .withWatermark("dropoff_ts", cfg.watermarkTolerance)
+      .select((col("trip_id").as("end_trip_id") +: TripStore.EndAttrs.map(col)): _*)
+      .withWatermark("dropoff_ts", WatermarkTolerance)
       .dropDuplicatesWithinWatermark("end_trip_id")
 
   /** J1: the matcher. Equi-join on trip_id plus an event-time interval
-    * bound (dropoff within [pickup, pickup+maxTripDuration]) — the bound
+    * bound (dropoff within [pickup, pickup+MaxTripDuration]) — the bound
     * is what lets Spark expire join state; the reference instead keeps
     * state forever and matches in either arrival order
     * (scripts/lambda2.py:237-242), which the symmetric hash join also
     * handles natively.
     */
-  def matchTrips(starts: DataFrame, ends: DataFrame,
-      cfg: Config = Config()): DataFrame =
+  def matchTrips(starts: DataFrame, ends: DataFrame): DataFrame =
     starts.join(ends,
       col("trip_id") === col("end_trip_id") &&
         col("dropoff_ts") >= col("pickup_ts") &&
-        col("dropoff_ts") <= col("pickup_ts") + expr(s"interval ${cfg.maxTripDuration}"),
+        col("dropoff_ts") <= col("pickup_ts") + expr(s"interval $MaxTripDuration"),
       "inner")
 
   /** J2: merge projection to the completed-trip shape
@@ -94,32 +96,26 @@ object StreamingTripPipeline {
       .withColumn("status", lit("completed"))
 
   /** Validated events in, completed trips out: dedup each family, match,
-    * project. The one composition shared by [[pipeline]], the topology's
-    * matcher hop and the trip store's item stream.
+    * project. The one composition shared by [[pipeline]] and the
+    * topology's matcher hop.
     */
-  def completed(validated: DataFrame, cfg: Config = Config()): DataFrame =
-    completedTrips(matchTrips(
-      dedupedStarts(validated, cfg), dedupedEnds(validated, cfg), cfg))
+  def completed(validated: DataFrame): DataFrame =
+    completedTrips(matchTrips(dedupedStarts(validated), dedupedEnds(validated)))
 
   /** The full pipeline: raw value stream in, completed trips out. */
-  def pipeline(raw: DataFrame, cfg: Config = Config()): DataFrame =
-    completed(parseAndValidate(raw), cfg)
+  def pipeline(raw: DataFrame): DataFrame =
+    completed(parseAndValidate(raw))
 
-  /** A1 streaming flavor: the five daily KPIs over a 1-day event-time
-    * tumbling window on completed trips (append mode once the watermark
-    * passes the day). The input must already carry a watermark on
-    * pickup_ts — [[pipeline]] output does (from [[dedupedStarts]]); Spark
-    * forbids redefining it here.
+  /** A1 streaming flavor: [[KpiAggregator.dailyKpis]] over a 1-day
+    * event-time tumbling window on completed trips (append mode once the
+    * watermark passes the day). The input must already carry a watermark
+    * on pickup_ts — [[pipeline]] output does (from [[dedupedStarts]]);
+    * Spark forbids redefining it here.
     */
-  def dailyKpiStream(completed: DataFrame, cfg: Config = Config()): DataFrame =
-    completed
-      .groupBy(window(col("pickup_ts"), "1 day").as("day"))
-      .agg(sum(col("fare_amount")).as("total_fare"),
-        count(col("trip_id")).as("trip_count"),
-        avg(col("fare_amount")).as("average_fare"),
-        max(col("fare_amount")).as("maximum_fare"),
-        min(col("fare_amount")).as("minimum_fare"))
-      .select(col("day.start").cast("date").as("pickup_date"),
-        col("total_fare"), col("trip_count"), col("average_fare"),
-        col("maximum_fare"), col("minimum_fare"))
+  def dailyKpiStream(completed: DataFrame): DataFrame = {
+    val kpis = KpiAggregator.dailyKpis(completed,
+      window(col("pickup_ts"), "1 day"), col("fare_amount"), col("trip_id"))
+    kpis.select(col("pickup_date.start").cast("date").as("pickup_date") +:
+      kpis.columns.tail.map(col): _*)
+  }
 }

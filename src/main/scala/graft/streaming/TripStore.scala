@@ -1,11 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.operators.KeyedUpsertSink
+import graft.operators.RawEventStore
 
 /** The reference's single DynamoDB trip table materialized on the
   * bucketed upsert store: RAW items written at ingest
@@ -16,22 +14,21 @@ import graft.operators.KeyedUpsertSink
   * matcher's status lifecycle flipping both matched RAW items to
   * `processed_by_matcher` (scripts/lambda2.py:112-142,249-251).
   *
-  * All three item families are projected from ONE streaming query (the
-  * raw validated events plus the stream-stream matcher re-reading the
-  * same source) into a single union and upserted into a
-  * [[KeyedUpsertSink]] store with `versionWins` on `status_rank` — the
-  * monotonic-status twin of the reference's UpdateExpression: a
-  * replayed or late `raw` write (rank 0) can never regress a
-  * `processed_by_matcher` row (rank 1) regardless of delivery order,
-  * and the single-query union keeps the store single-writer (one
-  * foreachBatch) with no cross-query coordination. `processed_at` is
-  * the match's event time (the dropoff timestamp) rather than the
-  * reference's wall-clock `utcnow()` (lambda2.py:135) — deterministic
-  * under replay, which a wall clock is not.
+  * The item families are projected here once and written by the
+  * two-hop [[TripTopology]] (RAW items by its ingest hop, COMPLETED and
+  * processed items by its matcher hop) and by the batch contract
+  * queries `trip_store_final`/`trip_store_lookup`. The store upserts
+  * them with `versionWins` on `status_rank` — the monotonic-status twin
+  * of the reference's UpdateExpression: a replayed or late `raw` write
+  * (rank 0) can never regress a `processed_by_matcher` row (rank 1)
+  * regardless of delivery order. `processed_at` is the match's event
+  * time (the dropoff timestamp) rather than the reference's wall-clock
+  * `utcnow()` (lambda2.py:135) — deterministic under replay, which a
+  * wall clock is not.
   *
   * 100 TB posture: per micro-batch the store pays O(touched buckets)
-  * (see [[KeyedUpsertSink]]); the item projections are stateless maps
-  * over branches whose state (dedup + join) is already
+  * (see [[graft.operators.KeyedUpsertSink]]); the item projections are
+  * stateless maps over branches whose state (dedup + join) is already
   * watermark-bounded, so the store adds no unbounded state of its own.
   */
 object TripStore {
@@ -46,7 +43,9 @@ object TripStore {
   val OrderCol = "status_rank"
 
   /** Attrs carried by a trip_start item (wire names,
-    * sources/TripSchemas.scala).
+    * sources/TripSchemas.scala); [[StreamingTripPipeline.dedupedStarts]]
+    * keeps exactly these after trip_id, so the match carries every attr
+    * of both items.
     */
   val StartAttrs: Seq[String] = Seq("pickup_datetime", "pickup_ts",
     "pickup_location_id", "dropoff_location_id", "vendor_id",
@@ -66,7 +65,7 @@ object TripStore {
       endAttrs: Seq[String] = EndAttrs): DataFrame =
     events.select(
       col("trip_id") +:
-        concat_ws("#", lit("RAW"), col("data_type"),
+        RawEventStore.rawSortKey(col("data_type"),
           coalesce(col("pickup_datetime"), col("dropoff_datetime"))).as("sk") +:
         col("data_type") +:
         lit("raw").as("status") +:
@@ -104,12 +103,12 @@ object TripStore {
       "completed_trip", "completed", lit(null).cast("string"),
       (startAttrs ++ endAttrs).map(col))
     val processedStart = item(
-      concat_ws("#", lit("RAW"), lit("trip_start"), col("pickup_datetime")),
+      RawEventStore.rawSortKey(lit("trip_start"), col("pickup_datetime")),
       "trip_start", "processed_by_matcher",
       col("dropoff_datetime").cast("string"),
       startAttrs.map(col) ++ nulled(endAttrs))
     val processedEnd = item(
-      concat_ws("#", lit("RAW"), lit("trip_end"), col("dropoff_datetime")),
+      RawEventStore.rawSortKey(lit("trip_end"), col("dropoff_datetime")),
       "trip_end", "processed_by_matcher",
       col("dropoff_datetime").cast("string"),
       nulled(startAttrs) ++ endAttrs.map(col))
@@ -142,26 +141,4 @@ object TripStore {
         .as("_w"))
       .select(cols.map(c => col(s"_w.$c").as(c)): _*)
   }
-
-  /** The full item stream for a raw wire-JSON source: RAW items for
-    * every validated event plus COMPLETED + processed items for every
-    * match, as one streaming DataFrame.
-    */
-  def itemStream(raw: DataFrame,
-      cfg: StreamingTripPipeline.Config = StreamingTripPipeline.Config()): DataFrame = {
-    val validated = StreamingTripPipeline.parseAndValidate(raw)
-    rawItems(validated).unionByName(
-      matcherItems(StreamingTripPipeline.completed(validated, cfg)))
-  }
-
-  /** The store-writer query: call `.start()` (after setting any options)
-    * to run the reference's whole table lifecycle end-to-end.
-    */
-  def storeWriter(raw: DataFrame, storeDir: String, checkpointDir: String,
-      cfg: StreamingTripPipeline.Config = StreamingTripPipeline.Config(),
-      numBuckets: Int = KeyedUpsertSink.DefaultNumBuckets): DataStreamWriter[org.apache.spark.sql.Row] =
-    itemStream(raw, cfg).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(KeyedUpsertSink.upserter(storeDir, Keys, OrderCol,
-        versionWins = true, numBuckets = numBuckets))
 }

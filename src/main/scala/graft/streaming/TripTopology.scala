@@ -6,7 +6,7 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.operators.{KeyedUpsertSink, Materialize}
+import graft.operators.{KeyedUpsertSink, Materialize, RawEventStore}
 import graft.sources.TripStreams
 
 /** The reference's LITERAL two-hop architecture, composed from the
@@ -25,14 +25,11 @@ import graft.sources.TripStreams
   *   → [[matcherWriter]] (INSERT/RAW# filter → dedup → stream-stream
   *     match → COMPLETED + processed items → the SAME table).
   *
-  * This differs from the fused single-query [[TripStore.storeWriter]]
-  * (the by-design substitution, SURVEY par.2.1) in exactly the way the
-  * reference differs from a monolith: the matcher consumes WHAT WAS
-  * WRITTEN, not what the ingest hop happened to see — the two hops are
-  * separate queries with separate checkpoints, restartable
-  * independently, coupled only through the landed table's change feed.
-  * TopologySpec proves both roads end at the reference's golden final
-  * table state.
+  * The matcher consumes WHAT WAS WRITTEN, not what the ingest hop
+  * happened to see — the two hops are separate queries with separate
+  * checkpoints, restartable independently, coupled only through the
+  * landed table's change feed. TopologySpec proves it ends at the
+  * reference's golden final table state.
   *
   * The change log is the DynamoDB-Streams analogue: the table write and
   * its INSERT event are the same put (reference lambda2.py:183-201
@@ -89,7 +86,7 @@ object TripTopology {
     * versionWins, and the change log finally lands).
     */
   private[graft] def ingestBatch(batch: DataFrame, storeDir: String,
-      changesDir: String, id: Long, numBuckets: Int,
+      changesDir: String, id: Long,
       afterUpsert: Long => Unit = _ => ()): Unit = {
     // materialize once: the upsert and the change-log write must see
     // the same bytes (and not re-parse the wire JSON twice); released
@@ -97,8 +94,7 @@ object TripTopology {
     val items = Materialize.now(batch)
     try {
       KeyedUpsertSink.upsertBatch(items, storeDir, TripStore.Keys,
-        TripStore.OrderCol, id, versionWins = true, numBuckets = numBuckets,
-        writerId = "ing")
+        TripStore.OrderCol, id, versionWins = true, writerId = "ing")
       afterUpsert(id)
       val tLog0 = System.nanoTime()
       items.write.mode(SaveMode.Overwrite)
@@ -113,13 +109,12 @@ object TripTopology {
     * event in the change log, one foreachBatch per micro-batch.
     */
   def ingestWriter(raw: DataFrame, storeDir: String, changesDir: String,
-      checkpointDir: String,
-      numBuckets: Int = KeyedUpsertSink.DefaultNumBuckets): DataStreamWriter[Row] =
+      checkpointDir: String): DataStreamWriter[Row] =
     TripStore.rawItems(StreamingTripPipeline.parseAndValidate(raw))
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        ingestBatch(batch, storeDir, changesDir, id, numBuckets)
+        ingestBatch(batch, storeDir, changesDir, id)
       }
 
   /** Hop 2 — the Lambda2 analogue: the change feed of the landed RAW
@@ -134,9 +129,7 @@ object TripTopology {
     */
   def matcherWriter(spark: SparkSession, changesDir: String,
       storeDir: String, checkpointDir: String,
-      cfg: StreamingTripPipeline.Config = StreamingTripPipeline.Config(),
-      maxFilesPerTrigger: Int = 10,
-      numBuckets: Int = KeyedUpsertSink.DefaultNumBuckets): DataStreamWriter[Row] = {
+      maxFilesPerTrigger: Int = 10): DataStreamWriter[Row] = {
     // hop 2 may be deployed BEFORE hop 1 lands its first batch (the
     // concurrent schedule): the file source rejects a non-existent
     // path at start, so materialize the log directory up front
@@ -148,13 +141,11 @@ object TripTopology {
     val feed = TripStreams.tableChangeFeed(spark, changesDir,
       rawItemSchema(spark), maxFilesPerTrigger,
       Map("recursiveFileLookup" -> "true"))
-    val inserts = feed.filter(col("status") === "raw" &&
-      col("sk").startsWith("RAW#"))
-    TripStore.matcherItems(StreamingTripPipeline.completed(inserts, cfg))
+    val inserts = RawEventStore.rawOnly(feed.filter(col("status") === "raw"))
+    TripStore.matcherItems(StreamingTripPipeline.completed(inserts))
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(KeyedUpsertSink.upserter(storeDir, TripStore.Keys,
-        TripStore.OrderCol, versionWins = true, numBuckets = numBuckets,
-        writerId = "mat"))
+        TripStore.OrderCol, versionWins = true, writerId = "mat"))
   }
 }

@@ -81,6 +81,8 @@ class StreamingTripPipelineSpec extends AnyFunSuite with SparkTestBase {
     val out = runPipeline(Seq(Seq(
       "not json",
       """{"trip_id":null,"data_type":"trip_start","pickup_datetime":"2024-05-25 10:00:00"}""",
+      // present but malformed: dropped at validation, not a cast failure
+      startJson("t6x", "2024-13-45 99:00:00"),
       startJson("t6", "2024-05-25 10:00:00"),
       endJson("t6", "2024-05-25 10:20:00"))))
     assert(out.count() === 1)

@@ -14,7 +14,7 @@ import graft.streaming.{StreamingTripPipeline, TripStore, TripTopology}
   * 1): golden feed → ingest hop (RAW items → keyed table + insert log)
   * → change feed → matcher hop (match-on-insert → COMPLETED +
   * processed flips into the SAME table). The final table state must be
-  * TripStoreSpec's golden — 4,468 COMPLETED items and exactly the
+  * the reference's golden — 4,468 COMPLETED items and exactly the
   * matched RAW pairs flipped to processed_by_matcher — under three
   * adverse schedules:
   *
@@ -33,9 +33,10 @@ import graft.streaming.{StreamingTripPipeline, TripStore, TripTopology}
   *     change log finally lands.
   *
   * A fourth test runs schedule 2 over a small generated feed
-  * (re-deliveries, ends before starts, invalid events, never-completed
-  * trips) and expects exactly the trips with a valid start and end, so
-  * the concurrent two-hop path is covered without the reference data.
+  * (re-deliveries, ends before starts, invalid events including a
+  * malformed timestamp, never-completed trips) and expects exactly the
+  * trips with a valid start and end, so the concurrent two-hop path is
+  * covered without the reference data.
   * A fifth drives the ingest hop's batch body 20 times and checks that
   * it leaves no materialization behind in the block manager.
   */
@@ -43,8 +44,9 @@ class TopologySpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
   /** The final-table assertions shared by every schedule: `expected`
-    * completed trips (4,468 on the golden feed, TripStoreSpec's
-    * published number), exactly their RAW pairs flipped.
+    * completed trips (4,468 on the golden feed, the reference's
+    * published number), exactly their RAW pairs flipped, each flipped
+    * item keeping its own family's attrs and recording the match time.
     */
   private def assertGolden(storeDir: String, expected: Long = 4468L): Unit = {
     val store = KeyedUpsertSink.readStore(spark, storeDir).get.cache()
@@ -70,6 +72,15 @@ class TopologySpec extends AnyFunSuite with SparkTestBase {
       assert(pairs.exceptAll(processed).count() === 0,
         "a matched RAW item was not flagged processed (a flip was lost)")
       assert(processed.count() === 2 * expected)
+
+      // processed items keep their sparse attrs and record the match's
+      // event time
+      val ps = store.filter(col("status") === "processed_by_matcher" &&
+        col("data_type") === "trip_start")
+      assert(ps.filter(col("pickup_datetime").isNull || col("fare_amount").isNotNull)
+        .count() === 0, "processed start items must keep start attrs and stay end-sparse")
+      assert(store.filter(col("status") === "processed_by_matcher" &&
+        col("processed_at").isNull).count() === 0, "processed_at must be set")
 
       // unmatched raw events persist as status='raw'; nothing regressed
       val raw = store.filter(col("sk").startsWith("RAW#"))
@@ -163,7 +174,8 @@ class TopologySpec extends AnyFunSuite with SparkTestBase {
     // never ends, every 10th has no start, every 9th has an invalid
     // start (no pickup time), every 5th end arrives a chunk before its
     // start, every 7th trip is re-delivered a chunk later, and each
-    // chunk carries poison events
+    // chunk carries poison events; one extra trip's start carries a
+    // present but malformed pickup time, so it never completes
     def startJson(id: String, ts: String) =
       s"""{"trip_id":"$id","data_type":"trip_start","pickup_datetime":"$ts","estimated_fare_amount":10.0,"pickup_location_id":1,"dropoff_location_id":2,"vendor_id":3}"""
     def endJson(id: String, ts: String) =
@@ -189,6 +201,8 @@ class TopologySpec extends AnyFunSuite with SparkTestBase {
       }
       if (i % 6 != 0 && i % 10 != 3 && i % 9 != 4) expectedIds += id
     }
+    chunks(2) += startJson("gbad", "2024-13-45 99:00:00")
+    chunks(2) += endJson("gbad", "2024-05-20 08:00:00")
     chunks.foreach { b =>
       b += "not json"
       b += """{"trip_id":null,"data_type":"trip_end","dropoff_datetime":"2024-05-20 07:00:00"}"""
@@ -229,7 +243,7 @@ class TopologySpec extends AnyFunSuite with SparkTestBase {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     (0 until 20).foreach { i =>
       TripTopology.ingestBatch(batch(i), s"$base/store", s"$base/changes",
-        i.toLong, numBuckets = 4)
+        i.toLong)
     }
     assert(spark.sparkContext.getPersistentRDDs.keySet -- before === Set.empty,
       "20 ingest batches left materializations in the block manager")
@@ -258,7 +272,6 @@ class TopologySpec extends AnyFunSuite with SparkTestBase {
           .option("checkpointLocation", s"$base/ckpt_ingest")
           .foreachBatch { (batch: DataFrame, id: Long) =>
             TripTopology.ingestBatch(batch, storeDir, changesDir, id,
-              KeyedUpsertSink.DefaultNumBuckets,
               afterUpsert = _ =>
                 if (failFirst && crashed.compareAndSet(false, true))
                   throw new RuntimeException(
