@@ -275,8 +275,8 @@ object Bench {
     val rerunNames = slowest.map(s => jstr(s._1)).mkString("[", ",", "]")
 
     // Streaming throughput (VERDICT r5 item 3): the golden 9.4k-event feed
-    // replayed through the full pipeline (parse → validate → dedup ×2 →
-    // stream-stream join → projection) in one micro-batch — the same
+    // replayed through the full pipeline (parse → validate → keyed-state
+    // match) in one micro-batch — the same
     // methodology as the SURVEY par.9 865 ev/s figure, now a tracked number.
     // A failure records events=-1 rather than killing the batch contract.
     val streaming = try {
@@ -325,7 +325,7 @@ object Bench {
       // "batched" is what a user gets FOLLOWING THE BUILDER — the
       // batch-volume rule applied by MicroBatchTuning (one state
       // partition per ~8k rows, so 1 for these 1000-event batches: each
-      // extra partition commits 6 more state stores per trigger). "cores"
+      // extra partition commits one more state store per trigger). "cores"
       // keeps the cores-sized anti-pattern as the measured contrast;
       // "tuned" keeps a fixed 4 as a second contrast, so the rule's
       // distance from both stays tracked.

@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   *    simply doesn't appear, like `status='raw'` rows waiting forever,
   *    README.md:57);
   *  - streaming flavor in [[graft.streaming.StreamingTripPipeline]]
-  *    (symmetric-hash stream-stream join with watermark-bounded state).
+  *    (one keyed state machine per trip_id with watermark-bounded
+  *    state, the reference's keyed lookup kept as state).
   *
   * Scale notes: the join shuffles both sides on `trip_id` —
   * HashPartitioning on a high-cardinality uniform key, no skew. Dedup (D1)

@@ -9,16 +9,17 @@ import org.apache.spark.sql.SparkSession
   * Cost model (Structured Streaming, SIGMOD 2018: a trigger costs a
   * fixed part plus per-row work). For the trip pipeline the fixed part
   * is state-store commits: every state partition opens and commits one
-  * HDFS-backed store per stateful operator on every trigger (6 for
-  * [[StreamingTripPipeline.pipeline]]: two dedups, the join's four),
-  * each commit writing a checksummed delta file — and it is paid again
-  * on every no-data trigger after a watermark advance. Concurrent
+  * HDFS-backed store per stateful operator on every trigger (1 for
+  * [[StreamingTripPipeline.pipeline]]: its keyed-state matcher), each
+  * commit writing a checksummed delta file — and it is paid again on
+  * every no-data trigger after a watermark advance. Concurrent
   * commits slow each other down, so adding partitions multiplies the
   * fixed part instead of hiding it; they pay only once the per-row work
   * of one partition outweighs it.
   *
   * The rule: `partitions = clamp(ceil(batchRows / targetRows), 1,
-  * cores)` with targetRows = 8192. Measured on the trip pipeline
+  * cores)` with targetRows = 8192. Measured on the trip pipeline's
+  * former dedup + join matcher, which committed 6 stores per partition
   * (4 vCPUs, a 16,000-event drain, state partitions 4 / 2 / 1):
   * 4,000-event batches took 6.4 / 5.1 / 4.4 s, so partitions of 1-2k
   * rows only lose; 16,000-event batches took 2.1 / 1.8 / 1.7 s, where 1

@@ -30,7 +30,7 @@ final case class AsOfMatch(
   * with the latest dimension row at-or-before its timestamp for the same
   * key (price before trade, config before deploy) — as a keyed state
   * machine on `flatMapGroupsWithState`, the same custom-state escape
-  * hatch as [[TripStateTracker]].
+  * hatch as the trip matcher, [[StreamingTripPipeline.completed]].
   *
   * Semantics (matching the batch operator where a stream can):
   *  - backward-INCLUSIVE: a dimension AT the event timestamp matches
@@ -57,9 +57,12 @@ object StreamingAsOf {
     *                      versions can no longer serve late events once
     *                      pruned — size it to the event-lateness bound.
     * @param timeoutMs     optional idle-key state expiry; `None` for
-    *                      replay/tests (see [[TripStateTracker.trackStatus]]
-    *                      on why timeouts and `processAllAvailable` mix
-    *                      badly).
+    *                      replay/tests: with a processing-time timeout
+    *                      Spark schedules no-data micro-batches
+    *                      continuously to evict state, which
+    *                      `processAllAvailable` never settles on (the trip
+    *                      matcher, [[StreamingTripPipeline.completed]],
+    *                      uses an event-time timeout instead).
     */
   def latestDimPerEvent(events: Dataset[AsOfEvent], maxDimHistory: Int = 64,
       timeoutMs: Option[Long] = None): Dataset[AsOfMatch] = {

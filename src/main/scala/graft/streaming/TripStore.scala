@@ -28,8 +28,9 @@ import graft.operators.RawEventStore
   *
   * 100 TB posture: per micro-batch the store pays O(touched buckets)
   * (see [[graft.operators.KeyedUpsertSink]]); the item projections are
-  * stateless maps over branches whose state (dedup + join) is already
-  * watermark-bounded, so the store adds no unbounded state of its own.
+  * stateless maps over the matcher's output, whose keyed state is
+  * already watermark-bounded, so the store adds no unbounded state of
+  * its own.
   */
 object TripStore {
 
@@ -43,9 +44,9 @@ object TripStore {
   val OrderCol = "status_rank"
 
   /** Attrs carried by a trip_start item (wire names,
-    * sources/TripSchemas.scala); [[StreamingTripPipeline.dedupedStarts]]
-    * keeps exactly these after trip_id, so the match carries every attr
-    * of both items.
+    * sources/TripSchemas.scala); the matcher,
+    * [[StreamingTripPipeline.completed]], keeps exactly these for a
+    * start, so the match carries every attr of both items.
     */
   val StartAttrs: Seq[String] = Seq("pickup_datetime", "pickup_ts",
     "pickup_location_id", "dropoff_location_id", "vendor_id",
@@ -73,7 +74,7 @@ object TripStore {
         lit(null).cast("string").as("processed_at") +:
         (startAttrs ++ endAttrs).map(col): _*)
 
-  /** The matcher's three puts per match, in ONE pass over the join
+  /** The matcher's three puts per match, in ONE pass over the matcher
     * output: the COMPLETED item (SK = COMPLETED#{dropoff_datetime},
     * lambda2.py:79-87) and the two `processed_by_matcher` re-puts of the
     * matched RAW items (lambda2.py:249-251 — the matcher holds every
@@ -84,8 +85,8 @@ object TripStore {
     *
     * Emitted via explode of a 3-struct array rather than a union of
     * three projections — a union would re-evaluate the matcher subtree
-    * once per family, and in streaming would instantiate the
-    * stream-stream JOIN STATE three times.
+    * once per family, and in streaming would instantiate the matcher's
+    * keyed state three times.
     */
   def matcherItems(completed: DataFrame,
       startAttrs: Seq[String] = StartAttrs,

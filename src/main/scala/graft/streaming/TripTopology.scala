@@ -22,8 +22,8 @@ import graft.sources.TripStreams
   *   raw value stream → [[ingestWriter]] (parse/validate → RAW items →
   *     [[KeyedUpsertSink]] table + per-batch INSERT log)
   *   → [[TripStreams.tableChangeFeed]] over the insert log
-  *   → [[matcherWriter]] (INSERT/RAW# filter → dedup → stream-stream
-  *     match → COMPLETED + processed items → the SAME table).
+  *   → [[matcherWriter]] (INSERT/RAW# filter → keyed-state match →
+  *     COMPLETED + processed items → the SAME table).
   *
   * The matcher consumes WHAT WAS WRITTEN, not what the ingest hop
   * happened to see — the two hops are separate queries with separate
@@ -60,8 +60,9 @@ import graft.sources.TripStreams
   *
   * 100 TB posture: hop 1 is stateless maps + an O(touched-buckets)
   * upsert; the change feed lists only NEW files per trigger (cost
-  * tracks write rate, not table size); hop 2's dedup/join state is
-  * watermark-bounded and hash-partitioned by trip_id. Nothing in the
+  * tracks write rate, not table size); hop 2's matcher keeps one
+  * watermark-bounded state row per in-flight trip, hash-partitioned by
+  * trip_id. Nothing in the
   * composition scans the table.
   */
 object TripTopology {

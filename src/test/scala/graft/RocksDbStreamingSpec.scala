@@ -126,21 +126,26 @@ class RocksDbStreamingSpec extends AnyFunSuite with SparkTestBase {
     withProvider(Some(RocksDb)) {
       implicit val ctx = spark.sqlContext
       val input = MemoryStream[String]
+      val dir = Files.createTempDirectory("graft-rocks-kpi").toString
+      // the KPI stream is its own query over the matcher's parquet output
+      val completed = StreamingTripPipeline.pipeline(input.toDF())
+      val matcher = completed.writeStream.format("parquet")
+        .option("checkpointLocation", s"$dir/ckpt").start(s"$dir/trips")
       val q = StreamingTripPipeline.dailyKpiStream(
-          StreamingTripPipeline.pipeline(input.toDF()))
+          spark.readStream.schema(completed.schema).parquet(s"$dir/trips"))
         .writeStream.format("memory").queryName("rocks_kpis")
         .outputMode("append").start()
       try {
         input.addData(Seq(
           """{"trip_id":"k1","data_type":"trip_start","pickup_datetime":"2024-05-25 10:00:00"}""",
           """{"trip_id":"k1","data_type":"trip_end","dropoff_datetime":"2024-05-25 10:30:00","fare_amount":30.0,"passenger_count":1.0}"""))
-        q.processAllAvailable()
+        matcher.processAllAvailable(); q.processAllAvailable()
         // advance the watermark past the day so the window closes
         input.addData(Seq(
           """{"trip_id":"k2","data_type":"trip_start","pickup_datetime":"2024-05-28 10:00:00"}""",
           """{"trip_id":"k2","data_type":"trip_end","dropoff_datetime":"2024-05-28 10:10:00","fare_amount":1.0,"passenger_count":1.0}"""))
-        q.processAllAvailable()
-      } finally q.stop()
+        matcher.processAllAvailable(); q.processAllAvailable()
+      } finally { q.stop(); matcher.stop() }
       val rows = spark.table("rocks_kpis").collect()
       assert(rows.length === 1)
       assert(rows.head.getAs[java.sql.Date]("pickup_date").toString === "2024-05-25")

@@ -394,8 +394,13 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[String]
     val dir = tmp() + "/kpi_days"
+    val trips = tmp()
+    // the KPI stream is its own query over the matcher's parquet output
     val completed = StreamingTripPipeline.pipeline(input.toDF())
-    val q = StreamingTripPipeline.dailyKpiStream(completed)
+    val matcher = completed.writeStream.format("parquet")
+      .option("checkpointLocation", tmp()).start(trips)
+    val q = StreamingTripPipeline.dailyKpiStream(
+        spark.readStream.schema(completed.schema).parquet(trips))
       .writeStream
       .option("checkpointLocation", tmp() + "/ckpt2")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -409,13 +414,13 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
       input.addData(Seq(
         """{"trip_id":"d1","data_type":"trip_start","pickup_datetime":"2024-05-25 09:00:00"}""",
         """{"trip_id":"d1","data_type":"trip_end","dropoff_datetime":"2024-05-25 09:20:00","fare_amount":12.0,"passenger_count":1.0}"""))
-      q.processAllAvailable()
+      matcher.processAllAvailable(); q.processAllAvailable()
       // advance both watermark sides far enough to close the 05-25 window
       input.addData(Seq(
         """{"trip_id":"d2","data_type":"trip_start","pickup_datetime":"2024-05-29 09:00:00"}""",
         """{"trip_id":"d2","data_type":"trip_end","dropoff_datetime":"2024-05-29 09:10:00","fare_amount":1.0,"passenger_count":1.0}"""))
-      q.processAllAvailable()
-    } finally q.stop()
+      matcher.processAllAvailable(); q.processAllAvailable()
+    } finally { q.stop(); matcher.stop() }
     val back = spark.read.parquet(dir)
     assert(back.filter(col("year") === 2024 && col("month") === 5 && col("day") === 25).count() === 1)
     assert(back.select("total_fare").as[Double].collect().toSet === Set(12.0))

@@ -150,19 +150,24 @@ class StreamingTripPipelineSpec extends AnyFunSuite with SparkTestBase {
   test("streaming daily KPI window aggregates completed trips") {
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[String]
+    val dir = java.nio.file.Files.createTempDirectory("graft-kpi").toString
+    // the KPI stream is its own query over the matcher's parquet output
     val completed = StreamingTripPipeline.pipeline(input.toDF())
-    val q = StreamingTripPipeline.dailyKpiStream(completed)
+    val matcher = completed.writeStream.format("parquet")
+      .option("checkpointLocation", s"$dir/ckpt").start(s"$dir/trips")
+    val q = StreamingTripPipeline.dailyKpiStream(
+        spark.readStream.schema(completed.schema).parquet(s"$dir/trips"))
       .writeStream.format("memory").queryName("kpis").outputMode("append").start()
     try {
       input.addData(Seq(
         startJson("t7", "2024-05-25 10:00:00"), endJson("t7", "2024-05-25 10:30:00", 30.0),
         startJson("t8", "2024-05-25 11:00:00"), endJson("t8", "2024-05-25 11:30:00", 50.0)))
-      q.processAllAvailable()
+      matcher.processAllAvailable(); q.processAllAvailable()
       // advance the watermark past the day so the window closes
       input.addData(Seq(
         startJson("t9", "2024-05-28 10:00:00"), endJson("t9", "2024-05-28 10:10:00", 1.0)))
-      q.processAllAvailable()
-    } finally q.stop()
+      matcher.processAllAvailable(); q.processAllAvailable()
+    } finally { q.stop(); matcher.stop() }
     val rows = spark.table("kpis").collect()
     assert(rows.length === 1)
     val r = rows.head
