@@ -501,16 +501,13 @@ object Bench {
       s"""{"error":${jstr(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}}"""
     }
 
-    // Two-hop topology throughput (r17 verdict item 3): the lease/fence
-    // protocol was correctness-proven (StoreLeaseSpec, TopologySpec) but
-    // never TIMED — this measures the composed ingest→change-feed→
-    // matcher topology's ev/s under both schedules (ping-pong: hops
-    // alternate, the lease is always free; concurrent: both hops live,
-    // every micro-batch races for the lease) at 1x and 10x the golden
-    // feed (10x = nine trip-id-prefixed replicas — matching is per
-    // trip id, so completions scale exactly 10x), with the writers'
-    // cumulative lease-wait seconds recorded per hop from the store's
-    // own instrumentation.
+    // Two-hop topology throughput (r17 verdict item 3): the composed
+    // ingest→change-feed→matcher topology's ev/s under both schedules
+    // (ping-pong: hops alternate; concurrent: both hops live) at 1x and
+    // 10x the golden feed (10x = nine trip-id-prefixed replicas —
+    // matching is per trip id, so completions scale exactly 10x), with
+    // the writers' cumulative compaction lease-wait seconds recorded per
+    // hop from the store's own instrumentation.
     val topology = try {
       import spark.implicits._
       import graft.operators.KeyedUpsertSink
@@ -621,122 +618,6 @@ object Bench {
       s"""{"error":${jstr(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}}"""
     }
 
-    // Store-lease CONTENTION probe: N same-JVM writers, each upserting
-    // a full-bucket-span batch into ONE shared store, so every upsert
-    // queues on the lease behind every other — the shape of the
-    // concurrent two-hop topology, where both hops touch every bucket.
-    // Writers use DISJOINT keys (w mod writers) so the final state is
-    // deterministic; lease wait and per-flip commit counts ride the
-    // JSON row.
-    val contention = try {
-      import org.apache.spark.sql.functions.{col, lit}
-      import graft.operators.KeyedUpsertSink
-      def probe(tag: String, writers: Int, batches: Int): String = {
-        KeyedUpsertSink.commitStatsClear()
-        KeyedUpsertSink.leaseWaitMs.clear()
-        val dir = java.nio.file.Files
-          .createTempDirectory(s"bench_cont_$tag").toString
-        val errsQ = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-        val t0 = System.nanoTime()
-        val threads = (0 until writers).map { w =>
-          val t = new Thread(() => {
-            try {
-              for (b <- 0 until batches) {
-                val df = spark.range(2000)
-                  .select(((col("id") * writers + w) % 3000).as("k"),
-                    (col("id") * writers + w + b.toLong * 10000)
-                      .cast("long").as("ver"),
-                    lit(w).as("writer"))
-                KeyedUpsertSink.upsertBatch(df, dir, Seq("k"), "ver",
-                  b.toLong, versionWins = true, numBuckets = 32,
-                  writerId = s"w$w")
-              }
-            } catch { case e: Throwable =>
-              errsQ.add(s"w$w: ${Option(e.getMessage).getOrElse(e.getClass.getName)}".take(160))
-            }
-          })
-          t.setDaemon(true); t
-        }
-        threads.foreach(_.start()); threads.foreach(_.join())
-        val secs = (System.nanoTime() - t0) / 1e9
-        val stats = KeyedUpsertSink.commitStatsSnapshot()
-        val statsObj = stats.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
-        val waits = KeyedUpsertSink.leaseWaitSnapshot()
-        val waitSec = waits.values.sum / 1000.0
-        val rows = KeyedUpsertSink.readStore(spark, dir)
-          .map(_.count()).getOrElse(0L)
-        System.err.println(f"[bench] contention $tag: $writers writers x " +
-          f"$batches batches in $secs%.1f s, $rows rows, lease wait " +
-          f"$waitSec%.2f s, stats $stats")
-        s""""$tag":{"writers":$writers,"batches_per_writer":$batches,"elapsed_sec":${jnum(secs)},"store_rows":$rows,"lease_wait_sec":${jnum(waitSec)},"commit_stats":$statsObj,"errors":[${errsQ.toArray.map(e => jstr(e.toString)).mkString(",")}]}"""
-      }
-      val parts = Seq(
-        probe("w1", 1, 8), probe("w2", 2, 8), probe("w4", 4, 8))
-      s"""{${parts.mkString(",")}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] contention FAILED — ${e.getMessage}")
-      s"""{"error":${jstr(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}}"""
-    }
-
-    // Store-commit seam microbench (r18 verdict items 2 and 6): the
-    // CONTROL path alone — one reader pointer-read plus the writer's
-    // acquire → read → flip → release, the per-upsert control footprint
-    // with the merge job factored out — K times per protocol, fs-op
-    // counters snapshotted around the loop. rename_local is the
-    // pre-seam-equivalent baseline; marker_local prices the write-once
-    // protocol on the same fs; marker_simobj pays it where it's
-    // mandatory (copy+delete renames, the object-store shape).
-    val storeSeam = try {
-      import graft.operators.StoreCommit
-      spark.sparkContext.hadoopConfiguration.set("fs.simobj.impl",
-        classOf[graft.SimObjFileSystem].getName)
-      def cycle(tag: String, mode: String, mkDir: => String, k: Int): String = {
-        val prevMode = sys.props.get("graft.store.commit")
-        if (mode.nonEmpty) sys.props("graft.store.commit") = mode
-        val proto = try StoreCommit.forStore(spark, mkDir)
-          finally {
-            if (mode.nonEmpty) prevMode match {
-              case Some(m) => sys.props("graft.store.commit") = m
-              case None => sys.props.remove("graft.store.commit")
-            }
-          }
-        StoreCommit.fsOpsClear()
-        val token = java.util.UUID.randomUUID().toString
-        val t0 = System.nanoTime()
-        var i = 0
-        while (i < k) {
-          proto.readPointer()
-          if (!proto.tryAcquire(token, s"bench:$i"))
-            throw new IllegalStateException(s"seam $tag: lock held at $i")
-          proto.readPointer()
-          proto.commitPointer(s"buckets=32\n0=gen-$i")
-          proto.release(token)
-          i += 1
-        }
-        val secs = (System.nanoTime() - t0) / 1e9
-        val ops = StoreCommit.fsOpsSnapshot()
-        val totalOps = ops.values.sum
-        val opsObj = ops.toSeq.sortBy(_._1)
-          .map { case (kk, v) => s"${jstr(kk)}:$v" }.mkString("{", ",", "}")
-        System.err.println(f"[bench] seam $tag: $k commits in $secs%.2f s " +
-          f"(${secs * 1000 / k}%.3f ms/commit, " +
-          f"${totalOps.toDouble / k}%.1f fs ops/commit)")
-        s""""$tag":{"commits":$k,"elapsed_sec":${jnum(secs)},"ms_per_commit":${jnum(secs * 1000 / k)},"fs_ops_total":$totalOps,"fs_ops_per_commit":${jnum(totalOps.toDouble / k)},"fs_ops":$opsObj}"""
-      }
-      def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
-      val K = 1000
-      val parts = Seq(
-        cycle("rename_local", "rename", tmp("bench_seam_rn"), K),
-        cycle("marker_local", "marker", tmp("bench_seam_mk"), K),
-        cycle("marker_simobj", "",
-          { val raw = tmp("bench_seam_so"); s"simobj://$raw/store" }, K))
-      s"""{${parts.mkString(",")}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] store seam FAILED — ${e.getMessage}")
-      s"""{"error":${jstr(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}}"""
-    }
-
     // Batch-curation flagship throughput: c4_end_to_end (extraction →
     // gates → unit passes → near-dup keep → split → pack) is already
     // timed by the main loop over its full crawled-HTML corpus; report
@@ -792,7 +673,7 @@ object Bench {
         case ("trip_store_lookup", Right(v)) => v }.getOrElse(-1.0)
       s"""{"build_sec":${jnum(tripStoreBuildSec)},"lookup_sec":${jnum(lookup)}}"""
     }
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","failed":${resultsAll.count(_._2.isLeft)},"loadavg":$loadAvg,"load_at_start":${jnum(loadAtStart)},"load_wait_sec":${jnum(loadWaitSec)},"dirty_mb_at_start":${jnum(dirtyAtStart)},"steal_cores_at_start":${jnum(stealAtStart)},"external_cpu_cores":${jnum(runExtCores)},"steal_cores_run":${jnum(runStealCores)},"co_resident_jvms":$coResObj,"cpus":$cpus,"retimed_queries":$retimedObj,"rerun_delta":$rerunDelta,"rerun_queries":$rerunNames,"ann_recall":$annRecall,"bpe_batched":$bpe,"ingest":$ingest,"topology":$topology,"contention":$contention,"store_seam":$storeSeam,"trip_store":$tripStore,"c4_pipeline":$c4,"scaleup":$scaleup,"streaming":$streaming,"sf":"$sfDir","errors":$errs,"gc_sec":$gcObj,"queries":$qs}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","failed":${resultsAll.count(_._2.isLeft)},"loadavg":$loadAvg,"load_at_start":${jnum(loadAtStart)},"load_wait_sec":${jnum(loadWaitSec)},"dirty_mb_at_start":${jnum(dirtyAtStart)},"steal_cores_at_start":${jnum(stealAtStart)},"external_cpu_cores":${jnum(runExtCores)},"steal_cores_run":${jnum(runStealCores)},"co_resident_jvms":$coResObj,"cpus":$cpus,"retimed_queries":$retimedObj,"rerun_delta":$rerunDelta,"rerun_queries":$rerunNames,"ann_recall":$annRecall,"bpe_batched":$bpe,"ingest":$ingest,"topology":$topology,"trip_store":$tripStore,"c4_pipeline":$c4,"scaleup":$scaleup,"streaming":$streaming,"sf":"$sfDir","errors":$errs,"gc_sec":$gcObj,"queries":$qs}"""
     println(line)
     // belt-and-braces: the identical JSON, committed as its own file —
     // the durable copy of every per-query timing regardless of what the

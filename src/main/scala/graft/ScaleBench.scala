@@ -1098,26 +1098,20 @@ object ScaleBench {
       }
       // TOPOLOGY SECOND DECADE (r18 verdict item 7; r19 items 1 and 6):
       // the two-hop concurrent topology at 100x the golden feed (946k
-      // events). Each chunk's row now carries a PHASE BREAKDOWN — the
-      // two hops' cumulative merge/flip/changelog milliseconds and
-      // lease waits (KeyedUpsertSink.phaseMs), the matcher's state
-      // commit ms, and the store's row/bucket counts, diffed at chunk
-      // boundaries — so the r19 per-chunk decay (7.2k -> 2.8k ev/s as
-      // the store grew to 3.79M rows) is ATTRIBUTED, not inferred.
-      // Matcher-side phases run concurrently with the timed ingest
-      // window; their per-chunk figures are wall-window diffs.
-      //
-      // MAINTENANCE under load (r19 item 6): when rows/bucket outgrows
-      // 2x the target, the store is re-bucketed by a live
-      // KeyedUpsertSink.compact — a MAJOR under the shared lease,
-      // CONCURRENT with the matcher — and the chunk row records the
-      // compaction and the lease waits around it, so "does maintenance
-      // stall the pipeline" is a number, not a guess. Completions must
-      // still equal golden x 100 — a throughput row with wrong output
-      // is not data (and a mid-flight re-bucket makes each hop's next
-      // upsert re-read the re-pinned bucket count under the lease).
+      // events). Each chunk's row carries a PHASE BREAKDOWN — the two
+      // hops' cumulative delta-write/compaction/changelog milliseconds
+      // and compaction lease waits (KeyedUpsertSink.phaseMs), the
+      // matcher's state commit ms, and the store's row count and
+      // snapshot bucket count, diffed at chunk boundaries — so a
+      // per-chunk decay is ATTRIBUTED, not inferred. Matcher-side
+      // phases run concurrently with the timed ingest window; their
+      // per-chunk figures are wall-window diffs. Maintenance is the
+      // upserts' own compaction (every KeyedUpsertSink.CompactAfterDeltas
+      // deltas, bucket count following the rows), so its cost shows in
+      // the compact phase. Completions must still equal golden x 100 —
+      // a throughput row with wrong output is not data.
       val topoJ = try {
-        import graft.operators.KeyedUpsertSink
+        import graft.operators.{DeltaLog, KeyedUpsertSink}
         import graft.streaming.{TripStore, TripTopology}
         import spark.implicits._
         implicit val ctx = spark.sqlContext
@@ -1152,8 +1146,6 @@ object ScaleBench {
             .map(_.commitTimeMs).sum)
         val perChunk = scala.collection.mutable.ArrayBuffer.empty[Double]
         val chunkRows = scala.collection.mutable.ArrayBuffer.empty[String]
-        val TargetRowsPerBucket = 65536L
-        var maintSec = 0.0
         val t0 = System.nanoTime()
         try {
           groups.zipWithIndex.foreach { case (c, i) =>
@@ -1165,26 +1157,10 @@ object ScaleBench {
             val s1 = snap()
             def d(f: Snap => Map[String, Long], k: String): Double =
               (f(s1).getOrElse(k, 0L) - f(s0).getOrElse(k, 0L)) / 1000.0
-            // store size (footer-only count) + maintenance, OUTSIDE the
-            // timed ingest window; its cost is its own field
-            val st = KeyedUpsertSink.readState(spark, store).get
+            // store size, OUTSIDE the timed ingest window
             val rows = KeyedUpsertSink.readStore(spark, store).get.count()
-            var compactSec = 0.0
-            var bucketsAfter = st.numBuckets
-            if (rows > 2L * TargetRowsPerBucket * st.numBuckets) {
-              val nb = ((rows + TargetRowsPerBucket - 1) /
-                TargetRowsPerBucket).toInt
-              val tcp = System.nanoTime()
-              KeyedUpsertSink.compact(spark, store, TripStore.Keys,
-                newNumBuckets = nb)
-              compactSec = (System.nanoTime() - tcp) / 1e9
-              maintSec += compactSec
-              bucketsAfter = nb
-              System.err.println(f"[scale] topology x100 chunk $i: " +
-                f"re-bucketed $rows rows ${st.numBuckets} -> $nb buckets " +
-                f"in $compactSec%.1f s (matcher live)")
-            }
-            chunkRows += s"""{"chunk":$i,"events":${c.length},"sec":${jnum(chunkSec)},"events_per_sec":${jnum(c.length / chunkSec)},"ing_merge_sec":${jnum(d(_.phase, "merge:ing"))},"ing_flip_sec":${jnum(d(_.phase, "flip:ing"))},"changelog_sec":${jnum(d(_.phase, "changelog:ing"))},"mat_merge_sec":${jnum(d(_.phase, "merge:mat"))},"mat_flip_sec":${jnum(d(_.phase, "flip:mat"))},"lease_wait_ing_sec":${jnum(d(_.lease, "ing"))},"lease_wait_mat_sec":${jnum(d(_.lease, "mat"))},"mat_state_commit_ms":${s1.matCommitMs - s0.matCommitMs},"store_rows":$rows,"store_buckets":${st.numBuckets},"compact_sec":${jnum(compactSec)},"buckets_after":$bucketsAfter}"""
+            val buckets = DeltaLog.readBucketCount(spark, store).getOrElse(0)
+            chunkRows += s"""{"chunk":$i,"events":${c.length},"sec":${jnum(chunkSec)},"events_per_sec":${jnum(c.length / chunkSec)},"ing_merge_sec":${jnum(d(_.phase, "merge:ing"))},"ing_compact_sec":${jnum(d(_.phase, "compact:ing"))},"changelog_sec":${jnum(d(_.phase, "changelog:ing"))},"mat_merge_sec":${jnum(d(_.phase, "merge:mat"))},"mat_compact_sec":${jnum(d(_.phase, "compact:mat"))},"lease_wait_ing_sec":${jnum(d(_.lease, "ing"))},"lease_wait_mat_sec":${jnum(d(_.lease, "mat"))},"mat_state_commit_ms":${s1.matCommitMs - s0.matCommitMs},"store_rows":$rows,"store_buckets":$buckets}"""
           }
           m.processAllAvailable()
         } finally { m.stop(); ingest.stop() }
@@ -1201,40 +1177,22 @@ object ScaleBench {
         val cstats = KeyedUpsertSink.commitStatsSnapshot()
         val completed = KeyedUpsertSink.readStore(spark, store).get
           .filter(col("sk").startsWith("COMPLETED#")).count()
-        // The NAMED growing term, priced (r19 item 1): the copy-on-write
-        // upsert rewrites every touched bucket, so per-batch cost is
-        // min(store, touched_buckets x rows_per_bucket). The topology's
-        // chunk-sized batches span every bucket — O(store) per chunk,
-        // the decay above. The bound that holds at 100 TB is the OTHER
-        // regime: a FIXED-size batch against a bucket-scaled store
-        // touches only its own buckets. Price both: the same 500-item
-        // batch re-upserted (content-identical under LWW) against the
-        // store as the run left it, then against the store re-bucketed
-        // to ~512 rows/bucket.
+        // the fixed-size write at the final store size: the same
+        // 500-item batch re-upserted (content-identical under LWW) —
+        // one delta, so its cost follows the batch, not the store
         val probeItems = KeyedUpsertSink.readStore(spark, store).get
           .filter(col("sk").startsWith("COMPLETED#")).limit(500)
           .localCheckpoint()
-        def timeUpsert(id: Long): Double = {
-          val tb = System.nanoTime()
-          KeyedUpsertSink.upsertBatch(probeItems, store, TripStore.Keys,
-            TripStore.OrderCol, id, versionWins = true, writerId = "probe")
-          (System.nanoTime() - tb) / 1e9
-        }
-        val bucketsCoarse = KeyedUpsertSink.readState(spark, store)
-          .get.numBuckets
-        val coarseSec = timeUpsert(9000L)
         val rowsFinal = KeyedUpsertSink.readStore(spark, store).get.count()
-        val nbFine = math.max(1L, rowsFinal / 512L).toInt
-        KeyedUpsertSink.compact(spark, store, TripStore.Keys,
-          newNumBuckets = nbFine)
-        val fineSec = timeUpsert(9001L)
+        val tb = System.nanoTime()
+        KeyedUpsertSink.upsertBatch(probeItems, store, TripStore.Keys,
+          TripStore.OrderCol, 9000L, versionWins = true, writerId = "probe")
+        val probeSec = (System.nanoTime() - tb) / 1e9
         System.err.println(f"[scale] topology x100: ${feed.length} events " +
           f"in $secs%.1f s (${feed.length / secs}%.0f ev/s), $completed " +
           f"completed; per-chunk ev/s ${perChunk.map(v => f"$v%.0f").mkString(",")}; " +
-          f"bounded upsert: 500 items vs $rowsFinal rows — " +
-          f"$bucketsCoarse buckets $coarseSec%.1f s -> $nbFine buckets " +
-          f"$fineSec%.1f s")
-        s""""topology":{"concurrent_x100":{"events":${feed.length},"chunks":$chunks,"elapsed_sec":${jnum(secs)},"maintenance_sec":${jnum(maintSec)},"events_per_sec":${jnum(feed.length / secs)},"completed":$completed,"per_chunk_events_per_sec":[${perChunk.map(jnum).mkString(",")}],"per_chunk":[${chunkRows.mkString(",")}],"lease_wait_sec":{"ing":${jnum(waits.getOrElse("ing", 0L) / 1000.0)},"mat":${jnum(waits.getOrElse("mat", 0L) / 1000.0)},"compact":${jnum(waits.getOrElse("compact", 0L) / 1000.0)}},"commit_stats":${cstats.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")},"state":{"mat_rows":$matRows,"mat_cum_commit_ms":${jnum(matCumCommitMs)}},"bounded_upsert":{"probe_items":500,"store_rows":$rowsFinal,"coarse_buckets":$bucketsCoarse,"coarse_sec":${jnum(coarseSec)},"fine_buckets":$nbFine,"fine_sec":${jnum(fineSec)}}}}"""
+          f"bounded upsert: 500 items vs $rowsFinal rows $probeSec%.1f s")
+        s""""topology":{"concurrent_x100":{"events":${feed.length},"chunks":$chunks,"elapsed_sec":${jnum(secs)},"events_per_sec":${jnum(feed.length / secs)},"completed":$completed,"per_chunk_events_per_sec":[${perChunk.map(jnum).mkString(",")}],"per_chunk":[${chunkRows.mkString(",")}],"lease_wait_sec":{"ing":${jnum(waits.getOrElse("ing", 0L) / 1000.0)},"mat":${jnum(waits.getOrElse("mat", 0L) / 1000.0)},"compact":${jnum(waits.getOrElse("compact", 0L) / 1000.0)}},"commit_stats":${cstats.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")},"state":{"mat_rows":$matRows,"mat_cum_commit_ms":${jnum(matCumCommitMs)}},"bounded_upsert":{"probe_items":500,"store_rows":$rowsFinal,"sec":${jnum(probeSec)}}}}"""
       } catch { case e: Throwable =>
         System.err.println(s"[scale] topology x100 FAILED — ${e.getMessage}")
         s""""topology":{"error":${jstr(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}}"""

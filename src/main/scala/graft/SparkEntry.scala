@@ -123,8 +123,8 @@ object SparkEntry {
         col("l_shipdate").cast("string").as("dropoff_datetime"),
         col("_m.l_extendedprice").as("fare_amount"))
       // LAZY-shared ONLY for the store build (r21): there `ends` is
-      // evaluated in four SEPARATE sequential jobs (each generation's
-      // probe + merge), so one materialization pays for three reads.
+      // evaluated in two SEPARATE sequential jobs (the RAW and the
+      // matcher delta writes), so one materialization pays for both.
       // trip_store_final's two references live in ONE plan whose
       // branches execute concurrently on otherwise-idle cores — a
       // checkpoint there just serializes the union behind a cache-write
@@ -143,8 +143,9 @@ object SparkEntry {
 
   /** The r18 point-lookup path made oracle-visible (r18 verdict item 4):
     * the trip items are upserted into a REAL on-disk
-    * [[KeyedUpsertSink]] store bucketed by `trip_id` (two generations —
-    * RAW ingest, then the matcher's puts), and a fixed probe set (every
+    * [[KeyedUpsertSink]] store bucketed by `trip_id` (two deltas — RAW
+    * ingest, then the matcher's puts — compacted into one snapshot), and
+    * a fixed probe set (every
     * 100th order) is answered via [[KeyedUpsertSink.readStoreForKeys]],
     * which reads ONLY the probe's hash buckets. Co-resident foreign
     * trips ride along in the touched buckets by design, so the lookup
@@ -163,8 +164,8 @@ object SparkEntry {
   /** The on-disk trip store [[tripStoreLookup]] reads from, built ONCE
     * per JVM per source dir (r19 verdict item 2: the lookup query's
     * bench row conflated ~10 s of fixture construction with the ~1 s
-    * pruned read it certifies). The store is immutable after its two
-    * upsert generations land, so reuse is safe; [[Bench]] times this
+    * pruned read it certifies). The store is immutable after its
+    * compaction, so reuse is safe; [[Bench]] times this
     * build explicitly (`trip_store.build_sec`) before the query loop so
     * the `trip_store_lookup` row prices the LOOKUP alone.
     */
@@ -181,26 +182,16 @@ object SparkEntry {
       val storeDir = java.nio.file.Files
         .createTempDirectory("trip_store_lookup").toString
       Seq(raw, matcher).zipWithIndex.foreach { case (items, i) =>
-        // LAZY-checkpoint each generation's batch before handing it to
-        // the sink (r21): the upsert evaluates its batch twice — the
-        // bucket probe, then the merge+write — and THIS caller's batch
-        // is a full orders-scan ∪ lineitem-aggregate (≈2.5-3 s to
-        // compute at sf0.1). The checkpoint materializes once inside
-        // the probe job and the merge reads blocks: measured 6.4 s →
-        // 2.9 s (gen0) and 6.3 s → 3.5 s (gen1) per generation. This is
-        // a CALLER decision, not the sink's: r20 measured that caching
-        // inside the generic sink loses when batches are small/cheap
-        // (the streaming micro-batch case) — only a batch whose
-        // recompute dwarfs one cache write should opt in.
-        val batch = Materialize.shared(items.withColumn("_ord", ord))
-        KeyedUpsertSink.upsertBatch(batch, storeDir,
+        KeyedUpsertSink.upsertBatch(items.withColumn("_ord", ord), storeDir,
           TripStore.Keys, "_ord", batchId = i.toLong, versionWins = true,
-          numBuckets = 32, bucketCols = Seq("trip_id"))
-        org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(batch)
+          bucketCols = Seq("trip_id"))
       }
-      // both generations are written: release the shared `ends`
-      // checkpoint too (it is the only checkpoint in `raw`'s plan), so
-      // the lineitem aggregate does not stay resident for the session
+      // fold both deltas into a trip_id-bucketed snapshot, so the lookup
+      // certifies the bucket-pruned read and not a delta-only fold
+      KeyedUpsertSink.compact(s, storeDir, TripStore.Keys)
+      // both deltas are written: release the shared `ends` checkpoint
+      // (it is the only checkpoint in `raw`'s plan), so the lineitem
+      // aggregate does not stay resident for the session
       org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(raw)
       storeDir
     })

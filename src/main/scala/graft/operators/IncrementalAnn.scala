@@ -90,31 +90,30 @@ object IncrementalAnn {
         col("cosine"))
   }
 
-  /** Persist a batch's index rows into the bucketed keyed store (LWW by
-    * `batch_id`; re-delivery idempotent).
+  /** Persist a batch's index rows into the keyed store (LWW by
+    * `batch_id`; re-delivery idempotent). The store lives under
+    * `index/`, beside the band-parameter pin at the root.
     */
-  def upsertIndex(idx: DataFrame, storeDir: String, batchId: Long,
-      numBuckets: Int = KeyedUpsertSink.DefaultNumBuckets): Unit =
+  def upsertIndex(idx: DataFrame, storeDir: String, batchId: Long): Unit =
     KeyedUpsertSink.upsertBatch(
       idx.select(col("id"), col("v"), col("nrm"), col("bands"),
         lit(batchId).as("batch_id")),
-      storeDir, Seq("id"), "batch_id", batchId, numBuckets = numBuckets)
+      s"$storeDir/index", Seq("id"), "batch_id", batchId)
 
   /** The persisted index relation, or None before the first ingest. */
   def readIndex(spark: SparkSession, storeDir: String): Option[DataFrame] =
-    KeyedUpsertSink.readStore(spark, storeDir)
+    KeyedUpsertSink.readStore(spark, s"$storeDir/index")
       .map(_.select("id", "v", "nrm", "bands"))
 
   /** End-to-end ingest step: index the batch, answer its top-k against
     * the persisted corpus (plus batch-internal), fold the batch into the
-    * store. Returns the top-k MATERIALIZED (same generation-pruning
+    * store. Returns the top-k MATERIALIZED (same compaction-grace
     * rationale as [[IncrementalDedup.ingestBatch]]).
     */
   def ingestBatch(batch: DataFrame, storeDir: String, batchId: Long,
       k: Int = 10, tables: Int = 4, bitsPerTable: Int = 16,
       multiProbe: Boolean = false,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      numBuckets: Int = KeyedUpsertSink.DefaultNumBuckets): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     // the stored bands are a function of (tables, bitsPerTable): a later
     // ingest with different parameters would probe buckets the stored
     // rows never hashed into — silently empty candidates, not an error.
@@ -135,7 +134,7 @@ object IncrementalAnn {
         incrementalTopK(idx, idx.filter(lit(false)), k, bitsPerTable, multiProbe)
     }
     val out = Materialize.round(topk)
-    upsertIndex(idx, storeDir, batchId, numBuckets)
+    upsertIndex(idx, storeDir, batchId)
     out
   }
 
@@ -148,11 +147,10 @@ object IncrementalAnn {
     */
   def ingester(storeDir: String, topkDir: String, k: Int = 10,
       tables: Int = 4, bitsPerTable: Int = 16, multiProbe: Boolean = false,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      numBuckets: Int = KeyedUpsertSink.DefaultNumBuckets): (DataFrame, Long) => Unit =
+      idCol: String = "vec_id", vecCol: String = "embedding"): (DataFrame, Long) => Unit =
     (batch, id) =>
       ingestBatch(batch, storeDir, id, k, tables, bitsPerTable, multiProbe,
-          idCol, vecCol, numBuckets)
+          idCol, vecCol)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$topkDir/batch=$id")
 

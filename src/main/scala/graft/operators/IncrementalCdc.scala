@@ -77,17 +77,15 @@ object IncrementalCdc {
     * Existing (id, h)-bucketed stores keep their pin and fall back to
     * the full read.
     */
-  def upsertChunks(chunks: DataFrame, storeDir: String, batchId: Long,
-      numBuckets: Int = KeyedUpsertSink.DefaultNumBuckets): Unit = {
+  def upsertChunks(chunks: DataFrame, storeDir: String, batchId: Long): Unit = {
     // request the h pin only on CREATION; an existing store keeps
-    // whatever it was pinned with (a legacy (id,h)-bucketed store must
-    // keep folding, it just reads unpruned)
-    val bc = KeyedUpsertSink.readState(chunks.sparkSession, storeDir)
-      .map(_.bucketCols).getOrElse(Seq("h"))
+    // whatever it was pinned with (an (id,h)-bucketed store must keep
+    // folding, it just reads unpruned)
+    val bc = if (KeyedUpsertSink.pinnedBucketCols(chunks.sparkSession,
+      storeDir).isEmpty) Seq("h") else Seq.empty
     KeyedUpsertSink.upsertBatch(
       chunks.select(col("id"), col("h"), lit(batchId).as("batch_id")),
-      storeDir, Seq("id", "h"), "batch_id", batchId, numBuckets = numBuckets,
-      bucketCols = bc)
+      storeDir, Seq("id", "h"), "batch_id", batchId, bucketCols = bc)
   }
 
   /** The persisted corpus chunk relation (id, h), or None pre-ingest. */
@@ -101,8 +99,8 @@ object IncrementalCdc {
     */
   def readChunksForBatch(spark: SparkSession, storeDir: String,
       batchChunks: DataFrame): Option[DataFrame] =
-    KeyedUpsertSink.readState(spark, storeDir) match {
-      case Some(st) if st.bucketCols == Seq("h") =>
+    KeyedUpsertSink.pinnedBucketCols(spark, storeDir) match {
+      case Some(Seq("h")) =>
         KeyedUpsertSink.readStoreForKeys(spark, storeDir,
           batchChunks.select("h"), Seq("h")).map(_.select("id", "h"))
       case Some(_) => readChunks(spark, storeDir)
@@ -111,20 +109,19 @@ object IncrementalCdc {
 
   /** End-to-end ingest: chunk the batch, mine its passage-sharing pairs
     * against the store (plus batch-internal), fold the chunks in.
-    * Result is materialized before the upsert for the same store-
-    * generation-pruning reason as [[IncrementalDedup.ingestBatch]].
+    * Result is materialized before the upsert for the same
+    * compaction-grace reason as [[IncrementalDedup.ingestBatch]].
     */
   def ingestBatch(batch: DataFrame, storeDir: String, batchId: Long,
       w: Int = 8, divisor: Int = 64, maxDocFreq: Option[Long] = None,
-      idCol: String = "doc_id", textCol: String = "text",
-      numBuckets: Int = KeyedUpsertSink.DefaultNumBuckets): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val ch = Materialize.shared(chunkHashes(batch, w, divisor, idCol, textCol))
     val pairs = readChunksForBatch(batch.sparkSession, storeDir, ch) match {
       case Some(corpus) => incrementalChunkPairs(ch, corpus, maxDocFreq)
       case None         => incrementalChunkPairs(ch, ch.filter(lit(false)), maxDocFreq)
     }
     val out = Materialize.round(pairs)
-    upsertChunks(ch, storeDir, batchId, numBuckets)
+    upsertChunks(ch, storeDir, batchId)
     out
   }
 
@@ -135,11 +132,10 @@ object IncrementalCdc {
     */
   def ingester(storeDir: String, pairsDir: String, w: Int = 8,
       divisor: Int = 64, maxDocFreq: Option[Long] = None,
-      idCol: String = "doc_id", textCol: String = "text",
-      numBuckets: Int = KeyedUpsertSink.DefaultNumBuckets): (DataFrame, Long) => Unit =
+      idCol: String = "doc_id", textCol: String = "text"): (DataFrame, Long) => Unit =
     (batch, id) =>
       ingestBatch(batch, storeDir, id, w, divisor, maxDocFreq, idCol,
-          textCol, numBuckets)
+          textCol)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$pairsDir/batch=$id")
 }

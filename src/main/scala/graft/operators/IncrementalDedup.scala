@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * O(corpus) work for an O(batch)-sized question.
   *
   * Mechanics: MinHash signatures are computed ONCE per document — on the
-  * batch that first ingests it — and persisted in a [[KeyedUpsertSink]]
-  * bucketed store keyed by doc id (re-delivered batches overwrite
-  * idempotently; per-upsert cost is O(touched buckets)). A new batch
+  * batch that first ingests it — and persisted in an LWW [[DeltaLog]]
+  * keyed by doc id (re-delivered batches overwrite idempotently;
+  * per-ingest write cost is O(batch)). A new batch
   * computes only its own |batch| signatures, LSH-bands them, and
   * equi-joins against the banded corpus signatures — the same
   * AND-within-band / OR-across-bands candidate generation as
@@ -87,8 +87,8 @@ object IncrementalDedup {
   }
 
   /** The LSH band INDEX nested under the signature store: the banded
-    * corpus relation (id, band, key) as its own [[KeyedUpsertSink]]
-    * store bucketed by (band, key) — the secondary-index
+    * corpus relation (id, band, key) as its own store bucketed by
+    * (band, key) — the secondary-index
     * materialization that turns the per-batch candidate join from a
     * full-corpus scan into a bucket-pruned read over the batch's own
     * band keys.
@@ -105,11 +105,6 @@ object IncrementalDedup {
     * the bases to the corpus so pruned reads stay O(probe x
     * rowsPerBucket). Single-writer by the foreachBatch contract, like
     * every [[DeltaLog]] store.
-    *
-    * Stores created before this layout (signatures in a
-    * [[KeyedUpsertSink]] at the root) are detected by their pointer and
-    * stay on the byte-compatible full-scan path forever — a partial
-    * index would silently miss pairs against the unindexed prefix.
     */
   private def slogDir(storeDir: String) = s"$storeDir/slog"
   private def blogDir(storeDir: String) = s"$storeDir/blog"
@@ -128,34 +123,25 @@ object IncrementalDedup {
     lwwBy(Seq("id", "band", "key"))(df)
 
   /** Persist a batch's (id, sig) signatures and their band-index rows:
-    * one appended delta per log (re-delivery idempotent). A legacy
-    * root-store keeps its original sink-upsert path and grows no index.
+    * one appended delta per log (re-delivery idempotent).
     */
   def upsertSignatures(sigs: DataFrame, storeDir: String, batchId: Long,
-      numBuckets: Int = KeyedUpsertSink.DefaultNumBuckets,
       numHashes: Int = 16, bands: Int = 4): Unit = {
-    val spark = sigs.sparkSession
-    if (KeyedUpsertSink.readState(spark, storeDir).isDefined)
-      KeyedUpsertSink.upsertBatch(
-        sigs.select(col("id"), col("sig"), lit(batchId).as("batch_id")),
-        storeDir, Seq("id"), "batch_id", batchId, numBuckets = numBuckets)
-    else {
-      DeltaLog.writeDelta(
-        sigs.select(col("id"), col("sig"), lit(batchId).as("batch_id")),
-        slogDir(storeDir), batchId)
-      DeltaLog.writeDelta(
-        Dedup.bandedSignatures(sigs, numHashes, bands)
-          .select(col("id"), col("band"), col("key"),
-            lit(batchId).as("batch_id")),
-        blogDir(storeDir), batchId)
-    }
+    DeltaLog.writeDelta(
+      sigs.select(col("id"), col("sig"), lit(batchId).as("batch_id")),
+      slogDir(storeDir), batchId)
+    DeltaLog.writeDelta(
+      Dedup.bandedSignatures(sigs, numHashes, bands)
+        .select(col("id"), col("band"), col("key"),
+          lit(batchId).as("batch_id")),
+      blogDir(storeDir), batchId)
   }
 
   /** Fold both logs into hash-bucketed base snapshots with the bucket
     * count scaled to the corpus (`ceil(rows / targetRowsPerBucket)`,
     * the [[DeltaLog.compactBucketed]] rule) — the compaction cadence
     * that bounds BOTH the delta tail a read folds and the rows a
-    * pruned read scans per touched bucket. No-op on a legacy store.
+    * pruned read scans per touched bucket.
     */
   def compactStores(spark: SparkSession, storeDir: String,
       targetRowsPerBucket: Long = 4096L): Unit = {
@@ -248,32 +234,29 @@ object IncrementalDedup {
   }
 
   /** The persisted corpus signature relation (id, sig), or None before
-    * the first ingest. Reads whichever layout the store carries.
+    * the first ingest.
     */
   def readSignatures(spark: SparkSession, storeDir: String): Option[DataFrame] =
     DeltaLog.readFolded(spark, slogDir(storeDir), sigLww)
       .map(_.select("id", "sig"))
-      .orElse(
-        KeyedUpsertSink.readStore(spark, storeDir).map(_.select("id", "sig")))
 
   /** End-to-end ingest step: signature the batch, mine its near-dup
     * pairs against the persisted corpus (plus batch-internal pairs),
     * then fold the batch's signatures into the store. Returns the pair
     * list MATERIALIZED (reliable checkpoint when a checkpoint dir is
     * set, local otherwise) — the result must not lazily read store
-    * generations that a later ingest may prune past the sink's
-    * one-generation grace window.
+    * deltas that a later compaction may delete past its one-round
+    * grace window.
     */
   def ingestBatch(batch: DataFrame, storeDir: String, batchId: Long,
       n: Int = 3, numHashes: Int = 16, bands: Int = 4,
       minAgreement: Double = 0.5, idCol: String = "doc_id",
-      textCol: String = "text",
-      numBuckets: Int = KeyedUpsertSink.DefaultNumBuckets): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     val sigs = Materialize.shared(
       Dedup.minHashSignatures(batch, n, numHashes, idCol, textCol))
     val pairs = minePairs(sigs, storeDir, numHashes, bands, minAgreement)
     val out = Materialize.round(pairs)
-    upsertSignatures(sigs, storeDir, batchId, numBuckets, numHashes, bands)
+    upsertSignatures(sigs, storeDir, batchId, numHashes, bands)
     out
   }
 
@@ -289,8 +272,7 @@ object IncrementalDedup {
     * re-attached by pruned point-lookup for the CANDIDATE ids only.
     * Per-batch read cost is O(batch-band-buckets x rowsPerBucket +
     * delta tail + candidates), independent of corpus size under the
-    * [[compactStores]] cadence; the full-corpus scan-and-band fallback
-    * survives only for index-less legacy stores. Exact: every corpus
+    * [[compactStores]] cadence. Exact: every corpus
     * row with a probed (band, key) lives in that probe's bucket, so
     * the pruned band join equals the full one (IncrementalDedupSpec
     * asserts indexed == full-rerun pair lists).
@@ -337,13 +319,9 @@ object IncrementalDedup {
             Dedup.sigAgreement(col("sig_a"), col("sig_b"), numHashes))
           .filter(col("sig_agreement") >= minAgreement)
           .select("id_a", "id_b", "sig_agreement")
-      case None => readSignatures(spark, storeDir) match {
-        case Some(corpusSigs) => // legacy index-less store: full scan
-          incrementalLshPairs(sigs, corpusSigs, numHashes, bands, minAgreement)
-        case None => // first batch: corpus is empty, only internal pairs
-          incrementalLshPairs(sigs,
-            sigs.filter(lit(false)), numHashes, bands, minAgreement)
-      }
+      case None => // first batch: corpus is empty, only internal pairs
+        incrementalLshPairs(sigs,
+          sigs.filter(lit(false)), numHashes, bands, minAgreement)
     }
   }
 
@@ -362,12 +340,11 @@ object IncrementalDedup {
   def ingester(storeDir: String, pairsDir: String, n: Int = 3,
       numHashes: Int = 16, bands: Int = 4, minAgreement: Double = 0.5,
       idCol: String = "doc_id", textCol: String = "text",
-      numBuckets: Int = KeyedUpsertSink.DefaultNumBuckets,
       compactEvery: Int = 0,
       targetRowsPerBucket: Long = 4096L): (DataFrame, Long) => Unit =
     (batch, id) => {
       ingestBatch(batch, storeDir, id, n, numHashes, bands, minAgreement,
-          idCol, textCol, numBuckets)
+          idCol, textCol)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$pairsDir/batch=$id")
       // self-maintenance (r19, opt-in): every `compactEvery` batches a

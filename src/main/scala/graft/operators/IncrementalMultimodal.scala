@@ -49,10 +49,9 @@ object IncrementalMultimodal {
         ph.filter(lit(false)), maxHamming, maxBlockFreq = maxBlockFreq)
     }).select(col("id_a"), col("id_b"), lit("image").as("modality"))
     // the caption leg rides IncrementalDedup's shared mining path:
-    // bucket-pruned against the capsigs band index when present (the
-    // store is written through upsertSignatures, so fresh stores always
-    // have one), full-scan only for legacy index-less stores — the same
-    // O(batch) read bound as the dedup ingest (r19)
+    // bucket-pruned against the capsigs band index (the store is
+    // written through upsertSignatures) — the same O(batch) read bound
+    // as the dedup ingest (r19)
     val cap = IncrementalDedup.minePairs(sigs, s"$baseDir/capsigs",
         numHashes, bands, minAgreement)
       .select(col("id_a"), col("id_b"), lit("caption").as("modality"))

@@ -83,11 +83,10 @@ object IncrementalPhash {
   /** Persist a batch's hash rows into the keyed store (LWW by batch,
     * re-delivery idempotent — the [[IncrementalDedup]] discipline).
     */
-  def upsertHashes(hashes: DataFrame, storeDir: String, batchId: Long,
-      numBuckets: Int = KeyedUpsertSink.DefaultNumBuckets): Unit =
+  def upsertHashes(hashes: DataFrame, storeDir: String, batchId: Long): Unit =
     KeyedUpsertSink.upsertBatch(
       hashes.select(col("id"), col("h"), lit(batchId).as("batch_id")),
-      storeDir, Seq("id"), "batch_id", batchId, numBuckets = numBuckets)
+      storeDir, Seq("id"), "batch_id", batchId)
 
   /** The persisted corpus hash relation (id, h), or None pre-ingest. */
   def readHashes(spark: SparkSession, storeDir: String): Option[DataFrame] =
@@ -95,14 +94,13 @@ object IncrementalPhash {
 
   /** End-to-end ingest: fingerprint the batch, mine its near-dup pairs
     * against the store (plus batch-internal), fold the hashes in.
-    * Result materialized before the upsert so later ingests cannot
-    * prune this result's input store generations.
+    * Result materialized before the upsert so a later compaction
+    * cannot delete this result's input store deltas.
     */
   def ingestBatch(batch: DataFrame, storeDir: String, batchId: Long,
       maxHamming: Int = 3, blockBits: Int = 16,
       maxBlockFreq: Option[Long] = None,
-      idCol: String = "doc_id", payloadCol: String = "payload",
-      numBuckets: Int = KeyedUpsertSink.DefaultNumBuckets): DataFrame = {
+      idCol: String = "doc_id", payloadCol: String = "payload"): DataFrame = {
     val ph = Materialize.shared(phashes(batch, idCol, payloadCol))
     val pairs = readHashes(batch.sparkSession, storeDir) match {
       case Some(corpus) =>
@@ -112,7 +110,7 @@ object IncrementalPhash {
           blockBits, maxBlockFreq)
     }
     val out = Materialize.round(pairs)
-    upsertHashes(ph, storeDir, batchId, numBuckets)
+    upsertHashes(ph, storeDir, batchId)
     out
   }
 
@@ -122,11 +120,10 @@ object IncrementalPhash {
     */
   def ingester(storeDir: String, pairsDir: String, maxHamming: Int = 3,
       blockBits: Int = 16, maxBlockFreq: Option[Long] = None,
-      idCol: String = "doc_id", payloadCol: String = "payload",
-      numBuckets: Int = KeyedUpsertSink.DefaultNumBuckets): (DataFrame, Long) => Unit =
+      idCol: String = "doc_id", payloadCol: String = "payload"): (DataFrame, Long) => Unit =
     (batch, id) =>
       ingestBatch(batch, storeDir, id, maxHamming, blockBits, maxBlockFreq,
-          idCol, payloadCol, numBuckets)
+          idCol, payloadCol)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$pairsDir/batch=$id")
 }

@@ -5,53 +5,36 @@ import java.io.IOException
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** The COMMIT SEAM under [[KeyedUpsertSink]] (r17 verdict item 1): the
-  * store's two durability primitives — the atomic pointer publish and
-  * the writer lock — abstracted behind one interface with two
+/** The LOCK SEAM under [[KeyedUpsertSink]]'s compaction lease: the
+  * filesystem verbs of the writer lock behind one interface with two
   * implementations, because the two filesystem families at play offer
   * OPPOSITE primitives:
   *
   *  - local/HDFS give ATOMIC RENAME and ATOMIC EXCLUSIVE CREATE —
-  *    [[RenameCommit]] uses exactly the pre-seam mechanics (temp file +
-  *    OVERWRITE rename for the pointer, exclusive-create `_LOCK` +
-  *    mtime lease for the lock), byte-compatible with every store
-  *    written before the seam existed;
+  *    [[RenameCommit]] uses an exclusive-create `_LOCK` file with an
+  *    mtime lease, and takes a stale lock over by renaming it aside;
   *  - object stores (S3/GCS/ABFS) have NO rename (it is a copy-then-
   *    delete that a crash can tear in half) and NO exclusive create in
   *    the Hadoop API, but every PUT of a NEW key is atomic and
   *    read-after-write consistent (S3 since 2020-12; GCS/ABFS always) —
-  *    [[MarkerCommit]] builds both primitives from immutable new-key
-  *    puts alone: the pointer is a sequence of write-once marker files
-  *    under `_CURRENT.d/` (commit = put the next sequence number;
-  *    readers take the highest complete marker), and the lock is a
-  *    candidate-file election under `_LOCK.d/` (lowest name wins).
+  *    [[MarkerCommit]] builds the lock from immutable new-key puts
+  *    alone: a candidate-file election under `_LOCK.d/` (lowest name
+  *    wins).
   *
   * Which implementation a store uses is pinned by its ON-DISK LAYOUT
-  * first (a store that already has `_CURRENT.d/` keeps markers, one
-  * with `_CURRENT` keeps rename — pointing a differently-configured
-  * writer at an existing store can never split its pointer across two
-  * protocols), then by `graft.store.commit` / `GRAFT_STORE_COMMIT`
-  * (`rename` | `marker` | `auto`, default auto), where `auto` selects
-  * markers for object-store URI schemes and rename everywhere else.
+  * first (a store that already has `_LOCK.d/` keeps the election, one
+  * holding a `_LOCK` file keeps rename), then by `graft.store.commit` /
+  * `GRAFT_STORE_COMMIT` (`rename` | `marker` | `auto`, default auto),
+  * where `auto` selects markers for object-store URI schemes and rename
+  * everywhere else.
   *
   * What the seam does NOT change: the lease/heartbeat/fence state
-  * machine in [[KeyedUpsertSink.upsertBatch]] is protocol-independent
-  * and runs unchanged on either implementation — only the five
-  * filesystem verbs below differ. StoreObjectCommitSpec proves the
-  * marker protocol end-to-end on a simulated object store whose rename
-  * is a crash-injectable copy-then-delete: no committed generation is
-  * ever lost, because the marker path never calls rename at all.
+  * machine in [[KeyedUpsertSink]] is protocol-independent and runs
+  * unchanged on either implementation — only the verbs below differ.
+  * The store's data commits need no seam: deltas and snapshots are
+  * `_SUCCESS`-gated directories ([[DeltaLog]]).
   */
 private[graft] sealed trait StoreCommitProtocol {
-
-  /** The current committed pointer body, or None before first commit. */
-  def readPointer(): Option[String]
-
-  /** Atomically publish a new pointer body: a reader sees the previous
-    * body or this one, never a torn mix. Called only inside the lease,
-    * after the fence.
-    */
-  def commitPointer(body: String): Unit
 
   /** Try to acquire the writer lock exclusively. False = a peer holds
     * it (the caller waits / checks staleness).
@@ -95,9 +78,7 @@ private[graft] sealed trait StoreCommitProtocol {
 
 private[graft] object StoreCommit {
 
-  private[graft] val PointerFile = "_CURRENT"
   private[graft] val LockFile = "_LOCK"
-  private[graft] val MarkerDir = "_CURRENT.d"
   private[graft] val ElectionDir = "_LOCK.d"
 
   /** URI schemes whose filesystems rename by copy (no atomic rename,
@@ -110,17 +91,15 @@ private[graft] object StoreCommit {
   /** Resolved protocols, one per canonical store path: the choice is
     * pinned by layout (or, for a brand-new store, by config/scheme —
     * deterministic for a given path), so re-probing the filesystem on
-    * every readState/commit would pay repeated exists round-trips for
-    * an answer that never changes (ADVICE r18).
+    * every compaction would pay repeated exists round-trips for an
+    * answer that never changes (ADVICE r18).
     */
   private val resolved = new java.util.concurrent.ConcurrentHashMap[
     String, StoreCommitProtocol]()
 
   /** Control-path filesystem-op counters, keyed `<protocol>.<verb>` —
-    * the measured face of the commit seam's per-commit overhead (r18
-    * verdict items 2 and 6): the store-seam microbench snapshots these
-    * around K commits so ops-per-commit is a recorded number, not an
-    * inference from wall-clock. One LongAdder add per fs call.
+    * the measured face of the lock seam's overhead (r18 verdict items 2
+    * and 6), snapshotted by perfbench. One LongAdder add per fs call.
     */
   private val fsOps = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.atomic.LongAdder]()
@@ -142,72 +121,32 @@ private[graft] object StoreCommit {
       // the on-disk layout pins the protocol for an existing store.
       // Only a genuinely-absent path reads as "no layout"; any OTHER
       // probe failure PROPAGATES (ADVICE r18) — a transient exists()
-      // error on an existing marker store would otherwise select and
-      // cache RenameCommit, splitting the pointer across two protocols,
-      // the exact hazard the layout pin exists to prevent.
-      val hasMarkers = try fs.exists(new Path(storeDir, MarkerDir))
+      // error on an election store would otherwise select and cache
+      // RenameCommit, splitting the lock across two protocols.
+      def has(name: String) = try fs.exists(new Path(storeDir, name))
         catch { case _: java.io.FileNotFoundException => false }
-      if (hasMarkers) new MarkerCommit(fs, storeDir)
+      if (has(ElectionDir)) new MarkerCommit(fs, storeDir)
+      else if (has(LockFile)) new RenameCommit(fs, storeDir)
       else {
-        val hasPointer = try fs.exists(new Path(storeDir, PointerFile))
-          catch { case _: java.io.FileNotFoundException => false }
-        if (hasPointer) new RenameCommit(fs, conf, storeDir)
-        else {
-          val mode = sys.props.get("graft.store.commit")
-            .orElse(sys.env.get("GRAFT_STORE_COMMIT")).getOrElse("auto")
-          mode match {
-            case "rename" => new RenameCommit(fs, conf, storeDir)
-            case "marker" => new MarkerCommit(fs, storeDir)
-            case _ =>
-              val scheme = Option(new Path(canonical).toUri.getScheme)
-                .getOrElse("file")
-              if (ObjectSchemes(scheme)) new MarkerCommit(fs, storeDir)
-              else new RenameCommit(fs, conf, storeDir)
-          }
+        val mode = sys.props.get("graft.store.commit")
+          .orElse(sys.env.get("GRAFT_STORE_COMMIT")).getOrElse("auto")
+        mode match {
+          case "rename" => new RenameCommit(fs, storeDir)
+          case "marker" => new MarkerCommit(fs, storeDir)
+          case _ =>
+            val scheme = Option(new Path(canonical).toUri.getScheme)
+              .getOrElse("file")
+            if (ObjectSchemes(scheme)) new MarkerCommit(fs, storeDir)
+            else new RenameCommit(fs, storeDir)
         }
       }
     })
   }
 
-  /** Called by a protocol whose pointer read found NOTHING: if the
-    * store root is gone, or the root exists but now carries the OTHER
-    * protocol's layout (deleted and recreated under the same path in a
-    * long-lived JVM — ADVICE r18), drop the cached protocol so the next
-    * call re-resolves; the cross-layout case additionally throws, loud,
-    * because the caller's read ran against the WRONG protocol and must
-    * not be trusted. Costs two exists() round-trips, paid only on
-    * empty-pointer reads — never on the steady-state path.
-    */
-  private def relayoutCheck(fs: FileSystem, storeDir: String,
-      expectMarkers: Boolean): Unit = {
-    val mismatched =
-      try {
-        if (!fs.exists(new Path(storeDir))) {
-          resolved.remove(fs.makeQualified(new Path(storeDir)).toString)
-          false
-        } else {
-          val other = new Path(storeDir,
-            if (expectMarkers) PointerFile else MarkerDir)
-          val m = fs.exists(other)
-          if (m)
-            resolved.remove(fs.makeQualified(new Path(storeDir)).toString)
-          m
-        }
-      } catch { case _: Throwable => false } // probe failed — keep cache
-    if (mismatched)
-      throw new IllegalStateException(
-        s"store at $storeDir changed commit layout under a cached " +
-          "protocol (deleted and recreated?) — protocol re-resolved, " +
-          "retry the operation")
-  }
-
   /** Read a small control file fully. None ONLY for a file that is
-    * genuinely absent (raced release / pruned marker); any other
-    * filesystem failure PROPAGATES — swallowing a transient read error
-    * here would surface as "no pointer", and a writer would then
-    * commit a map missing every other bucket's generation (ADVICE r18:
-    * the pre-seam readState propagated read errors loudly, so must the
-    * seam).
+    * genuinely absent (raced release); any other filesystem failure
+    * PROPAGATES — swallowing a transient read error here would surface
+    * as "no lock" (ADVICE r18).
     */
   private def slurp(fs: FileSystem, p: Path,
       opTag: String = ""): Option[String] =
@@ -218,41 +157,12 @@ private[graft] object StoreCommit {
       finally in.close()
     } catch { case _: java.io.FileNotFoundException => None }
 
-  /** The rename-and-mtime implementation — the pre-seam mechanics,
-    * verbatim: correct wherever rename and exclusive create are atomic
-    * (local fs, HDFS). See [[KeyedUpsertSink]]'s class doc for the
-    * original rationale of each step.
+  /** The exclusive-create-and-mtime implementation: correct wherever
+    * rename and exclusive create are atomic (local fs, HDFS).
     */
   private final class RenameCommit(fs: FileSystem,
-      conf: org.apache.hadoop.conf.Configuration,
       storeDir: String) extends StoreCommitProtocol {
-    private val ptr = new Path(storeDir, PointerFile)
     private val lock = new Path(storeDir, LockFile)
-    // one FileContext per protocol instance, not per flip: constructing
-    // it re-resolves the AbstractFileSystem from the conf every time,
-    // ~25 ms/commit of pure overhead on the seam microbench — and the
-    // flip is on every upsert's control path
-    private lazy val fc =
-      org.apache.hadoop.fs.FileContext.getFileContext(ptr.toUri, conf)
-
-    def readPointer(): Option[String] = {
-      fsOp("rename.exists")
-      val r = if (!fs.exists(ptr)) None else slurp(fs, ptr, "rename.open")
-      if (r.isEmpty) relayoutCheck(fs, storeDir, expectMarkers = false)
-      r
-    }
-
-    def commitPointer(body: String): Unit = {
-      // temp + OVERWRITE rename: a truncating fs.create would leave an
-      // EMPTY pointer if the process died between truncate and write
-      val tmp = new Path(storeDir, s"$PointerFile.tmp")
-      fsOp("rename.create")
-      val out = fs.create(tmp, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-      fsOp("rename.rename")
-      fc.rename(fc.makeQualified(tmp), fc.makeQualified(ptr),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
 
     def tryAcquire(token: String, who: String): Boolean =
       try {
@@ -320,18 +230,6 @@ private[graft] object StoreCommit {
     * on S3/GCS/ABFS) — no rename, no exclusive create, no mtime update
     * on an existing object.
     *
-    * POINTER: `_CURRENT.d/p<seq>-<token>` files, write-once, body
-    * terminated by a `#end` sentinel line so a torn upload (possible on
-    * filesystems without atomic put, e.g. the local-fs test double) is
-    * distinguishable from a committed marker and ignored by readers.
-    * Readers take the highest-(seq, name) COMPLETE marker. Commit puts
-    * seq = max+1, then re-lists and throws if its own marker is not the
-    * winner at ≥ its seq — under the lease + fence that cannot happen;
-    * if fencing was somehow defeated the lost update turns LOUD (the
-    * batch aborts and re-delivers) instead of silent. Old markers are
-    * pruned with a one-commit grace window, mirroring the generation
-    * grace readers already rely on.
-    *
     * LOCK: `_LOCK.d/c<millis>-<token>` candidate files; the owner is
     * the lowest-named live candidate. Acquire = (list empty) → put own
     * candidate → re-list → own candidate is still the minimum (else
@@ -342,7 +240,7 @@ private[graft] object StoreCommit {
     * (winner decided before the loser's candidate became visible) is
     * microseconds wide and is closed where it matters by the FENCE:
     * [[ownerToken]] re-lists at fence time — seconds later — and the
-    * non-minimum writer aborts before its pointer commit. Heartbeat =
+    * non-minimum writer aborts before its snapshot commit. Heartbeat =
     * overwrite-put of `hb-<token>` (full-object PUT is atomic);
     * staleness = age of max(candidate, heartbeat). Takeover = delete of
     * the stale candidate + its heartbeat (idempotent; the post-delete
@@ -356,87 +254,16 @@ private[graft] object StoreCommit {
     */
   private final class MarkerCommit(fs: FileSystem,
       storeDir: String) extends StoreCommitProtocol {
-    private val markers = new Path(storeDir, MarkerDir)
     private val election = new Path(storeDir, ElectionDir)
-    private val Sentinel = "\n#end\n"
 
     private def listNames(dir: Path, prefix: String): Seq[String] = {
       // a missing dir is an empty listing; any OTHER failure propagates
-      // (a swallowed transient list error would read as "no markers" —
-      // the same silent-stale hazard slurp documents)
+      // (a swallowed transient list error would read as "no lock" — the
+      // same silent-stale hazard slurp documents)
       fsOp("marker.list")
       (try fs.listStatus(dir).toSeq
       catch { case _: java.io.FileNotFoundException => Seq.empty })
         .map(_.getPath.getName).filter(_.startsWith(prefix)).sorted
-    }
-
-    // --- pointer -----------------------------------------------------
-
-    private def seqOf(name: String): Long =
-      // toLongOption, not toLong: a malformed/overlong digit run in a
-      // foreign or torn file must read as "not a marker", never throw
-      name.stripPrefix("p").takeWhile(_.isDigit).toLongOption.getOrElse(-1L)
-
-    /** Complete (sentinel-terminated) markers, sorted by (seq, name). */
-    private def committed(): Seq[(String, String)] = {
-      var attempt = 0
-      while (true) {
-        val names = listNames(markers, "p")
-        val done = names.flatMap { n =>
-          StoreCommit.slurp(fs, new Path(markers, n), "marker.open") match {
-            case Some(body) if body.endsWith(Sentinel) =>
-              Some(n -> body.dropRight(Sentinel.length))
-            case _ => None // torn upload (or still in flight) — ignore
-          }
-        }.sortBy { case (n, _) => (seqOf(n), n) }
-        // every LISTED marker slurped to nothing: with the one-commit
-        // prune grace that needs the list-then-read window to span TWO
-        // peer commits — re-list (bounded) before concluding "never
-        // written", or an established store transiently reads as empty
-        // to pure readers (ADVICE r18). A genuinely empty/torn-only
-        // listing still returns empty after the bounded retries.
-        if (done.nonEmpty || names.isEmpty || attempt >= 2) return done
-        attempt += 1
-      }
-      Nil // unreachable
-    }
-
-    def readPointer(): Option[String] = {
-      val r = committed().lastOption.map(_._2)
-      if (r.isEmpty) relayoutCheck(fs, storeDir, expectMarkers = true)
-      r
-    }
-
-    def commitPointer(body: String): Unit = {
-      val prev = committed()
-      val seq = prev.lastOption.map(c => seqOf(c._1)).getOrElse(-1L) + 1L
-      val token = java.util.UUID.randomUUID().toString
-      val name = f"p$seq%020d-$token"
-      fs.mkdirs(markers)
-      fsOp("marker.create")
-      val out = fs.create(new Path(markers, name), false)
-      try out.write((body + Sentinel).getBytes("UTF-8")) finally out.close()
-      // read-back verify: under lease + fence nobody else can have
-      // written ≥ seq concurrently; if they did, abort loudly so the
-      // batch re-delivers rather than silently losing either commit
-      val winner = committed().lastOption.map(_._1)
-      if (!winner.contains(name))
-        throw new IllegalStateException(
-          s"pointer commit $name at $markers lost to ${winner.getOrElse("?")}" +
-            " — a concurrent writer defeated the lease; aborting so the" +
-            " batch re-delivers")
-      // prune with a ONE-COMMIT grace window (seq < current - 1): a
-      // reader that listed just before this commit still finds its
-      // marker for one more commit, the pointer-file analogue of the
-      // generation grace window. Torn markers below the new seq are
-      // unreadable by construction and go with them.
-      listNames(markers, "p")
-        .filter(n => seqOf(n) >= 0 && seqOf(n) < seq - 1)
-        .foreach { n =>
-          fsOp("marker.delete")
-          try fs.delete(new Path(markers, n), false)
-          catch { case _: Throwable => () }
-        }
     }
 
     // --- lock --------------------------------------------------------

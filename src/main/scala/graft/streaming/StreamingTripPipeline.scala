@@ -86,8 +86,12 @@ object StreamingTripPipeline {
   def completed(validated: DataFrame): DataFrame = {
     val events = validated
       .select(col("trip_id"), col("data_type"), EventTs.as("event_ts"),
-        struct(TripStore.StartAttrs.map(col): _*).as("start"),
-        struct(TripStore.EndAttrs.map(col): _*).as("end"))
+        // each event fills only its own side: the other side shuffles
+        // as a null, not as a struct of nulls
+        when(col("data_type") === "trip_start",
+          struct(TripStore.StartAttrs.map(col): _*)).as("start"),
+        when(col("data_type") === "trip_end",
+          struct(TripStore.EndAttrs.map(col): _*)).as("end"))
       .withWatermark("event_ts", delay(WatermarkTolerance))
     val sides = Seq("start", "end").map(events.schema(_).copy(nullable = true))
     val state = StructType(sides :+ StructField("newest_ms", LongType, nullable = false))

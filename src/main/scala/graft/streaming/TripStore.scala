@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.RawEventStore
 
 /** The reference's single DynamoDB trip table materialized on the
-  * bucketed upsert store: RAW items written at ingest
+  * keyed upsert store: RAW items written at ingest
   * (scripts/lambda1.py:50-60 — PK = trip_id, SK =
   * `RAW#{data_type}#{timestamp}`, status `raw`), COMPLETED items
   * written by the matcher (scripts/lambda2.py:79-87 — SK =
@@ -26,8 +26,9 @@ import graft.operators.RawEventStore
   * `utcnow()` (lambda2.py:135) — deterministic under replay, which a
   * wall clock is not.
   *
-  * 100 TB posture: per micro-batch the store pays O(touched buckets)
-  * (see [[graft.operators.KeyedUpsertSink]]); the item projections are
+  * 100 TB posture: per micro-batch the store writes one O(batch) delta
+  * and pays O(store) only at its periodic compaction (see
+  * [[graft.operators.KeyedUpsertSink]]); the item projections are
   * stateless maps over the matcher's output, whose keyed state is
   * already watermark-bounded, so the store adds no unbounded state of
   * its own.

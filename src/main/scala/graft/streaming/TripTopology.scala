@@ -44,26 +44,26 @@ import graft.sources.TripStreams
   * Writer coordination (r16 verdict item 3): the two hops run
   * GENUINELY CONCURRENTLY — the reference's actual runtime shape
   * (lambda1.py and lambda2.py write the same DynamoDB table in
-  * parallel; DynamoDB serializes the writes). [[KeyedUpsertSink]]
-  * provides the same serialization with its per-store writer lease
-  * (JVM monitor + `_LOCK` lease file around each
-  * read-merge-write-flip-prune section), and each hop writes under its
-  * own `writerId` ("ing"/"mat") so their independent micro-batch ids
-  * never collide on a generation directory. Row-level convergence
-  * under any interleaving comes from the versionWins merge: status
-  * rank is monotonic, so a raw re-put can never regress a matcher
-  * flip regardless of writer order. TopologySpec proves the golden
-  * final state with both writers live simultaneously (no ping-pong)
-  * and across kill-mid-backlog restarts. At warehouse scale the same
-  * two queries target a MERGE-capable keyed table (Delta/Iceberg),
-  * where the table format provides the lease.
+  * parallel). [[KeyedUpsertSink]] is merge-on-read: each hop lands
+  * every micro-batch as its own delta under its own `writerId`
+  * ("ing"/"mat"), so the hops never wait on each other and their
+  * independent micro-batch ids never collide. Row-level convergence
+  * under any interleaving comes from the versionWins fold at read time:
+  * status rank is monotonic, so a raw re-put can never regress a
+  * matcher flip regardless of writer order. Only the store's
+  * compaction (fired by an upsert every
+  * [[KeyedUpsertSink.CompactAfterDeltas]] deltas) takes the store
+  * lease. TopologySpec proves the golden final state with both writers
+  * live simultaneously (no ping-pong) and across kill-mid-backlog
+  * restarts. At warehouse scale the same two queries target a
+  * merge-on-read keyed table (Delta/Iceberg/Hudi MOR).
   *
-  * 100 TB posture: hop 1 is stateless maps + an O(touched-buckets)
-  * upsert; the change feed lists only NEW files per trigger (cost
-  * tracks write rate, not table size); hop 2's matcher keeps one
-  * watermark-bounded state row per in-flight trip, hash-partitioned by
-  * trip_id. Nothing in the
-  * composition scans the table.
+  * 100 TB posture: hop 1 is stateless maps + an O(batch) delta write;
+  * the change feed lists only NEW files per trigger (cost tracks write
+  * rate, not table size); hop 2's matcher keeps one watermark-bounded
+  * state row per in-flight trip, hash-partitioned by trip_id, and
+  * writes an O(batch) delta. Nothing in the composition scans the
+  * table except the periodic compaction.
   */
 object TripTopology {
 
@@ -83,8 +83,8 @@ object TripTopology {
     * crash-ordering spec (which wraps it to die BETWEEN the store
     * upsert and the change-log write — the one interleaving the
     * at-least-once contract note below leans on: the restart re-runs
-    * the same batch id, the upsert re-merges idempotently under
-    * versionWins, and the change log finally lands).
+    * the same batch id, the upsert rewrites the same delta, and the
+    * change log finally lands).
     */
   private[graft] def ingestBatch(batch: DataFrame, storeDir: String,
       changesDir: String, id: Long,

@@ -93,26 +93,6 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
       Set(1L, 2L, 3L, 101L, 102L, 103L, 104L))
   }
 
-  test("legacy index-less store stays on the full-scan path (no partial index)") {
-    val dir = java.nio.file.Files.createTempDirectory("sigstore4").toString
-    // a legacy store: signatures upserted directly to the sig store with
-    // NO band index (the pre-index layout)
-    graft.operators.KeyedUpsertSink.upsertBatch(
-      Dedup.minHashSignatures(corpus)
-        .select(col("id"), col("sig"), lit(0L).as("batch_id")),
-      dir, Seq("id"), "batch_id", 0L)
-    assert(!new java.io.File(s"$dir/blog").exists())
-    // ingest against it: must take the full-scan path AND must NOT start
-    // a partial index (readers would silently miss the unindexed prefix)
-    val incr = pairSet(IncrementalDedup.ingestBatch(batch, dir, batchId = 1L))
-    assert(!new java.io.File(s"$dir/blog").exists() &&
-      !new java.io.File(s"$dir/slog").exists(),
-      "a legacy store must never grow a partial band index")
-    val full = pairSet(Dedup.minHashLshPairs(corpus.unionByName(batch)))
-    val corpusSelf = pairSet(Dedup.minHashLshPairs(corpus))
-    assert(corpusSelf.union(incr) === full)
-  }
-
   test("compactStores re-buckets both stores; indexed ingest still exact") {
     val dir = java.nio.file.Files.createTempDirectory("sigstore5").toString
     IncrementalDedup.ingestBatch(corpus, dir, batchId = 0L)

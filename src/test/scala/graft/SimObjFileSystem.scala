@@ -6,18 +6,18 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.hadoop.fs.{FileUtil, Path, RawLocalFileSystem}
 
-/** A SIMULATED OBJECT STORE for the commit-seam specs: local storage
+/** A SIMULATED OBJECT STORE for the keyed-store specs: local storage
   * under an `simobj://` scheme whose `rename` is what S3/GCS actually
   * give you — a COPY followed by a DELETE, with an injectable crash
   * between (or during) the two. Everything else delegates to the local
   * filesystem, which is strictly KINDER than a real object store
   * (exclusive create is check-then-act here too, but mtimes work), so
   * a protocol that survives this fs's rename torn in half AND never
-  * relies on rename for its pointer/lock is object-store-shaped where
-  * it matters: the atomicity of publish.
+  * relies on rename for its lock or its commits is object-store-shaped
+  * where it matters: the atomicity of publish.
   *
   * Every rename is also RECORDED (source path), so a spec can assert
-  * the marker protocol literally never renames a control path — the
+  * the election lock literally never renames a control path — the
   * non-atomic primitive is not merely survived but avoided.
   */
 class SimObjFileSystem extends RawLocalFileSystem {

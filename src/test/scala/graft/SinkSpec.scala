@@ -136,8 +136,8 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
   test("S4 keyed upsert: re-delivered batch leaves store content identical; put overwrites") {
     val dir = tmp() + "/upsert"
     val keys = Seq("trip_id", "sk")
-    def snap(): Seq[(String, String, String, Double)] =
-      KeyedUpsertSink.readStore(spark, dir).get
+    def snap(d: String): Seq[(String, String, String, Double)] =
+      KeyedUpsertSink.readStore(spark, d).get
         .select("trip_id", "sk", "ts", "value")
         .as[(String, String, String, Double)].collect().toSeq.sorted
     val b1 = Seq(
@@ -146,34 +146,69 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
       ("t2", "RAW#view#1", "2024-05-25 10:01:00", 6.0)
     ).toDF("trip_id", "sk", "ts", "value")
     KeyedUpsertSink.upsertBatch(b1, dir, keys, "ts", batchId = 0L)
-    val s1 = snap()
+    val s1 = snap(dir)
     assert(s1.length === 2, "in-batch duplicate keys collapse (last put wins)")
     assert(s1.find(_._1 == "t1").get._4 === 5.5)
 
     // the at-least-once case: the SAME batch re-delivered (even under a
     // new batch id) must leave the store content identical
     KeyedUpsertSink.upsertBatch(b1, dir, keys, "ts", batchId = 1L)
-    assert(snap() === s1, "re-delivery duplicated or reordered the store")
+    assert(snap(dir) === s1, "re-delivery duplicated or reordered the store")
 
     // put-overwrite: a later batch replaces the keyed row outright
     val b2 = Seq(("t1", "RAW#click#1", "2024-05-25 11:00:00", 9.0))
       .toDF("trip_id", "sk", "ts", "value")
     KeyedUpsertSink.upsertBatch(b2, dir, keys, "ts", batchId = 2L)
-    val s2 = snap()
+    val s2 = snap(dir)
     assert(s2.length === 2)
     assert(s2.find(_._1 == "t1").get._4 === 9.0)
 
-    // versionWins: a STALE replay cannot regress the newer stored row
-    KeyedUpsertSink.upsertBatch(b1, dir, keys, "ts", batchId = 3L,
+    // versionWins is pinned per store, so its half runs on its own
+    // store holding the same content
+    val vdir = tmp() + "/upsert_vw"
+    KeyedUpsertSink.upsertBatch(b1, vdir, keys, "ts", batchId = 0L,
       versionWins = true)
-    assert(snap() === s2, "stale replay regressed a newer row under versionWins")
+    KeyedUpsertSink.upsertBatch(b2, vdir, keys, "ts", batchId = 2L,
+      versionWins = true)
+    assert(snap(vdir) === s2)
 
-    // crash-after-pointer-flip shape: the SAME batch id re-runs while the
-    // pointer already names its generation; the merge must not overwrite
-    // the files it is reading (alternating generation suffix)
-    KeyedUpsertSink.upsertBatch(b1, dir, keys, "ts", batchId = 3L,
+    // versionWins: a STALE replay cannot regress the newer stored row
+    KeyedUpsertSink.upsertBatch(b1, vdir, keys, "ts", batchId = 3L,
       versionWins = true)
-    assert(snap() === s2, "same-batch-id re-run corrupted the store")
+    assert(snap(vdir) === s2, "stale replay regressed a newer row under versionWins")
+
+    // crash-after-write shape: the SAME batch id re-runs after its delta
+    // landed; it rewrites that delta and the content holds
+    KeyedUpsertSink.upsertBatch(b1, vdir, keys, "ts", batchId = 3L,
+      versionWins = true)
+    assert(snap(vdir) === s2, "same-batch-id re-run corrupted the store")
+  }
+
+  test("S4 pin: keys, orderCol, versionWins and bucketCols are fixed by the first upsert") {
+    val dir = tmp() + "/pinned"
+    val b = Seq(("t1", "RAW#1", "2024-05-25 10:00:00", 1.0))
+      .toDF("trip_id", "sk", "ts", "value")
+    KeyedUpsertSink.upsertBatch(b, dir, Seq("trip_id", "sk"), "ts", 0L,
+      versionWins = true, bucketCols = Seq("trip_id"))
+    // the same pin (bucketCols may be left to the pinned value) lands
+    KeyedUpsertSink.upsertBatch(b, dir, Seq("trip_id", "sk"), "ts", 1L,
+      versionWins = true)
+    def conflict(keys: Seq[String], orderCol: String, vw: Boolean,
+        bucketCols: Seq[String]): Unit = {
+      val e = intercept[IllegalArgumentException] {
+        KeyedUpsertSink.upsertBatch(b, dir, keys, orderCol, 2L, vw,
+          bucketCols = bucketCols)
+      }
+      assert(e.getMessage.contains("bucketed by"), e.getMessage)
+    }
+    conflict(Seq("trip_id"), "ts", vw = true, Seq.empty)
+    conflict(Seq("trip_id", "sk"), "value", vw = true, Seq.empty)
+    conflict(Seq("trip_id", "sk"), "ts", vw = false, Seq.empty)
+    conflict(Seq("trip_id", "sk"), "ts", vw = true, Seq("sk"))
+    // no conflicting upsert landed a delta
+    assert(KeyedUpsertSink.readStore(spark, dir).get.count() === 1L)
+    assert(new java.io.File(dir, "delta").list().toSet ===
+      Set("batch=0", "batch=1"))
   }
 
   test("S4 merge null-orderCol pin: nulls rank below every value (desc NULLS LAST)") {
@@ -209,147 +244,119 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("S4 bucketed upsert: untouched buckets stay byte-identical; only touched buckets rewrite") {
-    import java.security.MessageDigest
-    val dir = tmp() + "/bucketed"
+  test("S4 upsert writes one delta: bytes per upsert stay flat while the store grows 10x") {
+    val dir = tmp() + "/flat"
     val keys = Seq("trip_id", "sk")
-    val n = 8
-    // seed rows spread across many buckets
-    val b1 = (0 until 64).map(i => (s"t$i", s"RAW#e$i", f"2024-05-25 10:00:$i%02d", i.toDouble))
-      .toDF("trip_id", "sk", "ts", "value")
-    KeyedUpsertSink.upsertBatch(b1, dir, keys, "ts", batchId = 0L, numBuckets = n)
-
-    val st1 = KeyedUpsertSink.readState(spark, dir).get
-    assert(st1.numBuckets === n)
-    assert(st1.gens.values.toSet === Set("gen-0"), "all buckets written by the seed batch")
-
-    // one-key update batch → exactly one touched bucket
-    val hot = Seq(("t7", "RAW#e7", "2024-05-25 12:00:00", 99.0))
-      .toDF("trip_id", "sk", "ts", "value")
-    val hotBucket = hot.select(KeyedUpsertSink.bucketExpr(keys, n)).head().getInt(0)
-
-    // fingerprint every file of every NON-hot bucket before the upsert
+    def rows(from: Int, n: Int, v: Double) = spark.range(from, from + n)
+      .select(concat(lit("t"), col("id")).as("trip_id"),
+        concat(lit("RAW#e"), col("id")).as("sk"),
+        lit("2024-05-25 10:00:00").as("ts"), lit(v).as("value"))
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    def md5(p: org.apache.hadoop.fs.Path): String = {
-      val in = fs.open(p)
-      val bytes = try {
-        val out = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, out, 64 * 1024, false)
-        out.toByteArray
-      } finally in.close()
-      MessageDigest.getInstance("MD5").digest(bytes).map("%02x".format(_)).mkString
+    def files(): Map[String, Long] = {
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
+      val out = Map.newBuilder[String, Long]
+      while (it.hasNext) { val f = it.next(); out += f.getPath.toString -> f.getLen }
+      out.result()
     }
-    def bucketFiles(gen: String, b: Int): Map[String, (Long, String)] =
-      fs.listStatus(new org.apache.hadoop.fs.Path(dir, s"$gen/bucket=$b"))
-        .filter(_.isFile).filterNot(_.getPath.getName.startsWith("_"))
-        .map(s => s.getPath.toString -> (s.getModificationTime, md5(s.getPath))).toMap
-    val coldBuckets = st1.gens.keySet - hotBucket
-    val before = coldBuckets.map(b => b -> bucketFiles(st1.gens(b), b)).toMap
-
-    KeyedUpsertSink.upsertBatch(hot, dir, keys, "ts", batchId = 1L, numBuckets = n)
-
-    val st2 = KeyedUpsertSink.readState(spark, dir).get
-    assert(st2.gens(hotBucket) === "gen-1", "touched bucket advanced to the new generation")
-    coldBuckets.foreach { b =>
-      assert(st2.gens(b) === st1.gens(b), s"untouched bucket $b pointer moved")
-      assert(bucketFiles(st2.gens(b), b) === before(b),
-        s"untouched bucket $b files changed (path, mtime, or bytes)")
+    // bytes of the files one upsert adds, whatever layout it writes
+    def written(body: => Unit): Long = {
+      val before = files()
+      body
+      (files() -- before.keySet).values.sum
     }
-    // content is still the merged whole
+    // the same 50-key update batch against a 1x and a 10x store, each
+    // folded into a snapshot first so the batch lands on a grown store
+    val probe = rows(0, 50, 1.0).coalesce(1)
+    KeyedUpsertSink.upsertBatch(rows(0, 2000, 0.0), dir, keys, "ts", 0L)
+    KeyedUpsertSink.compact(spark, dir, keys)
+    val small = written(KeyedUpsertSink.upsertBatch(probe, dir, keys, "ts", 1L))
+    KeyedUpsertSink.upsertBatch(rows(2000, 18000, 0.0), dir, keys, "ts", 2L)
+    KeyedUpsertSink.compact(spark, dir, keys)
+    val big = written(KeyedUpsertSink.upsertBatch(probe, dir, keys, "ts", 3L))
+    assert(small > 0L)
+    assert(big <= small * 3 / 2,
+      s"an upsert wrote $small bytes at 2k rows but $big bytes at 20k rows")
     val stored = KeyedUpsertSink.readStore(spark, dir).get
-    assert(stored.count() === 64)
-    assert(stored.filter(col("trip_id") === "t7").select("value").as[Double].head() === 99.0)
-
-    // a second touch of the hot bucket prunes gen-1's copy only after
-    // the grace window: gen-0's copy of the hot bucket is gone now
-    KeyedUpsertSink.upsertBatch(hot.withColumn("value", lit(100.0)), dir, keys,
-      "ts", batchId = 2L, numBuckets = n)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, s"gen-0/bucket=$hotBucket")),
-      "superseded-twice bucket copy should be pruned")
-    assert(fs.exists(new org.apache.hadoop.fs.Path(dir, s"gen-1/bucket=$hotBucket")),
-      "one-generation grace window keeps the previous copy")
-    coldBuckets.foreach { b =>
-      assert(bucketFiles("gen-0", b) === before(b), "cold buckets still untouched after two upserts")
-    }
+    assert(stored.count() === 20000L)
+    assert(stored.filter(col("value") === 1.0).count() === 50L)
   }
 
   test("S4 long-lived store: storage stays bounded over many batches (generation GC)") {
-    // 20 consecutive upserts all hammering the same few keys — the
-    // linear-leak shape if superseded generations were never pruned.
-    // Bound: each bucket keeps at most its current copy + the
-    // one-generation grace copy, and empty generation dirs are removed,
-    // so total bucket-dir copies <= 2 * numBuckets and live generation
-    // dirs <= numBuckets + 1 regardless of batch count.
+    // 70 consecutive upserts all hammering the same few keys — the
+    // linear-leak shape if folded deltas were never deleted. The
+    // upserts compact by themselves every CompactAfterDeltas deltas,
+    // and a compaction deletes what the previous snapshot folded, so
+    // at most two rounds of deltas and two snapshots stay on disk
+    // regardless of batch count.
     val dir = tmp() + "/longlived"
     val keys = Seq("trip_id", "sk")
-    val n = 4
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    for (b <- 0 until 20) {
+    for (b <- 0 until 70) {
       val batch = (0 until 8).map(i =>
         (s"t$i", s"RAW#e$i", f"2024-05-25 10:$b%02d:$i%02d", b * 100.0 + i))
         .toDF("trip_id", "sk", "ts", "value")
-      KeyedUpsertSink.upsertBatch(batch, dir, keys, "ts", batchId = b.toLong,
-        numBuckets = n)
+      KeyedUpsertSink.upsertBatch(batch, dir, keys, "ts", batchId = b.toLong)
     }
-    val genDirs = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen-"))
-    val bucketCopies = genDirs.flatMap(g => fs.listStatus(g.getPath)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket=")))
-    assert(bucketCopies.length <= 2 * n,
-      s"bucket-dir copies must stay bounded (<= ${2 * n}), found ${bucketCopies.length}")
-    assert(genDirs.length <= n + 1,
-      s"generation dirs must stay bounded (<= ${n + 1}), found ${genDirs.length}")
+    def dirs(sub: String) = fs.listStatus(new org.apache.hadoop.fs.Path(dir, sub))
+      .filter(_.isDirectory)
+    val bound = 2 * KeyedUpsertSink.CompactAfterDeltas
+    assert(dirs("delta").length <= bound,
+      s"delta dirs must stay bounded (<= $bound), found ${dirs("delta").length}")
+    assert(dirs("base").length <= 2,
+      s"snapshot dirs must stay bounded (<= 2), found ${dirs("base").length}")
+    assert(graft.operators.DeltaLog.unfoldedDeltas(spark, dir) <
+      KeyedUpsertSink.CompactAfterDeltas)
     // and the content is the last batch's, intact
     val stored = KeyedUpsertSink.readStore(spark, dir).get
     assert(stored.count() === 8)
-    assert(stored.agg(min(col("value"))).as[Double].head() >= 1900.0,
+    assert(stored.agg(min(col("value"))).as[Double].head() >= 6900.0,
       "store must hold the final batch's values")
   }
 
   test("S4 compact: one live generation, content identical, pre-compact reader survives") {
+    import graft.operators.DeltaLog
     val dir = tmp() + "/compacted"
     val keys = Seq("trip_id", "sk")
-    val n = 4
     for (b <- 0 until 6) {
       val batch = (0 until 12).map(i =>
         (s"t${(b * 5 + i) % 20}", s"RAW#e$i", f"2024-05-25 10:$b%02d:$i%02d", b * 100.0 + i))
         .toDF("trip_id", "sk", "ts", "value")
-      KeyedUpsertSink.upsertBatch(batch, dir, keys, "ts", batchId = b.toLong,
-        numBuckets = n)
+      KeyedUpsertSink.upsertBatch(batch, dir, keys, "ts", batchId = b.toLong)
     }
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     def rows() = KeyedUpsertSink.readStore(spark, dir).get
       .select("trip_id", "sk", "ts", "value")
       .as[(String, String, String, Double)].collect().sorted.toSeq
+    def names(sub: String) = Option(new java.io.File(dir, sub).list())
+      .map(_.filterNot(_.endsWith(".marks")).toSet).getOrElse(Set.empty)
     val before = rows()
     val preCompactReader = KeyedUpsertSink.readStore(spark, dir).get // lazy
 
     KeyedUpsertSink.compact(spark, dir, keys)
 
-    val st = KeyedUpsertSink.readState(spark, dir).get
-    assert(st.gens.values.toSet === Set("gen-compact"),
-      "every bucket pointer must name the compacted generation")
+    assert(names("base") === Set("upto=5") &&
+      DeltaLog.unfoldedDeltas(spark, dir) === 0,
+      "the store must read one snapshot that folded every delta")
     assert(rows() === before, "compaction must not change content")
     assert(preCompactReader.count() === before.size,
       "a reader resolved before compact keeps its grace window")
 
-    // the next upsert reclaims every pre-compact generation entirely
+    // the next compaction reclaims every delta the first one folded
     val extra = Seq(("t0", "RAW#e0", "2024-05-25 23:00:00", 9999.0))
       .toDF("trip_id", "sk", "ts", "value")
-    KeyedUpsertSink.upsertBatch(extra, dir, keys, "ts", batchId = 99L, numBuckets = n)
-    val remaining = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen-"))
-      .map(_.getPath.getName).toSet
-    assert(remaining.subsetOf(Set("gen-compact", "gen-99")),
-      s"pre-compact generations must be reclaimed, found $remaining")
+    KeyedUpsertSink.upsertBatch(extra, dir, keys, "ts", batchId = 99L)
+    KeyedUpsertSink.compact(spark, dir, keys)
+    assert(names("delta") === Set("batch=99"),
+      s"pre-compact deltas must be reclaimed, found ${names("delta")}")
     assert(rows().size === before.size)
 
-    // compacting again picks a fresh name and stays identical
+    // compacting again with nothing new is a no-op and stays identical
+    val settled = rows()
     KeyedUpsertSink.compact(spark, dir, keys)
-    assert(KeyedUpsertSink.readState(spark, dir).get.gens.values.toSet.size === 1)
+    assert(names("base") === Set("upto=5", "upto=99"))
+    assert(DeltaLog.unfoldedDeltas(spark, dir) === 0)
+    assert(rows() === settled)
     assert(rows().map(r => (r._1, r._2)).toSet === before.map(r => (r._1, r._2)).toSet)
   }
 

@@ -5,16 +5,17 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.KeyedUpsertSink
+import graft.operators.{DeltaLog, KeyedUpsertSink}
+import graft.streaming.TripStore
 
-/** The writer-lease protocol behind [[KeyedUpsertSink]]'s concurrent-
-  * writer support (r16 verdict item 3), pinned at the unit level —
-  * TopologySpec proves the composed two-hop topology under the lease;
-  * this spec proves the lease mechanics themselves through the public
-  * API: mutual exclusion of racing writers, stale-lease takeover (the
-  * crashed-writer case), the wait-cap error (the wedged-peer case),
-  * writer-id generation namespacing, and reclamation of a crashed
-  * writer's unflipped generation.
+/** Concurrent writers and the compaction lease behind
+  * [[KeyedUpsertSink]], pinned at the unit level through the public API.
+  * Writers land deltas without a lock; the lease serializes compactions
+  * only. TopologySpec proves the composed two-hop topology; this spec
+  * proves convergence of racing writers and compactions, and the lease
+  * mechanics themselves: stale-lease takeover (the crashed-compactor
+  * case), the wait-cap error (the wedged-peer case), the heartbeat, the
+  * fence, and writer-id delta namespacing.
   */
 class StoreLeaseSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -22,47 +23,82 @@ class StoreLeaseSpec extends AnyFunSuite with SparkTestBase {
   private def freshDir() =
     Files.createTempDirectory("graft-lease").toString
 
+  private def seed(dir: String): Unit =
+    KeyedUpsertSink.upsertBatch(Seq(("k0", 0L)).toDF("k", "ts"), dir,
+      Seq("k"), "ts", 0L)
+
   test("racing writers with distinct writerIds both land; store converges row-level") {
+    // the two-hop shape: an ingest writer puts RAW items (rank 0), a
+    // matcher writer puts processed items (rank 1) for the same keys —
+    // sometimes before their RAW put lands — and a third thread
+    // compacts over and over while both write
     val dir = freshDir()
-    val mk = (k: String, v: Long) =>
-      Seq((k, v)).toDF("k", "ts")
-    // two writers, each hammering the same store from its own thread
-    // with its OWN keys and batch ids — the lease must serialize the
-    // read-merge-write-flip-prune sections so no flip is lost
+    val trips = 48
+    def item(t: Int, rank: Long, batch: Int) =
+      (f"t$t%03d", "RAW#trip_start", if (rank == 0L) "raw" else "processed_by_matcher",
+        rank, if (rank == 0L) null else f"2024-05-25 10:$batch%02d:00", t * 10.0 + rank)
+    val ingBatches = (0 until 8).map(b => (b * 6 until b * 6 + 6).map(item(_, 0L, b)))
+    // the matcher trails ingest by one batch, except batch 0 which runs
+    // AHEAD (the out-of-order put the versionWins fold must absorb)
+    val matBatches = (0 until 8).map(b =>
+      (if (b == 0) (42 until 48) else ((b - 1) * 6 until b * 6)).map(item(_, 1L, b)))
+    def df(rows: Seq[(String, String, String, Long, String, Double)]) =
+      rows.toDF("trip_id", "sk", "status", "status_rank", "processed_at", "v")
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = Seq("a", "b").map { w =>
+    val writing = new java.util.concurrent.atomic.AtomicInteger(2)
+    def writer(w: String, batches: Seq[Seq[(String, String, String, Long, String, Double)]]) =
       new Thread(() => {
-        try {
-          (0 until 6).foreach { i =>
-            KeyedUpsertSink.upsertBatch(mk(s"$w$i", i.toLong), dir,
-              Seq("k"), "ts", i.toLong, versionWins = true, writerId = w)
-          }
+        try batches.zipWithIndex.foreach { case (b, i) =>
+          KeyedUpsertSink.upsertBatch(df(b), dir, TripStore.Keys,
+            TripStore.OrderCol, i.toLong, versionWins = true, writerId = w)
         } catch { case t: Throwable => errs.add(t) }
+        finally writing.decrementAndGet()
       })
-    }
+    val compactor = new Thread(() => {
+      try while (writing.get() > 0) {
+        if (new java.io.File(dir, "_PARAMS").exists())
+          KeyedUpsertSink.compact(spark, dir, TripStore.Keys)
+        Thread.sleep(50)
+      } catch { case t: Throwable => errs.add(t) }
+    })
+    val threads = Seq(writer("ing", ingBatches), writer("mat", matBatches), compactor)
     threads.foreach(_.start())
-    threads.foreach(_.join(120000))
+    threads.foreach(_.join(300000))
     assert(errs.isEmpty, s"writer threads failed: ${errs.peek()}")
-    val store = KeyedUpsertSink.readStore(spark, dir).get
-    // every write from both writers survived — a lost pointer-map
-    // update (the unserialized read-modify-write race) would drop keys
-    assert(store.count() === 12L)
-    assert(store.select("k").as[String].collect().toSet ===
-      (0 until 6).flatMap(i => Seq(s"a$i", s"b$i")).toSet)
+    assert(new java.io.File(dir, "base").exists(),
+      "no compaction committed while the writers ran")
+    val all = df((ingBatches ++ matBatches).flatten)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select("trip_id", "sk", "status", "status_rank", "processed_at", "v")
+        .as[(String, String, String, Long, String, Double)].collect().toSet
+    val want = rows(TripStore.finalState(all))
+    assert(want.size === trips)
+    assert(rows(KeyedUpsertSink.readStore(spark, dir).get) === want,
+      "a racing write or compaction lost or regressed a row")
+    // at-least-once re-delivery of batches a snapshot already folded
+    // rewrites their deltas; readers skip them, and the content holds
+    Seq(2, 5).foreach(i => KeyedUpsertSink.upsertBatch(df(ingBatches(i)),
+      dir, TripStore.Keys, TripStore.OrderCol, i.toLong, versionWins = true,
+      writerId = "ing"))
+    assert(rows(KeyedUpsertSink.readStore(spark, dir).get) === want)
+    // and once more after a final compaction folds everything
+    KeyedUpsertSink.compact(spark, dir, TripStore.Keys)
+    assert(DeltaLog.unfoldedDeltas(spark, dir) === 0)
+    assert(rows(KeyedUpsertSink.readStore(spark, dir).get) === want)
   }
 
   test("a stale lease (crashed writer) is taken over, not deadlocked") {
     val dir = freshDir()
-    Files.createDirectories(Paths.get(dir))
+    seed(dir)
     val lock = Paths.get(dir, "_LOCK")
     Files.write(lock, "dead-token\ncrashed-writer\n0".getBytes("UTF-8"))
     // age the lock past the lease window
     Files.setLastModifiedTime(lock,
       java.nio.file.attribute.FileTime.fromMillis(
         System.currentTimeMillis() - 24 * 3600 * 1000L))
-    // a live writer must take the expired lease over and proceed
-    KeyedUpsertSink.upsertBatch(Seq(("k1", 1L)).toDF("k", "ts"), dir,
-      Seq("k"), "ts", 0L)
+    // a live compactor must take the expired lease over and proceed
+    KeyedUpsertSink.compact(spark, dir, Seq("k"))
+    assert(DeltaLog.unfoldedDeltas(spark, dir) === 0)
     assert(KeyedUpsertSink.readStore(spark, dir).get.count() === 1L)
     // the crashed writer's lock did not survive its takeover
     assert(!Files.exists(lock) ||
@@ -71,15 +107,14 @@ class StoreLeaseSpec extends AnyFunSuite with SparkTestBase {
 
   test("a live peer's lock makes acquisition fail loudly after the wait cap") {
     val dir = freshDir()
-    Files.createDirectories(Paths.get(dir))
+    seed(dir)
     val lock = Paths.get(dir, "_LOCK")
     Files.write(lock, s"live-token\npeer\n${System.currentTimeMillis()}"
       .getBytes("UTF-8"))
     val oldWait = sys.props.put("graft.store.lock.wait.ms", "300")
     try {
       val e = intercept[IllegalStateException] {
-        KeyedUpsertSink.upsertBatch(Seq(("k1", 1L)).toDF("k", "ts"), dir,
-          Seq("k"), "ts", 0L)
+        KeyedUpsertSink.compact(spark, dir, Seq("k"))
       }
       assert(e.getMessage.contains("store lock"))
     } finally oldWait match {
@@ -89,32 +124,31 @@ class StoreLeaseSpec extends AnyFunSuite with SparkTestBase {
     // the failed acquisition must not have dented the peer's lock
     assert(new String(Files.readAllBytes(lock), "UTF-8")
       .startsWith("live-token"))
+    // and a writer never waits on the lease: upserts still land
+    KeyedUpsertSink.upsertBatch(Seq(("k1", 1L)).toDF("k", "ts"), dir,
+      Seq("k"), "ts", 1L)
+    assert(KeyedUpsertSink.readStore(spark, dir).get.count() === 2L)
   }
 
   test("a long critical section outlives the lease via the heartbeat (no takeover window)") {
     val dir = freshDir()
+    seed(dir)
     val lock = Paths.get(dir, "_LOCK")
     val oldLease = sys.props.put("graft.store.lease.ms", "600")
+    // a compaction whose locked section spans several lease periods
+    KeyedUpsertSink.preCommitHold = () => Thread.sleep(2000)
     try {
-      // an upsert whose in-lock evaluation takes several lease periods:
-      // a per-row sleeping udf on a single partition (test-only)
-      val slow = org.apache.spark.sql.functions.udf { (s: String) =>
-        Thread.sleep(25); s
-      }
-      val batch = spark.range(0, 100, 1, 1)
-        .selectExpr("cast(id as string) as k", "id as ts")
-        .withColumn("k", slow(org.apache.spark.sql.functions.col("k")))
       val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      val writer = new Thread(() => {
-        try KeyedUpsertSink.upsertBatch(batch, dir, Seq("k"), "ts", 0L)
+      val compactor = new Thread(() => {
+        try KeyedUpsertSink.compact(spark, dir, Seq("k"))
         catch { case t: Throwable => errs.add(t) }
       })
-      writer.start()
+      compactor.start()
       // watch the lock while the body runs: the heartbeat must keep its
       // observed age well under the 600 ms lease at every sample, or a
       // cross-process peer would be entitled to take it over mid-write
       var maxAge = 0L
-      while (writer.isAlive) {
+      while (compactor.isAlive) {
         if (Files.exists(lock)) {
           val age = System.currentTimeMillis() -
             Files.getLastModifiedTime(lock).toMillis
@@ -122,15 +156,18 @@ class StoreLeaseSpec extends AnyFunSuite with SparkTestBase {
         }
         Thread.sleep(40)
       }
-      writer.join()
-      assert(errs.isEmpty, s"writer failed: ${errs.peek()}")
+      compactor.join()
+      assert(errs.isEmpty, s"compactor failed: ${errs.peek()}")
       assert(maxAge < 600L,
         s"lock aged ${maxAge}ms past a heartbeat period — a peer could take over")
-      assert(KeyedUpsertSink.readStore(spark, dir).get.count() === 100L)
+      assert(DeltaLog.unfoldedDeltas(spark, dir) === 0)
       assert(!Files.exists(lock), "lease must be released after the body")
-    } finally oldLease match {
-      case Some(v) => sys.props.put("graft.store.lease.ms", v)
-      case None => sys.props.remove("graft.store.lease.ms")
+    } finally {
+      KeyedUpsertSink.preCommitHold = () => ()
+      oldLease match {
+        case Some(v) => sys.props.put("graft.store.lease.ms", v)
+        case None => sys.props.remove("graft.store.lease.ms")
+      }
     }
   }
 
@@ -140,35 +177,35 @@ class StoreLeaseSpec extends AnyFunSuite with SparkTestBase {
       Seq("k"), "ts", batchId = 3L, writerId = "ing")
     KeyedUpsertSink.upsertBatch(Seq(("b", 1L)).toDF("k", "ts"), dir,
       Seq("k"), "ts", batchId = 3L, writerId = "mat")
-    val gens = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("gen-"))
-      .map(_.getName).toSet
-    assert(gens === Set("gen-ing-3", "gen-mat-3"),
-      s"expected per-writer generation dirs, got $gens")
+    val deltas = new java.io.File(dir, "delta").listFiles()
+      .filter(_.isDirectory).map(_.getName).toSet
+    assert(deltas === Set("ing=3", "mat=3"),
+      s"expected per-writer delta dirs, got $deltas")
+    assert(KeyedUpsertSink.readStore(spark, dir).get.count() === 2L)
+    // a compaction records both writers' marks
+    KeyedUpsertSink.compact(spark, dir, Seq("k"))
+    assert(DeltaLog.unfoldedDeltas(spark, dir) === 0)
     assert(KeyedUpsertSink.readStore(spark, dir).get.count() === 2L)
   }
 
   test("fence: a writer whose lease was taken over aborts before the flip") {
     val dir = freshDir()
     val lock = Paths.get(dir, "_LOCK")
-    // seed the store so the victim writer has a pointer it WOULD flip
-    KeyedUpsertSink.upsertBatch(Seq(("k0", 0L)).toDF("k", "ts"), dir,
-      Seq("k"), "ts", 0L)
-    val ptrBefore = new String(
-      Files.readAllBytes(Paths.get(dir, "_CURRENT")), "UTF-8")
-    KeyedUpsertSink.preFlipHold = () => Thread.sleep(800)
+    seed(dir)
+    KeyedUpsertSink.upsertBatch(Seq(("k1", 1L)).toDF("k", "ts"), dir,
+      Seq("k"), "ts", 1L)
+    KeyedUpsertSink.preCommitHold = () => Thread.sleep(800)
     try {
       val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      val writer = new Thread(() => {
-        try KeyedUpsertSink.upsertBatch(Seq(("k1", 1L)).toDF("k", "ts"),
-          dir, Seq("k"), "ts", 1L)
+      val compactor = new Thread(() => {
+        try KeyedUpsertSink.compact(spark, dir, Seq("k"))
         catch { case t: Throwable => errs.add(t) }
       })
-      writer.start()
-      // while the victim holds the section open at the seam, simulate a
-      // takeover: replace its lock with a foreign owner's. Wait for the
-      // victim's OWN lock first (it creates it at acquisition) so the
-      // overwrite can't race ahead of the acquire.
+      compactor.start()
+      // while the victim holds the section open, simulate a takeover:
+      // replace its lock with a foreign owner's. Wait for the victim's
+      // OWN lock first (it creates it at acquisition) so the overwrite
+      // can't race ahead of the acquire.
       val t0 = System.nanoTime()
       while (!Files.exists(lock) && (System.nanoTime() - t0) / 1e9 < 20)
         Thread.sleep(10)
@@ -177,48 +214,27 @@ class StoreLeaseSpec extends AnyFunSuite with SparkTestBase {
       Files.write(lock,
         s"usurper-token\nusurper\n${System.currentTimeMillis()}"
           .getBytes("UTF-8"))
-      writer.join(30000)
-      assert(!writer.isAlive, "victim writer hung")
+      compactor.join(30000)
+      assert(!compactor.isAlive, "victim compactor hung")
       assert(errs.size() === 1, "victim must abort once the lease is lost")
       assert(errs.peek().getMessage.contains("lost mid-section"),
         s"wrong failure: ${errs.peek().getMessage}")
-      // the flip never happened: pointer content is byte-identical and
-      // the store still reads the seed row only
-      val ptrAfter = new String(
-        Files.readAllBytes(Paths.get(dir, "_CURRENT")), "UTF-8")
-      assert(ptrAfter === ptrBefore, "dispossessed writer flipped the pointer")
-      assert(KeyedUpsertSink.readStore(spark, dir).get.count() === 1L)
+      // no snapshot committed: both deltas are still the store
+      assert(!new java.io.File(dir, "base").exists(),
+        "dispossessed compactor committed a snapshot")
+      assert(DeltaLog.unfoldedDeltas(spark, dir) === 2)
+      assert(KeyedUpsertSink.readStore(spark, dir).get.count() === 2L)
       // the victim's release must NOT have deleted the usurper's lock
       assert(new String(Files.readAllBytes(lock), "UTF-8")
         .startsWith("usurper-token"))
-    } finally KeyedUpsertSink.preFlipHold = () => ()
-  }
-
-  test("an unflipped generation left by a crashed writer is reclaimed at the next flip") {
-    val dir = freshDir()
-    KeyedUpsertSink.upsertBatch(Seq(("k", 1L)).toDF("k", "ts"), dir,
-      Seq("k"), "ts", 0L, versionWins = true)
-    // what a writer that died between its generation write and its
-    // pointer flip leaves behind: a written bucket no pointer names,
-    // plus the fresh in-flight marker older writers stamped on it
-    val orphan = Paths.get(dir, "gen-x-9")
-    Files.createDirectories(orphan.resolve("bucket=0"))
-    Files.write(orphan.resolve("bucket=0/part-00000.parquet"),
-      "never flipped".getBytes("UTF-8"))
-    Files.write(orphan.resolve("_INFLIGHT"), "inflight".getBytes("UTF-8"))
-    KeyedUpsertSink.upsertBatch(Seq(("k2", 2L)).toDF("k", "ts"), dir,
-      Seq("k"), "ts", 1L, versionWins = true)
-    assert(!Files.exists(orphan),
-      "only the lease holder writes generations: an unnamed one is garbage")
-    assert(KeyedUpsertSink.readStore(spark, dir).get
-      .as[(String, Long)].collect().toSet === Set("k" -> 1L, "k2" -> 2L))
+    } finally KeyedUpsertSink.preCommitHold = () => ()
   }
 
   test("a crashed writer's FRESH lock is waited out and taken over (cap > lease)") {
     val dir = freshDir()
-    Files.createDirectories(Paths.get(dir))
+    seed(dir)
     val lock = Paths.get(dir, "_LOCK")
-    // a just-crashed writer: foreign token, mtime NOW — under the old
+    // a just-crashed compactor: foreign token, mtime NOW — under the old
     // 120s default cap with a 300s lease every waiter threw before the
     // lock could ever go stale; the cap must outlive the lease
     Files.write(lock,
@@ -227,7 +243,7 @@ class StoreLeaseSpec extends AnyFunSuite with SparkTestBase {
     // leave the wait cap at its 0=auto default: lease + 60 s
     try {
       // watch for the MOMENT the dead token leaves the lock — total
-      // upsert wall-time includes the Spark job and would mask a
+      // compaction wall-time includes the Spark jobs and would mask a
       // premature takeover (e.g. an inverted staleness comparison)
       val takeoverAt = new java.util.concurrent.atomic.AtomicLong(-1L)
       val t0 = System.nanoTime()
@@ -244,13 +260,13 @@ class StoreLeaseSpec extends AnyFunSuite with SparkTestBase {
       })
       watcher.setDaemon(true)
       watcher.start()
-      KeyedUpsertSink.upsertBatch(Seq(("k1", 1L)).toDF("k", "ts"), dir,
-        Seq("k"), "ts", 0L)
+      KeyedUpsertSink.compact(spark, dir, Seq("k"))
       watcher.join(2000)
       val tookMs = takeoverAt.get()
       assert(tookMs >= 600,
         s"dead token left the lock at ${tookMs} ms — before the 700 ms " +
           "lease expired")
+      assert(DeltaLog.unfoldedDeltas(spark, dir) === 0)
       assert(KeyedUpsertSink.readStore(spark, dir).get.count() === 1L)
     } finally oldLease match {
       case Some(v) => sys.props.put("graft.store.lease.ms", v)

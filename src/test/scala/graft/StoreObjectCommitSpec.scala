@@ -7,16 +7,16 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{IncrementalCdc, KeyedUpsertSink, StoreCommit}
+import graft.operators.{DeltaLog, IncrementalCdc, KeyedUpsertSink, StoreCommit}
 
-/** The object-store leg of the commit seam (r17 verdict item 1): the
-  * keyed store driven end-to-end over [[SimObjFileSystem]] — a local
-  * filesystem whose `rename` is the object-store reality (copy, then
-  * delete, with an injectable crash between) — proving that on such a
-  * store the [[StoreCommit]] MARKER protocol is selected automatically,
-  * never calls rename on a control path, matches the rename protocol's
-  * store content bit-for-bit, and loses no committed generation across
-  * injected crashes, torn uploads, or a mid-section lease takeover.
+/** The object-store leg of the keyed store (r17 verdict item 1): driven
+  * end-to-end over [[SimObjFileSystem]] — a local filesystem whose
+  * `rename` is the object-store reality (copy, then delete, with an
+  * injectable crash between) — proving that on such a store the
+  * [[StoreCommit]] MARKER lock is selected automatically, no control
+  * path is ever renamed, the content matches the local store's, and
+  * nothing committed is lost across torn writes, a crash inside
+  * compaction, or a mid-section lease takeover.
   */
 class StoreObjectCommitSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -58,8 +58,9 @@ class StoreObjectCommitSpec extends AnyFunSuite with SparkTestBase {
     val (dir, raw) = freshDirs()
     val localDir = Files.createTempDirectory("graft-localstore").toString
     SimObjFileSystem.renamedPaths.clear()
-    // the same batch sequence against both protocols: create, overwrite
-    // a key, re-deliver a batch id, versionWins regress attempt, compact
+    // the same batch sequence against both filesystems: create,
+    // overwrite a key, re-deliver a batch id, versionWins regress
+    // attempt, compact
     def drive(d: String): Unit = {
       KeyedUpsertSink.upsertBatch(mk("a" -> 1L, "b" -> 1L), d, Seq("k"),
         "ts", 0L, versionWins = true)
@@ -79,58 +80,66 @@ class StoreObjectCommitSpec extends AnyFunSuite with SparkTestBase {
       .as[(String, Long)].collect().toSet
     assert(obj === Set("a" -> 1L, "b" -> 5L, "c" -> 2L))
     assert(obj === loc)
-    // marker layout on the object store, pointer file on the local one
-    assert(Files.isDirectory(Paths.get(raw, "_CURRENT.d")))
-    assert(!Files.exists(Paths.get(raw, "_CURRENT")))
-    assert(Files.exists(Paths.get(localDir, "_CURRENT")))
-    // the marker protocol never renamed a control path — the non-atomic
+    // the compaction lease ran the election on the object store and the
+    // exclusive-create lock file on the local one
+    assert(Files.isDirectory(Paths.get(raw, "_LOCK.d")))
+    assert(!Files.exists(Paths.get(localDir, "_LOCK.d")))
+    // no control path was renamed on the object store — the non-atomic
     // primitive is avoided, not merely survived (parquet task commits
-    // may rename under gen-*/; those are made safe by the pointer
-    // ordering, not by rename atomicity)
+    // may rename under delta/ and base/; those are gated by _SUCCESS,
+    // not by rename atomicity)
     val controlRenames = SimObjFileSystem.renamedPaths.asScala
-      .filter(p => p.contains("_CURRENT") || p.contains("_LOCK"))
+      .filter(p => p.contains("_LOCK") || p.contains("_PARAMS"))
     assert(controlRenames.isEmpty,
       s"control paths renamed on the object store: $controlRenames")
-    // pointer markers are pruned with a one-commit grace window
-    val markers = Files.list(Paths.get(raw, "_CURRENT.d")).iterator()
-      .asScala.size
-    assert(markers <= 2, s"marker GC left $markers files")
   }
 
-  test("a crash between the generation write and the pointer commit loses nothing") {
+  test("a crash inside compaction keeps the old snapshot and deltas readable") {
     val (dir, _) = freshDirs()
-    KeyedUpsertSink.upsertBatch(mk("a" -> 1L), dir, Seq("k"), "ts", 0L)
-    KeyedUpsertSink.preFlipHold =
+    KeyedUpsertSink.upsertBatch(mk("a" -> 1L, "b" -> 1L), dir, Seq("k"), "ts", 0L)
+    KeyedUpsertSink.compact(spark, dir, Seq("k"))
+    KeyedUpsertSink.upsertBatch(mk("a" -> 9L, "c" -> 2L), dir, Seq("k"), "ts", 1L)
+    def content() = KeyedUpsertSink.readStore(spark, dir).get
+      .as[(String, Long)].collect().toSet
+    val want = Set("a" -> 9L, "b" -> 1L, "c" -> 2L)
+    assert(content() === want)
+    KeyedUpsertSink.preCommitHold =
       () => throw new RuntimeException("injected crash before commit")
     try {
       intercept[RuntimeException] {
-        KeyedUpsertSink.upsertBatch(mk("a" -> 9L, "b" -> 2L), dir,
-          Seq("k"), "ts", 1L)
+        KeyedUpsertSink.compact(spark, dir, Seq("k"))
       }
-    } finally KeyedUpsertSink.preFlipHold = () => ()
-    // the committed generation is intact: the crashed batch is invisible
-    assert(KeyedUpsertSink.readStore(spark, dir).get
-      .as[(String, Long)].collect().toSet === Set("a" -> 1L))
-    // at-least-once re-delivery of the same batch id completes cleanly
-    KeyedUpsertSink.upsertBatch(mk("a" -> 9L, "b" -> 2L), dir,
-      Seq("k"), "ts", 1L)
-    assert(KeyedUpsertSink.readStore(spark, dir).get
-      .as[(String, Long)].collect().toSet === Set("a" -> 9L, "b" -> 2L))
+    } finally KeyedUpsertSink.preCommitHold = () => ()
+    // the previous snapshot plus the delta still fold to the same store
+    assert(content() === want)
+    assert(DeltaLog.unfoldedDeltas(spark, dir) === 1)
+    // the retried compaction completes cleanly, same fold
+    KeyedUpsertSink.compact(spark, dir, Seq("k"))
+    assert(DeltaLog.unfoldedDeltas(spark, dir) === 0)
+    assert(content() === want)
   }
 
-  test("a torn marker upload (no sentinel) is ignored by readers and commits alike") {
+  test("a torn delta (no _SUCCESS) is never read, by readers or compactions") {
     val (dir, raw) = freshDirs()
     KeyedUpsertSink.upsertBatch(mk("a" -> 1L), dir, Seq("k"), "ts", 0L)
-    // a torn upload at a HIGH sequence number: readable only if the
-    // reader wrongly trusts incomplete markers
-    Files.write(
-      Paths.get(raw, "_CURRENT.d", "p" + "9" * 20 + "-torn"),
-      "buckets=16\n0=gen-999".getBytes("UTF-8"))
-    assert(KeyedUpsertSink.readStore(spark, dir).get
-      .as[(String, Long)].collect().toSet === Set("a" -> 1L))
-    KeyedUpsertSink.upsertBatch(mk("b" -> 2L), dir, Seq("k"), "ts", 1L)
-    assert(KeyedUpsertSink.readStore(spark, dir).get
-      .as[(String, Long)].collect().toSet === Set("a" -> 1L, "b" -> 2L))
+    // a writer crashed mid-write: its delta holds a data file but no
+    // _SUCCESS (written here as a real parquet part, then stripped)
+    val tornSrc = Files.createTempDirectory("graft-torn").toString + "/d"
+    mk("a" -> 7L, "z" -> 7L).coalesce(1).write.parquet(tornSrc)
+    val torn = Paths.get(raw, "delta", "batch=5")
+    Files.createDirectories(torn)
+    Files.list(Paths.get(tornSrc)).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .foreach(f => Files.copy(f, torn.resolve(f.getFileName)))
+    def content() = KeyedUpsertSink.readStore(spark, dir).get
+      .as[(String, Long)].collect().toSet
+    assert(content() === Set("a" -> 1L))
+    KeyedUpsertSink.compact(spark, dir, Seq("k"))
+    assert(content() === Set("a" -> 1L))
+    // the compaction neither folded nor skipped it: once the write
+    // completes, the delta reads above the snapshot
+    Files.write(torn.resolve("_SUCCESS"), Array.emptyByteArray)
+    assert(content() === Set("a" -> 7L, "z" -> 7L))
   }
 
   test("marker lock: exclusion, stale takeover, and release") {
@@ -204,43 +213,15 @@ class StoreObjectCommitSpec extends AnyFunSuite with SparkTestBase {
     assert(left.isEmpty, s"election dir not swept: $left")
   }
 
-  test("a store recreated under the other layout re-resolves instead of mis-pinning") {
-    val root = Files.createTempDirectory("graft-relayout").toString
-    val dir = s"$root/store"
-    KeyedUpsertSink.upsertBatch(mk("a" -> 1L), dir, Seq("k"), "ts", 0L)
-    assert(Files.exists(Paths.get(dir, "_CURRENT")))
-    // out-of-band: the dir is deleted and recreated as a MARKER store
-    // while this JVM's protocol cache still holds RenameCommit
-    def wipe(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p))
-        Files.list(p).iterator().asScala.toSeq.foreach(wipe)
-      Files.deleteIfExists(p)
-    }
-    wipe(Paths.get(dir))
-    Files.createDirectories(Paths.get(dir, "_CURRENT.d"))
-    Files.write(Paths.get(dir, "_CURRENT.d", "p" + "0" * 19 + "1-x"),
-      "buckets=16\n#end\n".getBytes("UTF-8"))
-    // the cached rename protocol finds no _CURRENT, detects the marker
-    // layout, invalidates itself, and fails LOUD instead of treating
-    // the populated store as brand new
-    intercept[IllegalStateException] {
-      KeyedUpsertSink.readState(spark, dir)
-    }
-    // the retry re-resolves to markers and reads the recreated store
-    assert(KeyedUpsertSink.readState(spark, dir).exists(_.numBuckets == 16))
-  }
-
   test("fence on markers: a writer whose lease was usurped aborts before the flip") {
     val (dir, raw) = freshDirs()
     KeyedUpsertSink.upsertBatch(mk("k0" -> 0L), dir, Seq("k"), "ts", 0L)
-    val ptrBefore = Files.list(Paths.get(raw, "_CURRENT.d")).iterator()
-      .asScala.map(_.getFileName.toString).toSet
-    KeyedUpsertSink.preFlipHold = () => Thread.sleep(1200)
+    KeyedUpsertSink.upsertBatch(mk("k1" -> 1L), dir, Seq("k"), "ts", 1L)
+    KeyedUpsertSink.preCommitHold = () => Thread.sleep(1200)
     try {
       val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
       val victim = new Thread(() => {
-        try KeyedUpsertSink.upsertBatch(mk("k1" -> 1L), dir, Seq("k"),
-          "ts", 1L)
+        try KeyedUpsertSink.compact(spark, dir, Seq("k"))
         catch { case t: Throwable => errs.add(t) }
       })
       victim.start()
@@ -263,20 +244,18 @@ class StoreObjectCommitSpec extends AnyFunSuite with SparkTestBase {
       assert(usurper.tryTakeover("tok-usurper", seen.get._2))
       assert(usurper.tryAcquire("tok-usurper", "usurper"))
       victim.join(30000)
-      assert(!victim.isAlive, "victim writer hung")
+      assert(!victim.isAlive, "victim compactor hung")
       assert(errs.size() === 1, "victim must abort once the lease is lost")
       assert(errs.peek().getMessage.contains("lost mid-section"),
         s"wrong failure: ${errs.peek().getMessage}")
-      // no flip: the marker set is byte-for-byte the pre-crash one and
-      // the store still reads only the seed row
-      val ptrAfter = Files.list(Paths.get(raw, "_CURRENT.d")).iterator()
-        .asScala.map(_.getFileName.toString).toSet
-      assert(ptrAfter === ptrBefore, "dispossessed writer flipped the pointer")
-      assert(KeyedUpsertSink.readStore(spark, dir).get.count() === 1L)
+      // no snapshot committed: the deltas are still the whole store
+      assert(!Files.exists(Paths.get(raw, "base")),
+        "dispossessed compactor committed a snapshot")
+      assert(KeyedUpsertSink.readStore(spark, dir).get.count() === 2L)
       // and the victim's release did not remove the usurper's lock
       assert(usurper.ownerToken() === Some("tok-usurper"))
       usurper.release("tok-usurper")
-    } finally KeyedUpsertSink.preFlipHold = () => ()
+    } finally KeyedUpsertSink.preCommitHold = () => ()
   }
 
   test("params pin on the object store: write-once put, no rename, torn-pin repair") {
@@ -336,10 +315,10 @@ class StoreObjectCommitSpec extends AnyFunSuite with SparkTestBase {
       assert(store.filter(col("status") === "processed_by_matcher")
         .count() === 2 * 4468L)
     } finally store.unpersist()
-    // and it really ran on markers: both writers' generations landed
-    // under a marker-dir pointer, no control-path renames
-    assert(Files.isDirectory(Paths.get(raw, "_CURRENT.d")))
-    assert(!Files.exists(Paths.get(raw, "_CURRENT")))
+    // and both writers' deltas landed on the object store
+    val writers = Files.list(Paths.get(raw, "delta")).iterator().asScala
+      .map(_.getFileName.toString.takeWhile(_ != '=')).toSet
+    assert(writers === Set("ing", "mat"))
   }
 
   test("an incremental operator rides the seam unchanged on the object store") {

@@ -21,17 +21,23 @@ class StorePruneSpec extends AnyFunSuite with SparkTestBase {
   private def freshDir() =
     Files.createTempDirectory("graft-prune").toString
 
+  /** `n` rows (id, h = id % mod, ts) from `from`, as a spark.range frame. */
+  private def idh(from: Long, n: Long, mod: Long, ts: Long) =
+    spark.range(from, from + n).select(col("id"),
+      (col("id") % mod).as("h"), lit(ts).as("ts"))
+
   test("bucketCols pin: h-bucketed store colocates equal hashes; pruned read equals filtered full read") {
     val dir = freshDir()
-    // keys (id, h), bucketed by h alone — many ids share a hash
-    val rows = (0L until 200L).map(i => (i, i % 17, 0L))
-    KeyedUpsertSink.upsertBatch(rows.toDF("id", "h", "ts"), dir,
-      Seq("id", "h"), "ts", 0L, numBuckets = 8, bucketCols = Seq("h"))
-    KeyedUpsertSink.upsertBatch(
-      (200L until 260L).map(i => (i, i % 17, 1L)).toDF("id", "h", "ts"),
+    // keys (id, h), bucketed by h alone — many ids share a hash. The
+    // snapshot's bucket count follows its rows (one per 4096), so the
+    // store holds enough rows for several buckets
+    KeyedUpsertSink.upsertBatch(idh(0L, 20000L, 17L, 0L), dir,
+      Seq("id", "h"), "ts", 0L, bucketCols = Seq("h"))
+    KeyedUpsertSink.upsertBatch(idh(20000L, 600L, 17L, 1L),
       dir, Seq("id", "h"), "ts", 1L, bucketCols = Seq("h"))
+    KeyedUpsertSink.compact(spark, dir, Seq("id", "h"))
     val full = KeyedUpsertSink.readStore(spark, dir).get
-    assert(full.count() === 260L)
+    assert(full.count() === 20600L)
     // probe three hash values: the pruned read must contain EVERY row
     // carrying those hashes (all rows of an h live in h's bucket)
     val probe = Seq(3L, 7L, 11L).toDF("h")
@@ -43,7 +49,7 @@ class StorePruneSpec extends AnyFunSuite with SparkTestBase {
       .select("id").as[Long].collect().toSet
     assert(gotIds === wantIds)
     // and it genuinely pruned: fewer rows scanned than the store holds
-    assert(pruned.count() < 260L,
+    assert(pruned.count() < 20600L,
       "pruned read returned the whole store — no bucket was skipped")
     // a conflicting bucketCols request on the pinned store fails loudly
     val e = intercept[IllegalArgumentException] {
@@ -54,25 +60,30 @@ class StorePruneSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("compact can re-bucket (grow the count); reads and lookups stay exact") {
+    import graft.operators.DeltaLog
     val dir = freshDir()
-    val rows = (0L until 300L).map(i => (i, i % 29, 0L))
-    KeyedUpsertSink.upsertBatch(rows.toDF("id", "h", "ts"), dir,
-      Seq("id", "h"), "ts", 0L, numBuckets = 4, bucketCols = Seq("h"))
-    KeyedUpsertSink.compact(spark, dir, Seq("id", "h"), newNumBuckets = 32)
-    assert(KeyedUpsertSink.readState(spark, dir).get.numBuckets === 32)
+    KeyedUpsertSink.upsertBatch(idh(0L, 300L, 29L, 0L), dir,
+      Seq("id", "h"), "ts", 0L, bucketCols = Seq("h"))
+    KeyedUpsertSink.compact(spark, dir, Seq("id", "h"))
+    assert(DeltaLog.readBucketCount(spark, dir) === Some(1))
+    // the store grows: the next compaction sizes the buckets from rows
+    KeyedUpsertSink.upsertBatch(idh(300L, 19700L, 29L, 1L), dir,
+      Seq("id", "h"), "ts", 1L)
+    KeyedUpsertSink.compact(spark, dir, Seq("id", "h"))
+    assert(DeltaLog.readBucketCount(spark, dir) === Some(5))
     val full = KeyedUpsertSink.readStore(spark, dir).get
-    assert(full.count() === 300L)
+    assert(full.count() === 20000L)
     val pruned = KeyedUpsertSink.readStoreForKeys(spark, dir,
       Seq(5L).toDF("h"), Seq("h")).get
     assert(pruned.filter(col("h") === 5L).select("id").as[Long]
       .collect().toSet ===
-      (0L until 300L).filter(_ % 29 == 5L).toSet)
-    // post-rebucket upserts keep working against the new pin
-    KeyedUpsertSink.upsertBatch(Seq((900L, 5L, 2L)).toDF("id", "h", "ts"),
+      (0L until 20000L).filter(_ % 29 == 5L).toSet)
+    // post-rebucket upserts keep working against the pin
+    KeyedUpsertSink.upsertBatch(Seq((900000L, 5L, 2L)).toDF("id", "h", "ts"),
       dir, Seq("id", "h"), "ts", 2L)
     assert(KeyedUpsertSink.readStoreForKeys(spark, dir, Seq(5L).toDF("h"),
       Seq("h")).get.filter(col("h") === 5L).count() ===
-      (0L until 300L).count(_ % 29 == 5L) + 1L)
+      (0L until 20000L).count(_ % 29 == 5L) + 1L)
   }
 
   test("cdc ingest over the h-bucketed store equals the full-read answer") {
@@ -92,8 +103,8 @@ class StorePruneSpec extends AnyFunSuite with SparkTestBase {
     val prunedPairs = IncrementalCdc.ingestBatch(batch2, prunedDir, 1L)
       .orderBy("id_a", "id_b")
       .as[(Long, Long, Long)].collect().toSeq
-    assert(KeyedUpsertSink.readState(spark, prunedDir).get.bucketCols ===
-      Seq("h"))
+    assert(KeyedUpsertSink.pinnedBucketCols(spark, prunedDir) ===
+      Some(Seq("h")))
     val legacyDir = freshDir()
     val ch1 = IncrementalCdc.chunkHashes(batch1)
     KeyedUpsertSink.upsertBatch(
@@ -102,8 +113,8 @@ class StorePruneSpec extends AnyFunSuite with SparkTestBase {
     val legacyPairs = IncrementalCdc.ingestBatch(batch2, legacyDir, 1L)
       .orderBy("id_a", "id_b")
       .as[(Long, Long, Long)].collect().toSeq
-    assert(KeyedUpsertSink.readState(spark, legacyDir).get.bucketCols ===
-      Seq.empty)
+    assert(KeyedUpsertSink.pinnedBucketCols(spark, legacyDir) ===
+      Some(Seq("id", "h")))
     assert(prunedPairs === legacyPairs)
     assert(prunedPairs.exists { case (a, b, _) => a == 1L && b == 3L },
       s"cross-batch duplicate (1,3) missing from $prunedPairs")
