@@ -179,8 +179,8 @@ object SparkEntry {
       val (raw, matcher) = tripStoreItems(s, dir, shareEnds = true)
       val ord = struct(col("status_rank"),
         coalesce(col("processed_at"), lit(""))).as("_ord")
-      val storeDir = java.nio.file.Files
-        .createTempDirectory("trip_store_lookup").toString
+      val storeDir = org.apache.spark.sql.graftbridge.Bridge
+        .createTempDir("trip_store_lookup")
       Seq(raw, matcher).zipWithIndex.foreach { case (items, i) =>
         KeyedUpsertSink.upsertBatch(items.withColumn("_ord", ord), storeDir,
           TripStore.Keys, "_ord", batchId = i.toLong, versionWins = true,
@@ -2165,8 +2165,8 @@ object SparkEntry {
           concat(col("text"),
             lit(". Subscribe to our newsletter for free offers")))
           .otherwise(col("text")).as("text"))
-      val store = java.nio.file.Files
-        .createTempDirectory("boiler_store").toString
+      val store = org.apache.spark.sql.graftbridge.Bridge
+        .createTempDir("boiler_store")
       IncrementalBoilerplate.updateStore(store, 0L,
         planted.filter(pmod(col("doc_id"), lit(3)) === 0))
       IncrementalBoilerplate.compact(s, store, targetRowsPerBucket = 256L)
@@ -3080,7 +3080,7 @@ object SparkEntry {
       val T = graft.functions.TextAnalysis
       val docs = Tables.documents(s, dir)
       val tableDir =
-        java.nio.file.Files.createTempDirectory("bpe_merges").toString
+        org.apache.spark.sql.graftbridge.Bridge.createTempDir("bpe_merges")
       T.bpeMergeSequence(docs.filter(col("doc_id") % 2 === 0), steps = 4)
         .write.mode("overwrite").parquet(tableDir)
       T.bpeEncodeBatched(docs.filter(col("doc_id") % 2 === 1),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
@@ -18,6 +18,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * store's own merge aggregate, and a periodic [[compact]] folds the log
   * into a fresh `base/upto=<id>` snapshot. All dirs are `_SUCCESS`-gated
   * on read, so a torn write never reads.
+  *
+  * A delta may also be ADOPTED instead of written ([[adoptDelta]]): its
+  * dir then holds a `_SOURCE` file naming a parquet dir committed
+  * elsewhere (a qualified path) in place of part files, and every reader
+  * (the listing, the fold, [[writeDelta]]'s schema guard, compaction)
+  * reads the named dir. Grace deletion removes only the delta dir, never
+  * the files it names: their owner keeps them, and the store depends on
+  * them until a compaction folds them.
   *
   * MULTI-WRITER by writer id: each writer is one sequential foreachBatch
   * query with its own rising batch ids, and its deltas are named by
@@ -40,8 +48,15 @@ private[graft] object DeltaLog {
   /** The writer id of the single-writer stores. */
   val DefaultWriter = "batch"
 
-  /** One committed delta: its writer, that writer's batch id, its dir. */
-  private[graft] case class Delta(writer: String, id: Long, path: String)
+  /** One committed delta: its writer, that writer's batch id, its dir in
+    * the store, and where its rows live (`dir` itself, or the dir its
+    * `_SOURCE` names).
+    */
+  private[graft] case class Delta(writer: String, id: Long, dir: String,
+      path: String)
+
+  /** The file of an adopted delta that names the dir holding its rows. */
+  private val SourceFile = "_SOURCE"
 
   /** One committed snapshot (a base or an L1 run): its `upto` id, its
     * dir, and the highest batch id it folded per writer.
@@ -55,16 +70,58 @@ private[graft] object DeltaLog {
     * Misuse guard (r14 verdict note): the realistic accident is
     * pointing a DIFFERENT store (a different relation shape) at an
     * existing dir — the fold would then merge garbage or fail obscurely
-    * deep in a reader. A committed part's schema must match the
-    * incoming delta's (names + types), read from one parquet footer on
-    * the driver ([[footerSchema]]) — no Spark job per batch.
+    * deep in a reader. A committed part's schema (an adopted delta's:
+    * of the dir it names) must match the incoming delta's (names +
+    * types), read from one parquet footer on the driver
+    * ([[footerSchema]]) — no Spark job per batch.
     */
   def writeDelta(delta: DataFrame, storeDir: String, batchId: Long,
       writer: String = DefaultWriter): Unit = {
+    checkWriter(writer)
+    checkShape(delta.sparkSession, storeDir, delta.schema)
+    delta.write.mode(SaveMode.Overwrite)
+      .parquet(s"$storeDir/delta/$writer=$batchId")
+  }
+
+  /** Land one batch's delta BY REFERENCE: `source`, a `_SUCCESS`-committed
+    * parquet dir whose name ends in `=<batchId>` (the fold reads the
+    * batch id from the file path), becomes the delta without a copy. The
+    * delta dir gets a `_SOURCE` file holding the qualified path and then
+    * its `_SUCCESS`. A replay that finds the same committed reference
+    * writes nothing. The caller must keep `source` until a compaction
+    * has folded it and the next one has deleted the reference.
+    */
+  def adoptDelta(spark: SparkSession, storeDir: String, batchId: Long,
+      writer: String, source: String): Unit = {
+    checkWriter(writer)
+    val conf = spark.sessionState.newHadoopConf()
+    val src = new Path(source)
+    val qualified = src.getFileSystem(conf).makeQualified(src)
+    require(qualified.getName.endsWith(s"=$batchId"),
+      s"adopted dir $source must be named <name>=$batchId")
+    require(qualified.getFileSystem(conf).exists(
+      new Path(qualified, "_SUCCESS")), s"$source is not committed")
+    footerSchema(spark, qualified.toString)
+      .foreach(checkShape(spark, storeDir, _))
+    val dir = new Path(s"$storeDir/delta/$writer=$batchId")
+    val fs = dir.getFileSystem(conf)
+    val success = new Path(dir, "_SUCCESS")
+    if (fs.exists(success) && sourceOf(fs, dir).contains(qualified.toString))
+      return
+    fs.delete(dir, true)
+    val out = fs.create(new Path(dir, SourceFile), true)
+    try out.write(qualified.toString.getBytes("UTF-8")) finally out.close()
+    fs.create(success, true).close()
+  }
+
+  private def checkWriter(writer: String): Unit =
     require(writer.nonEmpty &&
       writer.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
       s"writer id '$writer' must be non-empty [A-Za-z0-9_-]")
-    val spark = delta.sparkSession
+
+  /** The misuse guard of [[writeDelta]] and [[adoptDelta]]. */
+  private def checkShape(spark: SparkSession, storeDir: String,
+      incoming: StructType): Unit = {
     val existing = committedDeltas(spark, storeDir).headOption.map(_.path)
       .orElse(newestCommitted(spark, s"$storeDir/l1", "upto=").map(_._2))
       .orElse(newestCommitted(spark, s"$storeDir/base", "upto=").map(_._2))
@@ -73,14 +130,24 @@ private[graft] object DeltaLog {
       // writer's plan may set where a read-back never does
       def shape(s: StructType) =
         s.map(f => f.name -> f.dataType.catalogString).toMap
-      require(shape(have) == shape(delta.schema),
+      require(shape(have) == shape(incoming),
         s"DeltaLog at $storeDir holds schema ${shape(have)} but this delta " +
-          s"carries ${shape(delta.schema)} — two different stores pointed " +
+          s"carries ${shape(incoming)} — two different stores pointed " +
           "at one dir?")
     }
-    delta.write.mode(SaveMode.Overwrite)
-      .parquet(s"$storeDir/delta/$writer=$batchId")
   }
+
+  /** The UTF-8 text of a small control file. */
+  private def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+  }
+
+  /** The dir an adopted delta's `_SOURCE` names; None for a written one. */
+  private def sourceOf(fs: FileSystem, dir: Path): Option[String] =
+    try Some(readText(fs, new Path(dir, SourceFile)).trim)
+    catch { case _: java.io.FileNotFoundException => None }
 
   /** The relation schema Spark recorded in the footer of the first part
     * file under `dir` (or under its first bucket dir), read on the
@@ -116,7 +183,11 @@ private[graft] object DeltaLog {
       val at = name.lastIndexOf('=')
       (if (at <= 0) None else name.substring(at + 1).toLongOption)
         .filter(_ => fs.exists(new Path(st.getPath, "_SUCCESS")))
-        .map(Delta(name.substring(0, at), _, st.getPath.toString))
+        .map { id =>
+          val dir = st.getPath.toString
+          Delta(name.substring(0, at), id, dir,
+            sourceOf(fs, st.getPath).getOrElse(dir))
+        }
     }
   }
 
@@ -134,16 +205,11 @@ private[graft] object DeltaLog {
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val marks =
       if (!fs.exists(p)) Map(DefaultWriter -> id)
-      else {
-        val in = fs.open(p)
-        val raw =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        raw.linesIterator.filter(_.nonEmpty).map { l =>
+      else
+        readText(fs, p).linesIterator.filter(_.nonEmpty).map { l =>
           val at = l.lastIndexOf('=')
           l.substring(0, at) -> l.substring(at + 1).toLong
         }.toMap
-      }
     Snapshot(id, path, marks)
   }
 
@@ -200,8 +266,9 @@ private[graft] object DeltaLog {
   }
 
   /** Read the given deltas in one scan; with `batchIdCol` set, each row
-    * carries the batch id of its delta (parsed from its file path), so
-    * a last-write-wins merge can rank the sources.
+    * carries the batch id of its delta (parsed from its file path: the
+    * `<writer>=<id>` dir, or the `<name>=<id>` dir an adopted delta
+    * names), so a last-write-wins merge can rank the sources.
     */
   private def readDeltas(spark: SparkSession, deltas: Seq[Delta],
       batchIdCol: String): Option[DataFrame] =
@@ -348,11 +415,13 @@ private[graft] object DeltaLog {
     dropSnapshots(spark, storeDir, "base", _ >= prev.id)
   }
 
-  /** Delete each writer's deltas at or below its mark. */
+  /** Delete each writer's deltas at or below its mark: the delta dir
+    * only, never the dir an adopted delta names.
+    */
   private def dropFolded(spark: SparkSession, deltas: Seq[Delta],
       marks: Map[String, Long]): Unit =
     deltas.filter(d => marks.get(d.writer).exists(d.id <= _)).foreach { d =>
-      val p = new Path(d.path)
+      val p = new Path(d.dir)
       p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
     }
 
@@ -417,11 +486,8 @@ private[graft] object DeltaLog {
     val fs = new Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
     try {
-      val in = fs.open(new Path(path, BucketsMarker))
-      val raw =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val lines = raw.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
+      val lines = readText(fs, new Path(path, BucketsMarker)).linesIterator
+        .map(_.trim).filter(_.nonEmpty).toSeq
       lines.headOption.flatMap(_.toIntOption).filter(_ > 0).map { b =>
         b -> lines.collectFirst {
           case l if l.startsWith("rows=") => l.stripPrefix("rows=") }

@@ -21,6 +21,13 @@ import org.apache.spark.sql.functions._
   * `versionWins` and `bucketCols` in the store's `_PARAMS`; a later
   * upsert asking for other values fails loudly.
   *
+  * A caller that has already committed a batch as a parquet dir (the
+  * two-hop topology's change log) lands it with [[adoptBatch]]: the
+  * delta then names that dir in a `_SOURCE` file instead of holding a
+  * copy ([[DeltaLog.adoptDelta]]), so the batch is written once. The
+  * store reads the named dir until a compaction folds it, and grace
+  * deletion removes only the reference.
+  *
   * READ — one merge rule ([[foldRule]]): per key, the newest snapshot's
   * rows and every unfolded delta's rows are ranked, and `max_by` keeps
   * the winner. Snapshot rows rank below every delta. With `versionWins`
@@ -397,17 +404,43 @@ object KeyedUpsertSink {
     */
   def upsertBatch(batch: DataFrame, storeDir: String, keys: Seq[String],
       orderCol: String, batchId: Long, versionWins: Boolean = false,
-      writerId: String = "", bucketCols: Seq[String] = Seq.empty): Unit = {
-    val spark = batch.sparkSession
-    require(bucketCols.forall(keys.contains),
-      s"bucketCols $bucketCols must be a subset of keys $keys")
+      writerId: String = "", bucketCols: Seq[String] = Seq.empty): Unit =
+    land(batch.sparkSession, storeDir, Pin(keys, orderCol, versionWins,
+      bucketCols), batchId, writerId)(
+      DeltaLog.writeDelta(batch, storeDir, batchId, _))
+
+  /** [[upsertBatch]] for a batch the caller has already committed as the
+    * parquet dir `sourceDir` (named `<name>=<batchId>`): the store records
+    * that dir as the batch's delta instead of writing a copy
+    * ([[DeltaLog.adoptDelta]]). The store reads `sourceDir` until a
+    * compaction folds it, so the caller must not delete or move it; a
+    * store holding such deltas cannot be relocated before it is
+    * compacted.
+    */
+  def adoptBatch(spark: SparkSession, sourceDir: String, storeDir: String,
+      keys: Seq[String], orderCol: String, batchId: Long,
+      versionWins: Boolean, writerId: String): Unit =
+    land(spark, storeDir, Pin(keys, orderCol, versionWins, Seq.empty),
+      batchId, writerId)(
+      DeltaLog.adoptDelta(spark, storeDir, batchId, _, sourceDir))
+
+  /** The write path shared by [[upsertBatch]] and [[adoptBatch]]: check
+    * or pin the store's parameters (`asked.bucketCols` empty = the
+    * pinned value, or the keys on creation), run `commit` with the
+    * delta's writer name, and compact once enough deltas are unfolded.
+    */
+  private def land(spark: SparkSession, storeDir: String, asked: Pin,
+      batchId: Long, writerId: String)(commit: String => Unit): Unit = {
+    require(asked.bucketCols.forall(asked.keys.contains),
+      s"bucketCols ${asked.bucketCols} must be a subset of keys ${asked.keys}")
     // a pin still being written by a concurrent first upsert reads as
     // torn: pinParams below settles that race
     val pinned = try readPin(spark, storeDir)
       catch { case _: IllegalStateException => None }
-    val pin = Pin(keys, orderCol, versionWins,
-      if (bucketCols.nonEmpty) bucketCols
-      else pinned.map(_.bucketCols).getOrElse(keys))
+    val pin =
+      if (asked.bucketCols.nonEmpty) asked
+      else asked.copy(bucketCols =
+        pinned.map(_.bucketCols).getOrElse(asked.keys))
     pinned match {
       case Some(have) => require(have == pin,
         s"store at $storeDir is keyed by ${have.keys} on ${have.orderCol} " +
@@ -416,8 +449,7 @@ object KeyedUpsertSink {
       case None => DeltaLog.pinParams(spark, storeDir, pin.params)
     }
     val t0 = System.nanoTime()
-    DeltaLog.writeDelta(batch, storeDir, batchId,
-      if (writerId.nonEmpty) writerId else DeltaLog.DefaultWriter)
+    commit(if (writerId.nonEmpty) writerId else DeltaLog.DefaultWriter)
     recordPhase("merge", writerId, (System.nanoTime() - t0) / 1000000L)
     count("commits")
     if (DeltaLog.unfoldedDeltas(spark, storeDir) >= CompactAfterDeltas)

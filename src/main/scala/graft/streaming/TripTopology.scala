@@ -1,12 +1,12 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.operators.{KeyedUpsertSink, Materialize, RawEventStore}
+import graft.operators.{KeyedUpsertSink, RawEventStore}
 import graft.sources.TripStreams
 
 /** The reference's LITERAL two-hop architecture, composed from the
@@ -20,7 +20,7 @@ import graft.sources.TripStreams
   * becomes
   *
   *   raw value stream → [[ingestWriter]] (parse/validate → RAW items →
-  *     [[KeyedUpsertSink]] table + per-batch INSERT log)
+  *     per-batch INSERT log, adopted by the [[KeyedUpsertSink]] table)
   *   → [[TripStreams.tableChangeFeed]] over the insert log
   *   → [[matcherWriter]] (INSERT/RAW# filter → keyed-state match →
   *     COMPLETED + processed items → the SAME table).
@@ -33,13 +33,19 @@ import graft.sources.TripStreams
   *
   * The change log is the DynamoDB-Streams analogue: the table write and
   * its INSERT event are the same put (reference lambda2.py:183-201
-  * consumes NewImage records), so [[ingestWriter]] lands each batch's
-  * items under `changes/batch=<id>` next to the store upsert.
-  * Re-delivery of a failed batch rewrites the same directory
-  * (idempotent for the store) but with fresh part-file names — the feed
-  * is therefore AT-LEAST-ONCE, exactly DynamoDB Streams' contract, and
-  * the matcher hop dedups by trip_id downstream as the reference's
-  * matcher is idempotent per key.
+  * consumes NewImage records), so [[ingestWriter]] writes each batch's
+  * items ONCE, under `changes/batch=<id>`, and the store adopts that
+  * committed dir as the batch's `ing=<id>` delta
+  * ([[KeyedUpsertSink.adoptBatch]]) instead of writing a second copy.
+  * Structured Streaming re-runs a failed batch under the same id with
+  * the same rows, so a replay that finds the log dir committed keeps it
+  * as it is: the matcher may be reading those files. Only a batch that
+  * died before its log commit is rewritten, with fresh part-file names —
+  * the feed is therefore AT-LEAST-ONCE, exactly DynamoDB Streams'
+  * contract, and the matcher hop dedups by trip_id downstream as the
+  * reference's matcher is idempotent per key. The log is never deleted:
+  * the matcher is a separately restartable query that may lag without
+  * bound, and the store reads each log dir until a compaction folds it.
   *
   * Writer coordination (r16 verdict item 3): the two hops run
   * GENUINELY CONCURRENTLY — the reference's actual runtime shape
@@ -58,12 +64,14 @@ import graft.sources.TripStreams
   * restarts. At warehouse scale the same two queries target a
   * merge-on-read keyed table (Delta/Iceberg/Hudi MOR).
   *
-  * 100 TB posture: hop 1 is stateless maps + an O(batch) delta write;
-  * the change feed lists only NEW files per trigger (cost tracks write
-  * rate, not table size); hop 2's matcher keeps one watermark-bounded
-  * state row per in-flight trip, hash-partitioned by trip_id, and
-  * writes an O(batch) delta. Nothing in the composition scans the
-  * table except the periodic compaction.
+  * 100 TB posture: hop 1 is stateless maps + one O(batch) write; hop
+  * 2's matcher keeps one watermark-bounded state row per in-flight
+  * trip, hash-partitioned by trip_id, and writes an O(batch) delta.
+  * Nothing in the composition scans the table except the periodic
+  * compaction. The change feed does NOT list only new files: Spark's
+  * file source lists the whole log path on every trigger and filters
+  * the listing against its seen-files map, and the log has no retention
+  * limit, so each trigger's listing grows with the log's history.
   */
 object TripTopology {
 
@@ -80,34 +88,32 @@ object TripTopology {
   }
 
   /** Hop 1's per-micro-batch body, shared by [[ingestWriter]] and the
-    * crash-ordering spec (which wraps it to die BETWEEN the store
-    * upsert and the change-log write — the one interleaving the
-    * at-least-once contract note below leans on: the restart re-runs
-    * the same batch id, the upsert rewrites the same delta, and the
-    * change log finally lands).
+    * crash-ordering specs (which wrap it to die BETWEEN the change-log
+    * commit and the store reference: the restart re-runs the same batch
+    * id, keeps the committed log dir, and lands the reference).
     */
   private[graft] def ingestBatch(batch: DataFrame, storeDir: String,
       changesDir: String, id: Long,
-      afterUpsert: Long => Unit = _ => ()): Unit = {
-    // materialize once: the upsert and the change-log write must see
-    // the same bytes (and not re-parse the wire JSON twice); released
-    // once both are written, so a long-running hop holds no old batches
-    val items = Materialize.now(batch)
-    try {
-      KeyedUpsertSink.upsertBatch(items, storeDir, TripStore.Keys,
-        TripStore.OrderCol, id, versionWins = true, writerId = "ing")
-      afterUpsert(id)
-      val tLog0 = System.nanoTime()
-      items.write.mode(SaveMode.Overwrite)
-        .parquet(s"$changesDir/batch=$id")
-      KeyedUpsertSink.recordPhase("changelog", "ing",
-        (System.nanoTime() - tLog0) / 1000000L)
-    } finally Bridge.unpersistCheckpoint(items)
+      afterChangeLog: Long => Unit = _ => ()): Unit = {
+    val spark = batch.sparkSession
+    val logDir = s"$changesDir/batch=$id"
+    val committed = new Path(logDir, "_SUCCESS")
+    val tLog0 = System.nanoTime()
+    // a replay keeps a committed log dir: the matcher may be reading it
+    if (!committed.getFileSystem(spark.sessionState.newHadoopConf())
+        .exists(committed))
+      batch.write.mode(SaveMode.Overwrite).parquet(logDir)
+    KeyedUpsertSink.recordPhase("changelog", "ing",
+      (System.nanoTime() - tLog0) / 1000000L)
+    afterChangeLog(id)
+    KeyedUpsertSink.adoptBatch(spark, logDir, storeDir, TripStore.Keys,
+      TripStore.OrderCol, id, versionWins = true, writerId = "ing")
   }
 
   /** Hop 1 — the Lambda1 analogue: raw wire JSON in, every validated
-    * event landed as a RAW item in the keyed table AND as an INSERT
-    * event in the change log, one foreachBatch per micro-batch.
+    * event landed as an INSERT event in the change log, which is also
+    * the batch's RAW items in the keyed table, one foreachBatch per
+    * micro-batch.
     */
   def ingestWriter(raw: DataFrame, storeDir: String, changesDir: String,
       checkpointDir: String): DataStreamWriter[Row] =
@@ -134,7 +140,7 @@ object TripTopology {
     // hop 2 may be deployed BEFORE hop 1 lands its first batch (the
     // concurrent schedule): the file source rejects a non-existent
     // path at start, so materialize the log directory up front
-    val changesPath = new org.apache.hadoop.fs.Path(changesDir)
+    val changesPath = new Path(changesDir)
     changesPath.getFileSystem(spark.sessionState.newHadoopConf())
       .mkdirs(changesPath)
     // recursiveFileLookup: the log lands one directory per batch; the

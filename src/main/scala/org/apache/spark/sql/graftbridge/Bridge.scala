@@ -66,6 +66,15 @@ object Bridge {
     }
   }
 
+  /** A fresh directory `<java.io.tmpdir>/<prefix>-<uuid>`, deleted with
+    * its contents when the JVM exits (Spark's shutdown-delete registry,
+    * `Utils.createTempDir`). For stores a session builds and reads for
+    * its whole life.
+    */
+  def createTempDir(prefix: String): String =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix)
+      .getAbsolutePath
+
   /** Unpersist the storage behind a (local)checkpointed Dataset NOW.
     * Dropping the last reference alone leaves the checkpoint's RDD
     * blocks resident until a nondeterministic driver GC lets the

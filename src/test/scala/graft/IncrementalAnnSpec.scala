@@ -55,7 +55,7 @@ class IncrementalAnnSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("multi-batch ingestion through the band store answers each batch; re-delivery idempotent") {
-    val storeDir = java.nio.file.Files.createTempDirectory("annstore").toString
+    val storeDir = tempDir("annstore")
     val b0 = IncrementalAnn.ingestBatch(corpus, storeDir, batchId = 0L, k = 5)
     b0.count() // materialize before the next ingest prunes generations
     val b1 = topkSet(IncrementalAnn.ingestBatch(batch, storeDir, batchId = 1L, k = 5))
@@ -76,7 +76,7 @@ class IncrementalAnnSpec extends AnyFunSuite with SparkTestBase {
     // the stored bands are a function of the band parameters — probing
     // them with different ones returns silently-empty candidates, so
     // the pin makes the mismatch loud (the sketch-store rule, r16)
-    val storeDir = java.nio.file.Files.createTempDirectory("annpin").toString
+    val storeDir = tempDir("annpin")
     IncrementalAnn.ingestBatch(corpus, storeDir, batchId = 0L, k = 5,
       tables = 4, bitsPerTable = 16).count()
     val ex = intercept[IllegalArgumentException] {
@@ -90,7 +90,7 @@ class IncrementalAnnSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("planted near-copies retrieve their sources through the ingest path") {
-    val storeDir = java.nio.file.Files.createTempDirectory("annstore2").toString
+    val storeDir = tempDir("annstore2")
     IncrementalAnn.ingestBatch(corpus, storeDir, batchId = 0L, k = 5).count()
     val planted = SimilaritySearch.plantedQueries(corpus) // cosine ~0.945 noise
     val answers = IncrementalAnn.ingestBatch(planted, storeDir, batchId = 1L,
@@ -103,8 +103,8 @@ class IncrementalAnnSpec extends AnyFunSuite with SparkTestBase {
 
   test("streaming ingester lands per-batch answers == one-shot reruns") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val storeDir = java.nio.file.Files.createTempDirectory("annstore3").toString
-    val topkDir = java.nio.file.Files.createTempDirectory("anntopk").toString
+    val storeDir = tempDir("annstore3")
+    val topkDir = tempDir("anntopk")
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[(Long, Array[Float])]
     val stream = in.toDF().toDF("vec_id", "embedding")

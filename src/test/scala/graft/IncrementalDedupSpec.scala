@@ -51,7 +51,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("multi-batch ingestion through the signature store == one-shot rerun") {
-    val dir = java.nio.file.Files.createTempDirectory("sigstore").toString
+    val dir = tempDir("sigstore")
     val b1 = IncrementalDedup.ingestBatch(corpus, dir, batchId = 0L)
     val b2 = IncrementalDedup.ingestBatch(batch, dir, batchId = 1L)
     val all = pairSet(b1).union(pairSet(b2))
@@ -61,7 +61,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ingest survives store pruning: pairs are materialized before upsert") {
-    val dir = java.nio.file.Files.createTempDirectory("sigstore2").toString
+    val dir = tempDir("sigstore2")
     IncrementalDedup.ingestBatch(corpus, dir, batchId = 0L)
     val pairs = IncrementalDedup.ingestBatch(batch, dir, batchId = 1L)
     // two more ingests of fresh docs — prunes past the one-generation
@@ -77,7 +77,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("re-delivered ingest batch is idempotent in store AND pair list") {
-    val dir = java.nio.file.Files.createTempDirectory("sigstore3").toString
+    val dir = tempDir("sigstore3")
     IncrementalDedup.ingestBatch(corpus, dir, batchId = 0L)
     val first = pairSet(IncrementalDedup.ingestBatch(batch, dir, batchId = 1L))
     // re-delivery AFTER the upsert landed: the store already holds the
@@ -94,7 +94,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("compactStores re-buckets both stores; indexed ingest still exact") {
-    val dir = java.nio.file.Files.createTempDirectory("sigstore5").toString
+    val dir = tempDir("sigstore5")
     IncrementalDedup.ingestBatch(corpus, dir, batchId = 0L)
     // grow bucket counts to ~1 row per bucket — the corpus-scaled cadence
     IncrementalDedup.compactStores(spark, dir, targetRowsPerBucket = 1L)
@@ -107,7 +107,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("minor-compaction cadence between majors: mined pairs stay == one-shot rerun") {
-    val dir = java.nio.file.Files.createTempDirectory("sigstore6").toString
+    val dir = tempDir("sigstore6")
     // major once (establishes the bucketed bases), then only MINORS —
     // the steady state of a continuous deployment between growth-
     // triggered majors: base + one L1 run + a short delta tail
@@ -131,7 +131,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("maybeCompactStores: majors fire on growth, not cadence") {
-    val dir = java.nio.file.Files.createTempDirectory("sigstore7").toString
+    val dir = tempDir("sigstore7")
     val big = (0L until 40L).map(i =>
       (i, s"document number $i carries its own unique words alpha$i beta$i"))
       .toDF("doc_id", "text")
@@ -160,7 +160,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("maybeCompactStores: a marker-less base is repaired, not majored in a no-op loop") {
     import graft.operators.DeltaLog
-    val dir = java.nio.file.Files.createTempDirectory("sigstore8").toString
+    val dir = tempDir("sigstore8")
     val big = (0L until 40L).map(i =>
       (i, s"repair document $i with its own words mu$i nu$i"))
       .toDF("doc_id", "text")
@@ -189,7 +189,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("maybeCompactStores: a long uncompacted delta tail triggers an inline minor") {
     import graft.operators.DeltaLog
-    val dir = java.nio.file.Files.createTempDirectory("sigstore9").toString
+    val dir = tempDir("sigstore9")
     val big = (0L until 40L).map(i =>
       (i, s"tail document $i with its own words xi$i omicron$i"))
       .toDF("doc_id", "text")
@@ -251,7 +251,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
   test("streaming ingester: per-batch mined pairs == one-shot rerun") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val ctx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("sigstream").toString
+    val root = tempDir("sigstream")
     val input = MemoryStream[(Long, String)]
     val q = input.toDF().toDF("doc_id", "text")
       .writeStream
@@ -275,7 +275,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
   test("self-maintaining ingester (compactEvery=1): pairs and store == one-shot; L1 runs land") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val ctx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("sigselfmnt").toString
+    val root = tempDir("sigselfmnt")
     val input = MemoryStream[(Long, String)]
     val q = input.toDF().toDF("doc_id", "text")
       .writeStream
@@ -303,7 +303,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
   test("streaming ingester survives a checkpointed restart without duplicates") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val ctx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("sigrestart").toString
+    val root = tempDir("sigrestart")
     def start(in: MemoryStream[(Long, String)]) = in.toDF().toDF("doc_id", "text")
       .writeStream
       .option("checkpointLocation", s"$root/ckpt")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +13,7 @@ import graft.streaming.StreamingTripPipeline
 class SinkSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
-  private def tmp() = Files.createTempDirectory("graft-sink").toString
+  private def tmp() = tempDir("graft-sink")
 
   test("S7: JSON report writes dated path and latest alias with same content") {
     val kpis = Seq(("2024-05-25", 245273.32, 4468L, 54.90, 99.99, 10.04))

@@ -23,9 +23,30 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
     org.apache.spark.graftbridge.CheckpointDirs.withCheckpointDir(
       spark.sparkContext)(body)
 
+  /** This suite's scratch root under `java.io.tmpdir`, made on first
+    * use of [[tempDir]] and deleted with its contents by [[afterAll]].
+    */
+  @volatile private var suiteRoot: Option[java.nio.file.Path] = None
+
+  /** A fresh directory under the suite's scratch root. */
+  def tempDir(prefix: String): String = synchronized {
+    val root = suiteRoot.getOrElse {
+      val r = java.nio.file.Files.createTempDirectory(
+        s"graft-${getClass.getSimpleName}")
+      suiteRoot = Some(r)
+      r
+    }
+    java.nio.file.Files.createTempDirectory(root, prefix).toString
+  }
+
   override def beforeAll(): Unit = {
     super.beforeAll()
     Tables.configure(spark)
     spark.sparkContext.setLogLevel("WARN")
   }
+
+  override def afterAll(): Unit =
+    try suiteRoot.foreach(r =>
+      org.apache.commons.io.FileUtils.deleteQuietly(r.toFile))
+    finally super.afterAll()
 }

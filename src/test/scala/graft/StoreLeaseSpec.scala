@@ -20,8 +20,7 @@ import graft.streaming.TripStore
 class StoreLeaseSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
-  private def freshDir() =
-    Files.createTempDirectory("graft-lease").toString
+  private def freshDir() = tempDir("graft-lease")
 
   private def seed(dir: String): Unit =
     KeyedUpsertSink.upsertBatch(Seq(("k0", 0L)).toDF("k", "ts"), dir,

@@ -29,7 +29,7 @@ class StoreObjectCommitSpec extends AnyFunSuite with SparkTestBase {
 
   /** (simobj URI for the store, raw local path underneath it). */
   private def freshDirs(): (String, String) = {
-    val raw = Files.createTempDirectory("graft-simobj").toString
+    val raw = tempDir("graft-simobj")
     (s"simobj://$raw/store", s"$raw/store")
   }
 
@@ -56,7 +56,7 @@ class StoreObjectCommitSpec extends AnyFunSuite with SparkTestBase {
 
   test("simobj stores auto-select markers: no control-path rename, rename store equivalence") {
     val (dir, raw) = freshDirs()
-    val localDir = Files.createTempDirectory("graft-localstore").toString
+    val localDir = tempDir("graft-localstore")
     SimObjFileSystem.renamedPaths.clear()
     // the same batch sequence against both filesystems: create,
     // overwrite a key, re-deliver a batch id, versionWins regress
@@ -124,7 +124,7 @@ class StoreObjectCommitSpec extends AnyFunSuite with SparkTestBase {
     KeyedUpsertSink.upsertBatch(mk("a" -> 1L), dir, Seq("k"), "ts", 0L)
     // a writer crashed mid-write: its delta holds a data file but no
     // _SUCCESS (written here as a real parquet part, then stripped)
-    val tornSrc = Files.createTempDirectory("graft-torn").toString + "/d"
+    val tornSrc = tempDir("graft-torn") + "/d"
     mk("a" -> 7L, "z" -> 7L).coalesce(1).write.parquet(tornSrc)
     val torn = Paths.get(raw, "delta", "batch=5")
     Files.createDirectories(torn)
@@ -182,7 +182,7 @@ class StoreObjectCommitSpec extends AnyFunSuite with SparkTestBase {
     // would abort with 'lease lost mid-section' under a benign race)
     val (objDir, objRaw) = freshDirs()
     Files.createDirectories(Paths.get(objRaw))
-    val localDir = Files.createTempDirectory("graft-takeover").toString
+    val localDir = tempDir("graft-takeover")
     for (dir <- Seq(objDir, localDir)) {
       val p = StoreCommit.forStore(spark, dir)
       assert(p.tryAcquire("tok-old", "w-old"))
@@ -293,7 +293,7 @@ class StoreObjectCommitSpec extends AnyFunSuite with SparkTestBase {
     // checkpoints and the change log stay on local disk — they are
     // Spark-internal state, not this library's commit path
     val (storeDir, raw) = freshDirs()
-    val base = Files.createTempDirectory("graft-topo-obj").toString
+    val base = tempDir("graft-topo-obj")
     val changesDir = s"$base/changes"
     val input = MemoryStream[String]
     val ingest = TripTopology.ingestWriter(input.toDF(), storeDir,

@@ -18,8 +18,7 @@ import graft.operators.{Dedup, DeltaLog, IncrementalBoilerplate,
 class StorePruneSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
-  private def freshDir() =
-    Files.createTempDirectory("graft-prune").toString
+  private def freshDir() = tempDir("graft-prune")
 
   /** `n` rows (id, h = id % mod, ts) from `from`, as a spark.range frame. */
   private def idh(from: Long, n: Long, mod: Long, ts: Long) =

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -26,19 +24,19 @@ import graft.streaming.{StreamingTripPipeline, TripStore, TripTopology}
   *     the same table in parallel, serialized by the store's writer
   *     lease rather than by the test's schedule;
   *  3. on the RocksDB state-store provider, with an injected crash
-  *     BETWEEN the ingest hop's store upsert and its change-log write
-  *     (r16 verdict item 5) — the one interleaving the at-least-once
-  *     feed contract leans on: the restart re-runs the same batch id,
-  *     the upsert re-merges idempotently under versionWins, and the
-  *     change log finally lands.
+  *     BETWEEN the ingest hop's change-log commit and its store
+  *     reference (r16 verdict item 5): the restart re-runs the same
+  *     batch id, keeps the committed log dir, and the store adopts it.
   *
-  * A fourth test runs schedule 2 over a small generated feed
-  * (re-deliveries, ends before starts, invalid events including a
-  * malformed timestamp, never-completed trips) and expects exactly the
-  * trips with a valid start and end, so the concurrent two-hop path is
-  * covered without the reference data.
-  * A fifth drives the ingest hop's batch body 20 times and checks that
-  * it leaves no materialization behind in the block manager.
+  * Two tests run schedule 2 over a small generated feed (re-deliveries,
+  * ends before starts, invalid events including a malformed timestamp,
+  * never-completed trips) and expect exactly the trips with a valid
+  * start and end, so the concurrent two-hop path is covered without the
+  * reference data; the second also kills the ingest hop between a
+  * change-log commit and its store reference while the matcher runs.
+  * Two more drive the ingest hop's batch body directly: it leaves no
+  * materialization behind in the block manager, and the store's deltas
+  * reference the change log instead of copying it.
   */
 class TopologySpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -98,7 +96,7 @@ class TopologySpec extends AnyFunSuite with SparkTestBase {
 
   test("two-hop change-feed topology reaches the golden final table state across restarts") {
     implicit val ctx = spark.sqlContext
-    val base = Files.createTempDirectory("graft-topology").toString
+    val base = tempDir("graft-topology")
     val storeDir = s"$base/store"
     val changesDir = s"$base/changes"
 
@@ -138,7 +136,7 @@ class TopologySpec extends AnyFunSuite with SparkTestBase {
 
   test("both hops live CONCURRENTLY (no ping-pong) still reach the golden final table") {
     implicit val ctx = spark.sqlContext
-    val base = Files.createTempDirectory("graft-topology-conc").toString
+    val base = tempDir("graft-topology-conc")
     val storeDir = s"$base/store"
     val changesDir = s"$base/changes"
 
@@ -167,15 +165,16 @@ class TopologySpec extends AnyFunSuite with SparkTestBase {
     assertGolden(storeDir)
   }
 
-  test("both hops live concurrently over a generated feed complete exactly the valid pairs") {
-    implicit val ctx = spark.sqlContext
-    // 120 trips over 10 event hours (inside the 24 h watermark and trip
-    // bounds, so nothing is evicted), fed in 6 chunks: every 6th trip
-    // never ends, every 10th has no start, every 9th has an invalid
-    // start (no pickup time), every 5th end arrives a chunk before its
-    // start, every 7th trip is re-delivered a chunk later, and each
-    // chunk carries poison events; one extra trip's start carries a
-    // present but malformed pickup time, so it never completes
+  /** 120 trips over 10 event hours (inside the 24 h watermark and trip
+    * bounds, so nothing is evicted), in 6 chunks: every 6th trip never
+    * ends, every 10th has no start, every 9th has an invalid start (no
+    * pickup time), every 5th end arrives a chunk before its start,
+    * every 7th trip is re-delivered a chunk later, and each chunk
+    * carries poison events; one extra trip's start carries a present but
+    * malformed pickup time, so it never completes. Returns the chunks
+    * and the ids that must complete.
+    */
+  private def generatedFeed(): (Seq[Seq[String]], Set[String]) = {
     def startJson(id: String, ts: String) =
       s"""{"trip_id":"$id","data_type":"trip_start","pickup_datetime":"$ts","estimated_fare_amount":10.0,"pickup_location_id":1,"dropoff_location_id":2,"vendor_id":3}"""
     def endJson(id: String, ts: String) =
@@ -207,9 +206,22 @@ class TopologySpec extends AnyFunSuite with SparkTestBase {
       b += "not json"
       b += """{"trip_id":null,"data_type":"trip_end","dropoff_datetime":"2024-05-20 07:00:00"}"""
     }
-    val expected = expectedIds.result()
+    (chunks.map(_.result()).toSeq, expectedIds.result())
+  }
 
-    val base = Files.createTempDirectory("graft-topology-gen").toString
+  /** [[assertGolden]] for `expected` ids, and exactly those completed. */
+  private def assertCompletes(storeDir: String, expected: Set[String]): Unit = {
+    assertGolden(storeDir, expected.size.toLong)
+    val completedIds = KeyedUpsertSink.readStore(spark, storeDir).get
+      .filter(col("sk").startsWith("COMPLETED#"))
+      .select("trip_id").as[String].collect().toSet
+    assert(completedIds === expected)
+  }
+
+  test("both hops live concurrently over a generated feed complete exactly the valid pairs") {
+    implicit val ctx = spark.sqlContext
+    val (chunks, expected) = generatedFeed()
+    val base = tempDir("graft-topology-gen")
     val storeDir = s"$base/store"
     val changesDir = s"$base/changes"
     val input = MemoryStream[String]
@@ -218,23 +230,95 @@ class TopologySpec extends AnyFunSuite with SparkTestBase {
     val matcher = TripTopology.matcherWriter(spark, changesDir, storeDir,
       s"$base/ckpt_matcher", maxFilesPerTrigger = 2).start()
     try {
-      // one ingest batch per chunk while the matcher races it for the lease
-      chunks.foreach { b => input.addData(b.result()); ingest.processAllAvailable() }
+      // one ingest batch per chunk while the matcher races it
+      chunks.foreach { b => input.addData(b); ingest.processAllAvailable() }
       matcher.processAllAvailable()
       matcher.processAllAvailable()
     } finally {
       ingest.stop(); matcher.stop()
     }
 
-    assertGolden(storeDir, expected.size.toLong)
-    val completedIds = KeyedUpsertSink.readStore(spark, storeDir).get
-      .filter(col("sk").startsWith("COMPLETED#"))
-      .select("trip_id").as[String].collect().toSet
-    assert(completedIds === expected)
+    assertCompletes(storeDir, expected)
+  }
+
+  /** The part-file names of one committed change-log batch. */
+  private def logParts(changesDir: String, id: Long): Set[String] =
+    Option(new java.io.File(s"$changesDir/batch=$id").listFiles())
+      .toSeq.flatten.map(_.getName).filter(_.endsWith(".parquet")).toSet
+
+  /** Hop 1 as [[TripTopology.ingestWriter]] builds it, with a failpoint
+    * that throws once, after batch `crashAt`'s change-log commit and
+    * before its store reference.
+    */
+  private def crashingIngest(input: MemoryStream[String], storeDir: String,
+      changesDir: String, checkpointDir: String, crashAt: Option[Long]) = {
+    val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    TripStore.rawItems(StreamingTripPipeline.parseAndValidate(input.toDF()))
+      .writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        TripTopology.ingestBatch(batch, storeDir, changesDir, id,
+          afterChangeLog = i =>
+            if (crashAt.contains(i) && crashed.compareAndSet(false, true))
+              throw new RuntimeException(
+                "injected crash between change-log commit and store reference"))
+      }
+      .start()
+  }
+
+  private def assertInjectedCrash(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    val died = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.processAllAvailable()
+      q.awaitTermination()
+    }
+    assert(died.getMessage.contains("injected crash") ||
+      Option(died.getCause).exists(_.getMessage.contains("injected crash")))
+  }
+
+  test("an ingest crash between change-log commit and store reference keeps the log and converges") {
+    implicit val ctx = spark.sqlContext
+    val (chunks, expected) = generatedFeed()
+    val base = tempDir("graft-topology-gen-crash")
+    val storeDir = s"$base/store"
+    val changesDir = s"$base/changes"
+    val input = MemoryStream[String]
+    val matcher = TripTopology.matcherWriter(spark, changesDir, storeDir,
+      s"$base/ckpt_matcher", maxFilesPerTrigger = 2).start()
+    try {
+      val q1 = crashingIngest(input, storeDir, changesDir,
+        s"$base/ckpt_ingest", Some(2L))
+      chunks.take(2).foreach { b => input.addData(b); q1.processAllAvailable() }
+      input.addData(chunks(2))
+      assertInjectedCrash(q1)
+      // the log committed batch 2, and the store does not reference it yet
+      assert(new java.io.File(s"$changesDir/batch=2/_SUCCESS").exists())
+      assert(!new java.io.File(s"$storeDir/delta/ing=2").exists())
+      val parts = logParts(changesDir, 2L)
+      assert(parts.nonEmpty)
+      // the matcher keeps reading the log while the ingest hop is down
+      matcher.processAllAvailable()
+
+      // restart from the same checkpoint: batch 2 re-runs under its id
+      val q2 = crashingIngest(input, storeDir, changesDir,
+        s"$base/ckpt_ingest", None)
+      try {
+        q2.processAllAvailable()
+        chunks.drop(3).foreach { b => input.addData(b); q2.processAllAvailable() }
+      } finally q2.stop()
+      assert(logParts(changesDir, 2L) === parts,
+        "the replay rewrote a committed change-log batch")
+      assert(new java.io.File(s"$storeDir/delta/ing=2/_SUCCESS").exists())
+      matcher.processAllAvailable()
+      matcher.processAllAvailable()
+      assert(matcher.exception.isEmpty && matcher.isActive,
+        s"the matcher failed: ${matcher.exception}")
+    } finally matcher.stop()
+
+    assertCompletes(storeDir, expected)
   }
 
   test("the ingest hop releases each batch's materialization") {
-    val base = Files.createTempDirectory("graft-topology-release").toString
+    val base = tempDir("graft-topology-release")
     def batch(i: Int): DataFrame = TripStore.rawItems(
       StreamingTripPipeline.parseAndValidate(Seq(
         s"""{"trip_id":"r$i","data_type":"trip_start","pickup_datetime":"2024-05-20 06:00:00","estimated_fare_amount":10.0,"pickup_location_id":1,"dropoff_location_id":2,"vendor_id":3}""",
@@ -250,9 +334,84 @@ class TopologySpec extends AnyFunSuite with SparkTestBase {
     assert(spark.read.parquet(s"$base/changes").count() === 40L)
   }
 
-  test("RocksDB provider + crash between store upsert and change-log write recovers to golden") {
+  test("the store references the change log: no copy, one fold, and compaction keeps the log") {
+    val base = tempDir("graft-topology-layout")
+    val storeDir = s"$base/store"
+    val changesDir = s"$base/changes"
+    // batch i lands trip `l<i>`'s start and end, and re-sends trip
+    // `l<i-1>`'s end with a new fare: the newer batch must win the fold
+    def end(id: String, fare: Double) =
+      s"""{"trip_id":"$id","data_type":"trip_end","dropoff_datetime":"2024-05-20 06:20:00","fare_amount":$fare,"passenger_count":1.0,"trip_distance":2.2}"""
+    def batch(i: Int): DataFrame = TripStore.rawItems(
+      StreamingTripPipeline.parseAndValidate((Seq(
+        s"""{"trip_id":"l$i","data_type":"trip_start","pickup_datetime":"2024-05-20 06:00:00","estimated_fare_amount":10.0,"pickup_location_id":1,"dropoff_location_id":2,"vendor_id":3}""",
+        end(s"l$i", 20.0)) ++ (if (i > 0) Seq(end(s"l${i - 1}", 30.0 + i))
+        else Seq.empty)).toDF("value")))
+    def ingest(ids: Range): Unit = ids.foreach(i =>
+      TripTopology.ingestBatch(batch(i), storeDir, changesDir, i.toLong))
+    def files(dir: String): Set[String] = {
+      val root = new java.io.File(dir)
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+        else Seq(f)
+      if (root.exists()) walk(root).map(_.getPath).toSet else Set.empty
+    }
+    // recursive: the batch=<id> dirs are not a partition column
+    def readLog() =
+      spark.read.option("recursiveFileLookup", "true").parquet(changesDir)
+    // the fold, computed independently from the change log: per
+    // (trip_id, sk), the row of the newest batch
+    def logFold(): Set[org.apache.spark.sql.Row] = {
+      val log = readLog()
+        .withColumn("_b", regexp_extract(col("_metadata.file_path"),
+          "batch=([0-9]+)/", 1).cast("long"))
+      val newest = log.groupBy("trip_id", "sk").agg(max("_b").as("_b"))
+      log.join(newest, Seq("trip_id", "sk", "_b")).drop("_b").distinct()
+        .collect().toSet
+    }
+    def storeRows(): Set[org.apache.spark.sql.Row] = {
+      val st = KeyedUpsertSink.readStore(spark, storeDir).get
+      st.select(readLog().columns.map(col): _*)
+        .collect().toSet
+    }
+
+    ingest(0 until 5)
+    assert(files(s"$storeDir/delta").count(_.endsWith(".parquet")) === 0,
+      "an ingest batch wrote a copy into the store")
+    assert(storeRows() === logFold())
+    assert(storeRows().size === 5 * 2)
+
+    val logFiles = files(changesDir)
+    KeyedUpsertSink.compact(spark, storeDir, TripStore.Keys)
+    ingest(5 until 8)
+    KeyedUpsertSink.compact(spark, storeDir, TripStore.Keys)
+    // the second compaction deleted the references the first folded
+    assert(!new java.io.File(s"$storeDir/delta/ing=0").exists())
+    assert((logFiles -- files(changesDir)).isEmpty,
+      "a compaction deleted change-log files")
+    assert(storeRows() === logFold())
+
+    // deltas without _SUCCESS are never read: a torn reference to a
+    // committed log dir, and a torn written delta
+    val torn = batch(100).filter(col("trip_id") === "l100")
+    torn.write.parquet(s"$base/torn/batch=100")
+    graft.operators.DeltaLog.adoptDelta(spark, storeDir, 100L, "ing",
+      s"$base/torn/batch=100")
+    assert(new java.io.File(s"$storeDir/delta/ing=100/_SUCCESS").delete())
+    torn.write.parquet(s"$storeDir/delta/mat=101")
+    assert(new java.io.File(s"$storeDir/delta/mat=101/_SUCCESS").delete())
+    val before = logFold()
+    assert(storeRows() === before)
+    KeyedUpsertSink.compact(spark, storeDir, TripStore.Keys) // nothing newer
+    ingest(8 until 9)
+    KeyedUpsertSink.compact(spark, storeDir, TripStore.Keys)
+    assert(storeRows() === logFold())
+    assert(!storeRows().exists(_.getAs[String]("trip_id") == "l100"))
+  }
+
+  test("RocksDB provider + crash between change-log commit and store reference recovers to golden") {
     implicit val ctx = spark.sqlContext
-    val base = Files.createTempDirectory("graft-topology-crash").toString
+    val base = tempDir("graft-topology-crash")
     val storeDir = s"$base/store"
     val changesDir = s"$base/changes"
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
@@ -260,52 +419,31 @@ class TopologySpec extends AnyFunSuite with SparkTestBase {
     spark.conf.set(providerKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      // hop 1 with a failpoint: die AFTER the first batch's store upsert
-      // but BEFORE its change-log write — the adverse ordering the
-      // at-least-once feed contract (TripTopology doc) leans on. The
-      // wrapped body is ingestWriter's own (TripTopology.ingestBatch).
-      val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-      def ingestQuery(input: MemoryStream[String],
-          failFirst: Boolean) =
-        TripStore.rawItems(StreamingTripPipeline.parseAndValidate(input.toDF()))
-          .writeStream
-          .option("checkpointLocation", s"$base/ckpt_ingest")
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            TripTopology.ingestBatch(batch, storeDir, changesDir, id,
-              afterUpsert = _ =>
-                if (failFirst && crashed.compareAndSet(false, true))
-                  throw new RuntimeException(
-                    "injected crash between upsert and change-log write"))
-          }
-          .start()
-
+      // hop 1 with a failpoint: die AFTER the first batch's change-log
+      // commit but BEFORE the store references it
       val feed = GoldenFeed.wireJson(spark)
       val input = MemoryStream[String]
       input.addData(feed.take(5000))
-      val q1 = ingestQuery(input, failFirst = true)
-      val died = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q1.processAllAvailable()
-        q1.awaitTermination()
-      }
-      assert(died.getMessage.contains("injected crash") ||
-        Option(died.getCause).exists(_.getMessage.contains("injected crash")))
-      // the crash left the store written but the change log absent for
-      // that batch — the matcher must not have anything to see yet
-      assert(!new java.io.File(changesDir).exists() ||
-        new java.io.File(changesDir).listFiles().isEmpty,
-        "change log must not precede the crash point")
-      assert(KeyedUpsertSink.readStore(spark, storeDir).nonEmpty,
-        "the store upsert happened before the crash")
+      assertInjectedCrash(crashingIngest(input, storeDir, changesDir,
+        s"$base/ckpt_ingest", Some(0L)))
+      // the crash left the log committed and the store unwritten
+      assert(new java.io.File(s"$changesDir/batch=0/_SUCCESS").exists(),
+        "the change log commits before the crash point")
+      assert(KeyedUpsertSink.readStore(spark, storeDir).isEmpty,
+        "the store must not reference a batch before the crash point")
+      val parts = logParts(changesDir, 0L)
 
       // restart from the same checkpoint: Structured Streaming re-runs
-      // the SAME batch id; the upsert re-merges idempotently
-      // (versionWins) and the change log finally lands
-      val q2 = ingestQuery(input, failFirst = false)
+      // the SAME batch id, which keeps the committed log dir and lands
+      // the store reference
+      val q2 = crashingIngest(input, storeDir, changesDir,
+        s"$base/ckpt_ingest", None)
       try {
         q2.processAllAvailable()
         input.addData(feed.drop(5000))
         q2.processAllAvailable()
       } finally q2.stop()
+      assert(logParts(changesDir, 0L) === parts)
 
       val m = TripTopology.matcherWriter(spark, changesDir, storeDir,
         s"$base/ckpt_matcher", maxFilesPerTrigger = 4).start()

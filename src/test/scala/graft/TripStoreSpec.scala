@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +12,7 @@ import graft.operators.KeyedUpsertSink
 class TripStoreSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
-  private def tmp() = Files.createTempDirectory("graft-tripstore").toString
+  private def tmp() = tempDir("graft-tripstore")
 
   test("the lookup store build releases every checkpoint it materializes") {
     val dir = tmp()
