@@ -26,6 +26,9 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.files.maxPartitionBytes", 128L * 1024 * 1024)
       .config("spark.sql.parquet.filterPushdown", "true")
+      // fork-free checkpoint commits on local disks (see Tables.configure)
+      .config(streaming.LocalCheckpointFileManager.ConfKey,
+        classOf[streaming.LocalCheckpointFileManager].getName)
       .withExtensions(new GraftExtensions)
     if (local) b.master(s"local[$cores]") else b
   }

@@ -12,11 +12,13 @@ object Tables {
     * (PARQUET_TYPE_ILLEGAL) unless nanos columns are read as Long.
     * SESSION-WIDE effect by design — every nanos-timestamp parquet column
     * in the session comes back BIGINT; [[events]] is the only such table
-    * here and re-encodes it. Called once by the session builders
-    * (Verify/Bench/SparkTestBase), not per table load.
+    * here and re-encodes it. Streaming checkpoints commit through
+    * [[streaming.LocalCheckpointFileManager]]. Called once by the session
+    * builders (Verify/Bench/SparkTestBase), not per table load.
     */
   def configure(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    streaming.LocalCheckpointFileManager.install(spark)
     spark
   }
 

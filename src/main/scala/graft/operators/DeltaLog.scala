@@ -1,9 +1,11 @@
 package graft.operators
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.functions.{col, lit, regexp_extract}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -109,9 +111,23 @@ private[graft] object DeltaLog {
     if (fs.exists(success) && sourceOf(fs, dir).contains(qualified.toString))
       return
     fs.delete(dir, true)
-    val out = fs.create(new Path(dir, SourceFile), true)
-    try out.write(qualified.toString.getBytes("UTF-8")) finally out.close()
-    fs.create(success, true).close()
+    putAtomic(conf, new Path(dir, SourceFile),
+      qualified.toString.getBytes("UTF-8"))
+    putAtomic(conf, success, Array.emptyByteArray)
+  }
+
+  /** Write a small control file whole or not at all, through the
+    * session's streaming `CheckpointFileManager` (on a local disk
+    * [[graft.streaming.LocalCheckpointFileManager]]: no process forked).
+    */
+  private def putAtomic(conf: Configuration, p: Path,
+      bytes: Array[Byte]): Unit = {
+    val fm = CheckpointFileManager.create(p.getParent, conf)
+    fm.mkdirs(p.getParent)
+    val out = fm.createAtomic(p, overwriteIfPossible = true)
+    try out.write(bytes)
+    catch { case e: Throwable => out.cancel(); throw e }
+    out.close()
   }
 
   private def checkWriter(writer: String): Unit =
@@ -218,14 +234,10 @@ private[graft] object DeltaLog {
     */
   private def writeMarks(spark: SparkSession, levelDir: String, id: Long,
       marks: Map[String, Long]): Unit =
-    if (marks != Map(DefaultWriter -> id)) {
-      val p = marksPath(levelDir, id)
-      val out = p.getFileSystem(spark.sessionState.newHadoopConf())
-        .create(p, true)
-      try out.write(marks.toSeq.sorted.map { case (w, b) => s"$w=$b" }
-        .mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-    }
+    if (marks != Map(DefaultWriter -> id))
+      putAtomic(spark.sessionState.newHadoopConf(), marksPath(levelDir, id),
+        marks.toSeq.sorted.map { case (w, b) => s"$w=$b" }
+          .mkString("\n").getBytes("UTF-8"))
 
   /** The store as a reader sees it: newest base, newest L1 run above
     * it, every committed delta.

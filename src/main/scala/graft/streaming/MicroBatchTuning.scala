@@ -29,6 +29,14 @@ import org.apache.spark.sql.SparkSession
   * wall 43.7 s -> 8.5 s at nearly equal task CPU (4.0 s -> 3.1 s): the
   * removed time was commits waiting on each other.
   *
+  * Most of that fixed part was process starts, not I/O: without Hadoop's
+  * native library each checkpoint file cost a `chmod` fork and each
+  * FileContext rename a `readlink` fork (~40 ms a file), until
+  * [[LocalCheckpointFileManager]] took local commits onto java.nio
+  * (~0.3 ms a file). The 8,192 constant was measured with those forks,
+  * so a state partition's commit now costs far less than it assumes;
+  * re-measure it before relying on it, and before changing it.
+  *
   * Caveat that keeps this a STARTUP decision, not a per-batch one:
   * Spark pins a stateful streaming query's state-store partition
   * count at FIRST checkpoint — it cannot change across restarts

@@ -97,7 +97,7 @@ class BloomSetSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("store fold is idempotent: overlap and re-delivery change nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("bloom").toString
+    val dir = tempDir("bloom")
     // OVERLAPPING batches on purpose — distinct-union needs no contract
     IncrementalBloom.updateStore(dir, 0L,
       vals.filter(expr("v like 'w1%' or v like 'w2%'")), "v")
@@ -114,7 +114,7 @@ class BloomSetSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("store-backed decontamination: benchmarks fold in as they publish") {
-    val dir = java.nio.file.Files.createTempDirectory("bloomstore").toString
+    val dir = tempDir("bloomstore")
     val d = Tables.documents(spark, sf).select("doc_id", "text")
     def prompts(mod: Long) = d.filter(col("doc_id") % 100 === mod)
       .select(col("doc_id"),
@@ -165,7 +165,7 @@ class BloomSetSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("store pins (numBits, numHashes); a mismatched read or write refuses") {
-    val dir = java.nio.file.Files.createTempDirectory("bloompin").toString
+    val dir = tempDir("bloompin")
     IncrementalBloom.updateStore(dir, 0L, vals, "v",
       numBits = 1 << 16, numHashes = 4)
     // different bits on the read side address different cells — silent

@@ -235,7 +235,7 @@ class BpeSpec extends AnyFunSuite with SparkTestBase {
     val fresh = Seq((10L, "a b c d a b"), (11L, "c d x y"),
       (12L, "never seen tokens")).toDF("doc_id", "text")
     val merges = TextAnalysis.bpeMergeSequence(train, steps = 3)
-    val dir = java.nio.file.Files.createTempDirectory("bpe_rt").toString
+    val dir = tempDir("bpe_rt")
     merges.write.mode("overwrite").parquet(dir)
     val persisted = spark.read.parquet(dir)
     // parquet round-trip must not perturb the table...

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,8 +17,8 @@ class CheckpointRecoverySpec extends AnyFunSuite with SparkTestBase {
 
   test("restart from checkpoint neither duplicates nor loses completed trips") {
     implicit val ctx = spark.sqlContext
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
-    val out = Files.createTempDirectory("graft-out").toString
+    val ckpt = tempDir("graft-ckpt")
+    val out = tempDir("graft-out")
     val input = MemoryStream[String]
 
     def start() = StreamingTripPipeline.pipeline(input.toDF())

@@ -272,7 +272,7 @@ class ClusterSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2)))).toMap
     assert(applied === trained)
     // the model survives persistence (the nightly-train / per-batch-apply shape)
-    val dir = java.nio.file.Files.createTempDirectory("cents").toString
+    val dir = tempDir("cents")
     cents.write.mode("overwrite").parquet(dir)
     val reloaded = Cluster.assignTo(df, "vec_id", "embedding",
         spark.read.parquet(dir))

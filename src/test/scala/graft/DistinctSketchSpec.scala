@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.DistinctSketch
 import graft.operators.DistinctSketch.IncrementalDistinct
 import org.apache.spark.sql.DataFrame
@@ -88,7 +86,7 @@ class DistinctSketchSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("fold == one-shot even for OVERLAPPING batches and re-delivery") {
-    val dir = Files.createTempDirectory("ids").toString
+    val dir = tempDir("ids")
     val all = (1 to 300).map(i => ("a", s"id-$i")).toDF("g", "v")
     // overlapping thirds: [1,150], [100,250], [200,300] — max is
     // idempotent, so unlike the additive stores no disjointness needed
@@ -103,7 +101,7 @@ class DistinctSketchSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("compaction preserves registers and estimate") {
-    val dir = Files.createTempDirectory("ids").toString
+    val dir = tempDir("ids")
     val all = (1 to 300).map(i => ("a", s"id-$i")).toDF("g", "v")
     (0 until 3).foreach { i =>
       IncrementalDistinct.updateStore(dir, i.toLong,
@@ -120,7 +118,7 @@ class DistinctSketchSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("store pins p; a mismatched read or write refuses (ADVICE r15)") {
-    val dir = Files.createTempDirectory("idspin").toString
+    val dir = tempDir("idspin")
     val all = (1 to 300).map(i => ("a", s"id-$i")).toDF("g", "v")
     IncrementalDistinct.updateStore(dir, 0L, all, Seq("g"), "v", p = 8)
     // a LARGER read-side p passes the in-relation _nz guard (fewer

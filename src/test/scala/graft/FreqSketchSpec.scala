@@ -80,7 +80,7 @@ class FreqSketchSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("fold == one-shot for disjoint batches; store round-trip; compact") {
-    val dir = java.nio.file.Files.createTempDirectory("cms").toString
+    val dir = tempDir("cms")
     (0 until 3).foreach { i =>
       IncrementalFreq.updateStore(dir, i.toLong,
         values.filter(pmod(col("grp"), lit(3)) === i), Seq.empty, "v",
@@ -103,7 +103,7 @@ class FreqSketchSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("a different store pointed at the same dir is rejected") {
-    val dir = java.nio.file.Files.createTempDirectory("cmsdir").toString
+    val dir = tempDir("cmsdir")
     IncrementalFreq.updateStore(dir, 0L, values, Seq.empty, "v")
     // a bloom store writing into the CMS dir would fold garbage — the
     // _PARAMS pin (different parameter names) or the DeltaLog schema
@@ -147,7 +147,7 @@ class FreqSketchSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("store pins (depth, width); a mismatched read or write refuses") {
-    val dir = java.nio.file.Files.createTempDirectory("cmspin").toString
+    val dir = tempDir("cmspin")
     IncrementalFreq.updateStore(dir, 0L, values, Seq.empty, "v",
       depth = 4, width = 256)
     // LARGER width on read: undetectable from the relation (every address

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.{Dedup, IncrementalBoilerplate => IB}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,7 +30,7 @@ class IncrementalBoilerplateSpec extends AnyFunSuite with SparkTestBase {
     df.select("unit", "df").as[(String, Long)].collect().toMap
 
   test("per-batch deltas fold to the one-shot unit document frequencies") {
-    val dir = Files.createTempDirectory("ibp").toString
+    val dir = tempDir("ibp")
     Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
       IB.updateStore(dir, i.toLong, b) }
     val folded = dfMap(IB.readUnitDf(spark, dir).get)
@@ -41,7 +39,7 @@ class IncrementalBoilerplateSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("cleaning against the store == one-shot dropBoilerplateUnits") {
-    val dir = Files.createTempDirectory("ibp").toString
+    val dir = tempDir("ibp")
     Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
       IB.updateStore(dir, i.toLong, b) }
     def rows(df: DataFrame): Set[(Long, String, Long, Long)] =
@@ -55,7 +53,7 @@ class IncrementalBoilerplateSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("re-delivery overwrites to equal content; empty store reads None") {
-    val dir = Files.createTempDirectory("ibp").toString
+    val dir = tempDir("ibp")
     assert(IB.readUnitDf(spark, dir).isEmpty)
     IB.updateStore(dir, 0L, b0)
     val once = dfMap(IB.readUnitDf(spark, dir).get)
@@ -64,7 +62,7 @@ class IncrementalBoilerplateSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("compaction preserves answers and prunes with one-round grace") {
-    val dir = Files.createTempDirectory("ibp").toString
+    val dir = tempDir("ibp")
     IB.updateStore(dir, 0L, b0)
     IB.updateStore(dir, 1L, b1)
     val expect01 = dfMap(Dedup.unitDocFrequencies(b0.unionByName(b1)))

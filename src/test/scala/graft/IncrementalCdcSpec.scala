@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.IncrementalCdc
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -62,7 +60,7 @@ class IncrementalCdcSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("store: multi-batch ingestion equals one-shot; re-delivery is a no-op") {
-    val dir = Files.createTempDirectory("cdcstore").toString
+    val dir = tempDir("cdcstore")
     val b1 = corpus
     val b2 = batch
     val p1 = IncrementalCdc.ingestBatch(b1, dir, 1L)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.{Dedup, IncrementalDedup, IncrementalMultimodal, IncrementalPhash}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -60,7 +58,7 @@ class IncrementalMultimodalSpec extends AnyFunSuite with SparkTestBase {
       assert(java.lang.Long.bitCount(hs(a) ^ hs(b)) > 3,
         s"patterns $a and $b fingerprint too close for this fixture")
 
-    val dir = Files.createTempDirectory("immp").toString
+    val dir = tempDir("immp")
     IncrementalMultimodal.ingestBatch(corpus, dir, 0L)
     val mined = edgeSet(IncrementalMultimodal.ingestBatch(batch, dir, 1L))
 

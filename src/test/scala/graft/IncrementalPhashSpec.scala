@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.{Dedup, IncrementalPhash => IP}
 import graft.sources.MediaColumns
 import org.apache.spark.sql.DataFrame
@@ -53,7 +51,7 @@ class IncrementalPhashSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("multi-batch store ingestion equals the one-shot rerun") {
-    val store = Files.createTempDirectory("phstore").toString
+    val store = tempDir("phstore")
     IP.ingestBatch(media(corpusDocs), store, 0L)
     val p1 = pairSet(IP.ingestBatch(media(batch1), store, 1L))
     val p2 = pairSet(IP.ingestBatch(media(batch2), store, 2L))
@@ -71,7 +69,7 @@ class IncrementalPhashSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("re-delivered batch is a store no-op and yields identical pairs") {
-    val store = Files.createTempDirectory("phredo").toString
+    val store = tempDir("phredo")
     IP.ingestBatch(media(corpusDocs), store, 0L)
     val first = pairSet(IP.ingestBatch(media(batch1), store, 1L))
     val storedBefore = IP.readHashes(spark, store).get

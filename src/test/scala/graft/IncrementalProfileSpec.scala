@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.{IncrementalProfile => IP, Profile}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -50,7 +48,7 @@ class IncrementalProfileSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("persisted store folds batches and ignores re-delivery") {
-    val dir = Files.createTempDirectory("ipstore").toString
+    val dir = tempDir("ipstore")
     val sums = batches.map(IP.summarize(_, cols).localCheckpoint(true))
     sums.zipWithIndex.foreach { case (s0, i) => IP.updateStore(dir, i, s0) }
     // re-deliver every batch: markers make it a no-op
@@ -65,7 +63,7 @@ class IncrementalProfileSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("quantile store: persisted fold equals the one-shot summary exactly") {
-    val dir = Files.createTempDirectory("ipq").toString
+    val dir = tempDir("ipq")
     val clean = Tables.events(spark, sf)
       .filter(col("value").isNotNull && !isnan(col("value")))
     val batchBins = (0 until 3).map(i => Profile.hdrBins(
@@ -92,7 +90,7 @@ class IncrementalProfileSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("re-delivery after crash between snapshot commit and marker is a no-op") {
-    val dir = Files.createTempDirectory("ipcrash").toString
+    val dir = tempDir("ipcrash")
     val sums = batches.map(IP.summarize(_, cols).localCheckpoint(true))
     IP.updateStore(dir, 0, sums(0))
     IP.updateStore(dir, 1, sums(1))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.{IncrementalSample => IS, Mixture}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
@@ -30,7 +28,7 @@ class IncrementalSampleSpec extends AnyFunSuite with SparkTestBase {
       .collect().toSet
 
   test("fold of per-batch top-k deltas == one-shot weightedSampleK") {
-    val dir = Files.createTempDirectory("ism").toString
+    val dir = tempDir("ism")
     batches.zipWithIndex.foreach { case (b, i) =>
       IS.updateStore(dir, i.toLong, b, "grp", "doc_id", "w", K) }
     val folded = rows(IS.readSample(spark, dir, "grp", "doc_id", "w", K).get)
@@ -44,7 +42,7 @@ class IncrementalSampleSpec extends AnyFunSuite with SparkTestBase {
     // half of batch 0's rows UNDER A NEW BATCH ID. The merge dedups ids
     // per group before re-ranking (ADVICE r14), so duplicates can never
     // occupy two top-k slots and the fold still equals the one-shot.
-    val dir = Files.createTempDirectory("ism").toString
+    val dir = tempDir("ism")
     batches.zipWithIndex.foreach { case (b, i) =>
       IS.updateStore(dir, i.toLong, b, "grp", "doc_id", "w", K) }
     IS.updateStore(dir, 3L, batches.head.filter($"doc_id" % 2 === 0),
@@ -63,7 +61,7 @@ class IncrementalSampleSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("re-delivery overwrites to equal content; empty store reads None") {
-    val dir = Files.createTempDirectory("ism").toString
+    val dir = tempDir("ism")
     assert(IS.readSample(spark, dir, "grp", "doc_id", "w", K).isEmpty)
     IS.updateStore(dir, 0L, batches.head, "grp", "doc_id", "w", K)
     val once = rows(IS.readSample(spark, dir, "grp", "doc_id", "w", K).get)
@@ -72,7 +70,7 @@ class IncrementalSampleSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("compaction preserves the sample and shrinks the log to ≤ k·|groups|") {
-    val dir = Files.createTempDirectory("ism").toString
+    val dir = tempDir("ism")
     batches.zipWithIndex.foreach { case (b, i) =>
       IS.updateStore(dir, i.toLong, b, "grp", "doc_id", "w", K) }
     val before = rows(IS.readSample(spark, dir, "grp", "doc_id", "w", K).get)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.functions.TextAnalysis
 import graft.operators.{BloomSet, Dedup, FreqSketch, IncrementalBoilerplate, Profile}
 import graft.operators.BloomSet.IncrementalBloom
@@ -49,7 +47,7 @@ class IngestPipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("streamed ingest equals the batch-composed one-shot, part by part") {
-    val dir = Files.createTempDirectory("ingest").toString
+    val dir = tempDir("ingest")
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[IngestDoc]
     val q = input.toDF().writeStream
@@ -141,7 +139,7 @@ class IngestPipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ingest-time decontamination + token-frequency folds equal their one-shot twins") {
-    val dir = Files.createTempDirectory("ingest-sketch").toString
+    val dir = tempDir("ingest-sketch")
     val bloomDir = s"$dir/evalbloom"
     implicit val ctx = spark.sqlContext
 

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sources.{TripSources, TripStreams}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -55,7 +53,7 @@ class KafkaIntegrationSpec extends AnyFunSuite with SparkTestBase {
     // produce: the real toKafka writer over a memory stream
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[String]
-    val ckpt = Files.createTempDirectory("kafka_prod_ckpt").toString
+    val ckpt = tempDir("kafka_prod_ckpt")
     val producer = TripStreams.toKafka(
       TripSources.parseEvents(input.toDF()), brokers.get, topic, ckpt).start()
     try {
@@ -91,7 +89,7 @@ class KafkaIntegrationSpec extends AnyFunSuite with SparkTestBase {
     val feed = GoldenFeed.wireJson(spark).take(400)
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[String]
-    val ckpt = Files.createTempDirectory("kafka_ord_ckpt").toString
+    val ckpt = tempDir("kafka_ord_ckpt")
     val producer = TripStreams.toKafka(
       TripSources.parseEvents(input.toDF()), brokers.get, topic, ckpt).start()
     try { input.addData(feed.toSeq); producer.processAllAvailable() }

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
@@ -75,7 +74,7 @@ class MaterializeSpec extends AnyFunSuite with SparkTestBase {
       .toDF("record_count", "start_date", "end_date", "kpi_count"))
 
   test("the JSON report sink checkpoints reliably under a checkpoint dir") {
-    val base = Files.createTempDirectory("graft-materialize").toString
+    val base = tempDir("graft-materialize")
     withCheckpointDir { dir =>
       assert(KpiReportSink.writeJsonReport(report(), base,
         "2024/05/25/report") === 1L)
@@ -85,7 +84,7 @@ class MaterializeSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("the JSON report sink releases its materialization") {
-    val base = Files.createTempDirectory("graft-materialize").toString
+    val base = tempDir("graft-materialize")
     val before = spark.sparkContext.getPersistentRDDs.keySet
     assert(KpiReportSink.writeJsonReport(report(), base,
       "2024/05/25/report") === 1L)

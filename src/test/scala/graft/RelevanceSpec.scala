@@ -316,7 +316,7 @@ class RelevanceSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("unigramModel: the model is data — parquet round-trip scores identically") {
-    val dir = java.nio.file.Files.createTempDirectory("lmmodel").toString
+    val dir = tempDir("lmmodel")
     val model = Relevance.unigramModel(corpus)
     model.write.parquet(s"$dir/m")
     val direct = Relevance.scoreWithUnigramModel(corpus, model)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -82,8 +80,8 @@ class RocksDbStreamingSpec extends AnyFunSuite with SparkTestBase {
   test("checkpoint recovery under RocksDB neither duplicates nor loses trips") {
     withProvider(Some(RocksDb)) {
       implicit val ctx = spark.sqlContext
-      val ckpt = Files.createTempDirectory("graft-rocks-ckpt").toString
-      val out = Files.createTempDirectory("graft-rocks-out").toString
+      val ckpt = tempDir("graft-rocks-ckpt")
+      val out = tempDir("graft-rocks-out")
       val input = MemoryStream[String]
 
       def start() = StreamingTripPipeline.pipeline(input.toDF())
@@ -126,7 +124,7 @@ class RocksDbStreamingSpec extends AnyFunSuite with SparkTestBase {
     withProvider(Some(RocksDb)) {
       implicit val ctx = spark.sqlContext
       val input = MemoryStream[String]
-      val dir = Files.createTempDirectory("graft-rocks-kpi").toString
+      val dir = tempDir("graft-rocks-kpi")
       // the KPI stream is its own query over the matcher's parquet output
       val completed = StreamingTripPipeline.pipeline(input.toDF())
       val matcher = completed.writeStream.format("parquet")

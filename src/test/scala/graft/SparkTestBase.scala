@@ -21,7 +21,7 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
   /** A checkpoint dir scoped to `body` (see CheckpointDirs). */
   def withCheckpointDir[T](body: String => T): T =
     org.apache.spark.graftbridge.CheckpointDirs.withCheckpointDir(
-      spark.sparkContext)(body)
+      spark.sparkContext, tempDir("graft-ckpt-dir"))(body)
 
   /** This suite's scratch root under `java.io.tmpdir`, made on first
     * use of [[tempDir]] and deleted with its contents by [[afterAll]].

@@ -82,8 +82,8 @@ class StreamingAsOfSpec extends AnyFunSuite with SparkTestBase {
   test("restart from checkpoint: dim history survives, no dup/loss") {
     import java.nio.file.Files
     implicit val ctx = spark.sqlContext
-    val ckpt = Files.createTempDirectory("graft-asof-ckpt").toString
-    val out = Files.createTempDirectory("graft-asof-out").toString
+    val ckpt = tempDir("graft-asof-ckpt")
+    val out = tempDir("graft-asof-out")
     val input = MemoryStream[AsOfEvent]
 
     def start() = StreamingAsOf.latestDimPerEvent(input.toDS())

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.Relevance
 import graft.streaming.StreamingClassify
 import org.apache.spark.sql.DataFrame
@@ -40,7 +38,7 @@ class StreamingClassifySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("per-batch distribution == batch classify; PSI quiet vs alarming") {
-    val dir = Files.createTempDirectory("sclass").toString
+    val dir = tempDir("sclass")
     setup(dir)
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[ClassifyDoc]
@@ -66,7 +64,7 @@ class StreamingClassifySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("re-delivered batch id rewrites identical distribution and psi") {
-    val dir = Files.createTempDirectory("sclass2").toString
+    val dir = tempDir("sclass2")
     setup(dir)
     val fn = StreamingClassify.monitor(s"$dir/models", s"$dir/ref",
       s"$dir/dist", s"$dir/psi")
@@ -81,7 +79,7 @@ class StreamingClassifySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("empty batch lands a sentinel psi row instead of killing the stream") {
-    val dir = Files.createTempDirectory("sclass3").toString
+    val dir = tempDir("sclass3")
     setup(dir)
     val fn = StreamingClassify.monitor(s"$dir/models", s"$dir/ref",
       s"$dir/dist", s"$dir/psi")

@@ -29,7 +29,7 @@ class StreamingProfileSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("snapshots match the batch profiler; drift flags a nulled column") {
-    val dir = java.nio.file.Files.createTempDirectory("sprof").toString
+    val dir = tempDir("sprof")
     val b0 = (1L to 20L).map(i => ProfileTestRow(i, "en", Some(i)))
     val b1 = (21L to 40L).map(i => ProfileTestRow(i, "de", None)) // n dies
     run(dir, Seq(b0, b1))
@@ -48,7 +48,7 @@ class StreamingProfileSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("re-delivered batch id rewrites an identical snapshot") {
-    val dir = java.nio.file.Files.createTempDirectory("sprof2").toString
+    val dir = tempDir("sprof2")
     val rows = (1L to 10L).map(i => ProfileTestRow(i, "en", Some(i)))
     val fn = StreamingProfile.monitor(s"$dir/profiles", s"$dir/drift", cols)
     fn(rows.toDF(), 0L)
@@ -59,7 +59,7 @@ class StreamingProfileSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("outlier monitor equals the batch operator and flags a planted spike") {
-    val dir = java.nio.file.Files.createTempDirectory("soutl").toString
+    val dir = tempDir("soutl")
     implicit val ctx = spark.sqlContext
     // batch 0: two well-behaved cohorts; batch 1: same shape plus one
     // planted spike in cohort "en" (value 999 among 10..19)
@@ -91,7 +91,7 @@ class StreamingProfileSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("outlier monitor re-delivery rewrites identical flagged rows") {
-    val dir = java.nio.file.Files.createTempDirectory("soutl2").toString
+    val dir = tempDir("soutl2")
     val rows = (1L to 15L).map(i => ProfileTestRow(i, "en", Some(i % 5))) :+
       ProfileTestRow(50L, "en", Some(1000L))
     val fn = StreamingProfile.monitorOutliers(
@@ -105,7 +105,7 @@ class StreamingProfileSpec extends AnyFunSuite with SparkTestBase {
 
   test("psi monitor: in-distribution batch quiet, shifted batch alarms") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("psimon").toString
+    val dir = tempDir("psimon")
     // reference: 80/20 langs
     val ref = (Seq.fill(80)("en") ++ Seq.fill(20)("de"))
       .zipWithIndex.map { case (l, i) => ProfileTestRow(i.toLong, l, Some(1L)) }

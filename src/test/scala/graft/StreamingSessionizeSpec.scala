@@ -82,8 +82,8 @@ class StreamingSessionizeSpec extends AnyFunSuite with SparkTestBase {
 
   test("restart from checkpoint: open session state survives, no dup/loss") {
     implicit val ctx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("sess-ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("sess-out").toString
+    val ckpt = tempDir("sess-ckpt")
+    val out = tempDir("sess-out")
     val input = MemoryStream[E] // SAME instance across both query runs
     def start() = StreamingSessionize.sessions(input.toDF(), col("user"),
         "ts", col("v"), gap = "10 minutes", watermark = "0 seconds")

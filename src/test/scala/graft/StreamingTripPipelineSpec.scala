@@ -150,7 +150,7 @@ class StreamingTripPipelineSpec extends AnyFunSuite with SparkTestBase {
   test("streaming daily KPI window aggregates completed trips") {
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[String]
-    val dir = java.nio.file.Files.createTempDirectory("graft-kpi").toString
+    val dir = tempDir("graft-kpi")
     // the KPI stream is its own query over the matcher's parquet output
     val completed = StreamingTripPipeline.pipeline(input.toDF())
     val matcher = completed.writeStream.format("parquet")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,8 +16,8 @@ class TableChangeFeedSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
   test("newly landed files appear as inserts, exactly once, filterable") {
-    val dir = Files.createTempDirectory("feed").toString + "/store"
-    val ckpt = Files.createTempDirectory("feed-ckpt").toString
+    val dir = tempDir("feed") + "/store"
+    val ckpt = tempDir("feed-ckpt")
     def land(rows: Seq[(String, String)]): Unit =
       rows.toDF("trip_id", "data_type")
         .write.mode("append").parquet(dir)

@@ -55,7 +55,7 @@ class TrainShardsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("writeShards is exactly-once per shard dir and idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("shards").toString
+    val dir = tempDir("shards")
     val assigned = TrainShards.shardAssign(packed, numShards = 4)
       .localCheckpoint(false)
     TrainShards.writeShards(assigned, dir, numShards = 4)

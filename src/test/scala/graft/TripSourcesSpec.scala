@@ -38,7 +38,7 @@ class TripSourcesSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("file-based stream source feeds the pipeline (S2/S3 transport shape)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-feed").toString
+    val dir = tempDir("graft-feed")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/events.jsonl"),
       Seq(
         """{"trip_id":"f1","data_type":"trip_start","pickup_datetime":"2024-05-25 10:00:00"}""",

@@ -9,11 +9,11 @@ import org.apache.spark.SparkContext
   * `private[spark]`, hence this package.
   */
 object CheckpointDirs {
-  /** Runs `body` with a fresh checkpoint dir set, passing the local path
-    * the context checkpoints into, and unsets the dir afterwards.
+  /** Runs `body` with the fresh dir `dir` set as the checkpoint dir,
+    * passing the local path the context checkpoints into, and unsets the
+    * dir afterwards.
     */
-  def withCheckpointDir[T](sc: SparkContext)(body: String => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-dir").toString
+  def withCheckpointDir[T](sc: SparkContext, dir: String)(body: String => T): T = {
     sc.setCheckpointDir(dir)
     try body(new org.apache.hadoop.fs.Path(sc.getCheckpointDir.get).toUri.getPath)
     finally sc.checkpointDir = None
