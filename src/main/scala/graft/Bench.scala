@@ -1,11 +1,15 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Driver-run benchmark: every contract query once, one JSON line.
-  * A crashing query is recorded as an entry in `"errors"` (and echoed to
-  * stderr) instead of masquerading as a fast timing; successful queries
-  * keep their timings either way, and the process still emits the JSON
-  * contract line so partial failure never zeroes the round's numbers.
+/** Driver-run benchmark: every contract query once, two JSON lines.
+  * Beside the timed loop it times only the shared graph preparation,
+  * the trip-store build and the ingest sink's docs/s; the streaming and
+  * topology pipelines are measured by perfbench's `trip_stream` and
+  * `trip_topology` workloads. A crashing query is recorded as an entry
+  * in `"errors"` (and echoed to stderr) instead of masquerading as a
+  * fast timing; successful queries keep their timings either way, and
+  * the process still emits the JSON contract line so partial failure
+  * never zeroes the round's numbers.
   */
 object Bench {
   import BenchGuard.{jstr, jnum}
@@ -274,190 +278,6 @@ object Bench {
       if (firstSum > 0) (rerun.sum - firstSum) / firstSum else 0.0
     val rerunNames = slowest.map(s => jstr(s._1)).mkString("[", ",", "]")
 
-    // Streaming throughput (VERDICT r5 item 3): the golden 9.4k-event feed
-    // replayed through the full pipeline (parse → validate → keyed-state
-    // match) in one micro-batch — the same
-    // methodology as the SURVEY par.9 865 ev/s figure, now a tracked number.
-    // A failure records events=-1 rather than killing the batch contract.
-    val streaming = try {
-      val feed = GoldenFeed.wireJson(spark)
-      import spark.implicits._
-      implicit val ctx = spark.sqlContext
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[String]
-      val q = graft.streaming.StreamingTripPipeline.pipeline(input.toDF())
-        .writeStream.format("memory").queryName("bench_completed")
-        .outputMode("append").start()
-      val t0 = System.nanoTime()
-      val completedRows = try {
-        input.addData(feed.toSeq)
-        q.processAllAvailable()
-        spark.table("bench_completed").count()
-      } finally q.stop()
-      val secs = (System.nanoTime() - t0) / 1e9
-      // steady-state variant: same feed in 1000-event micro-batches, so
-      // dedup/join state carries ACROSS batches (per-batch planning +
-      // state-store commit overhead included — the production cadence).
-      // Measured at two shuffle-partition settings: the session default
-      // (= cores; r6 showed 32 one-time state-store commits dominating
-      // 1000-row batches at 136 ev/s) and a batch-volume-sized 4 — the
-      // operational lesson is that micro-batch cadence wants partitions
-      // sized to batch VOLUME, not cores (SURVEY par.9).
-      def batchedReplay(tag: String, partitions: Int): (Long, Double) = {
-        val saved = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-        try {
-          val in = org.apache.spark.sql.execution.streaming.runtime
-            .MemoryStream[String]
-          val q2 = graft.streaming.StreamingTripPipeline.pipeline(in.toDF())
-            .writeStream.format("memory").queryName(s"bench_completed_$tag")
-            .outputMode("append").start()
-          val t1 = System.nanoTime()
-          val rows = try {
-            feed.grouped(1000).foreach { b =>
-              in.addData(b.toSeq); q2.processAllAvailable()
-            }
-            spark.table(s"bench_completed_$tag").count()
-          } finally q2.stop()
-          (rows, (System.nanoTime() - t1) / 1e9)
-        } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
-      }
-      // "batched" is what a user gets FOLLOWING THE BUILDER — the
-      // batch-volume rule applied by MicroBatchTuning (one state
-      // partition per ~8k rows, so 1 for these 1000-event batches: each
-      // extra partition commits one more state store per trigger). "cores"
-      // keeps the cores-sized anti-pattern as the measured contrast;
-      // "tuned" keeps a fixed 4 as a second contrast, so the rule's
-      // distance from both stays tracked.
-      val defaultParts = graft.streaming.MicroBatchTuning
-        .shufflePartitionsFor(1000, cpus.toInt)
-      val (batchedRows, secs2) = batchedReplay("batched", defaultParts)
-      val (coresRows, secsC) = batchedReplay("cores", cpus.toInt)
-      val (tunedRows, secs3) = batchedReplay("tuned", 4)
-      s"""{"events":${feed.length},"completed_rows":$completedRows,"elapsed_sec":${jnum(secs)},"events_per_sec":${jnum(feed.length / secs)},"batched_partitions":$defaultParts,"batched_completed_rows":$batchedRows,"batched_elapsed_sec":${jnum(secs2)},"batched_events_per_sec":${jnum(feed.length / secs2)},"batched_cores_partitions":${cpus.toInt},"batched_cores_completed_rows":$coresRows,"batched_cores_elapsed_sec":${jnum(secsC)},"batched_cores_events_per_sec":${jnum(feed.length / secsC)},"batched_tuned_partitions":4,"batched_tuned_completed_rows":$tunedRows,"batched_tuned_elapsed_sec":${jnum(secs3)},"batched_tuned_events_per_sec":${jnum(feed.length / secs3)}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] streaming replay FAILED — ${e.getMessage}")
-      s"""{"events":-1,"error":${jstr(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}}"""
-    }
-
-    // ANN recall@k of the two production index shapes vs exact brute
-    // force, each against ITS OWN corpus (the banded contract query runs
-    // on the injected-dup corpus), plus the candidate fanout each path
-    // actually scored — so a recall regression OR a fanout blowup shows
-    // up in the round artifact, not only in spec assertions.
-    val annRecall = try {
-      import org.apache.spark.sql.DataFrame
-      import graft.operators.SimilaritySearch
-      def recallAt(approx: DataFrame, exact: DataFrame): Double = {
-        val hits = approx.select("query_id", "neighbor_id")
-          .join(exact.select("query_id", "neighbor_id"),
-            Seq("query_id", "neighbor_id")).count()
-        val denom = exact.count()
-        if (denom > 0) hits.toDouble / denom else -1.0
-      }
-      val queries = SparkEntry.annQueries(spark, sfDir)
-      val banded = recallAt(
-        SparkEntry.queries("ann_lsh_banded_topk")(spark, sfDir),
-        SimilaritySearch.bruteForceTopK(
-          SparkEntry.embDupCorpus(spark, sfDir), queries, k = 10))
-      val bandedCand = SimilaritySearch.lshBandedCandidates(
-        SparkEntry.embDupCorpus(spark, sfDir), queries,
-        tables = 4, bitsPerTable = 16).count()
-      val ivfpq = recallAt(
-        SparkEntry.queries("ann_ivfpq_topk")(spark, sfDir),
-        SparkEntry.queries("ann_bruteforce_topk")(spark, sfDir))
-      val ivfpqCand = SimilaritySearch.ivfCandidates(
-        graft.Tables.embeddings(spark, sfDir), queries,
-        numCentroids = 64, nprobe = 8).count()
-
-      // PLANTED recall — the meaningful index-quality number on this
-      // corpus. The embeddings are isotropic noise (ann_corpus_isotropy:
-      // pairwise cosine mean ~0, std ~1/sqrt(64), top-10 label agreement
-      // at chance), so organic neighbors are ~0.45-cosine fluctuations no
-      // sublinear index can bucket — the organic numbers above are
-      // bounded near the candidate fraction BY THE CORPUS, not the index.
-      // Planted queries (every 20th vector perturbed to cosine ~0.945,
-      // ann_planted_check proves the source is the exact top-1) measure
-      // whether the index retrieves a true near-neighbor when one exists.
-      import org.apache.spark.sql.functions.col
-      val emb = graft.Tables.embeddings(spark, sfDir)
-      val planted = SimilaritySearch.plantedQueries(emb).localCheckpoint(false)
-      val nPlanted = planted.count()
-      val corpusN = emb.count()
-      def pRecall(df: DataFrame): Double =
-        if (nPlanted == 0) -1.0
-        else df.filter(col("neighbor_id") === col("query_id") - 900000L)
-          .count().toDouble / nPlanted
-      val pBandedMp = pRecall(SimilaritySearch.lshBandedTopK(emb, planted,
-        k = 10, tables = 4, bitsPerTable = 16, multiProbe = true))
-      val pBandedMpCand = SimilaritySearch.lshBandedCandidates(emb, planted,
-        tables = 4, bitsPerTable = 16, multiProbe = true).count()
-      val trainedCents = SimilaritySearch.ivfTrainedCentroids(emb,
-        numCentroids = 32, iters = 3).localCheckpoint(false)
-      val pIvfTrained = pRecall(SimilaritySearch.ivfTopKTrained(emb, planted,
-        k = 10, numCentroids = 32, iters = 3, nprobe = 3))
-      val pIvfTrainedCand = SimilaritySearch.ivfCandidatesFromCents(emb,
-        planted, trainedCents, nprobe = 3).count()
-      // PQ family: no candidate pruning in the flat scans (fraction 1.0
-      // by construction — PQ cheapens scoring, not candidacy), IVF-PQ
-      // prunes via its 8-of-64 probes. Planted recall saturates at 1.0
-      // for all three on this corpus; the number is tracked so a
-      // codebook/fold regression shows up as a drop from 1.0.
-      val pPq = pRecall(SimilaritySearch.pqTopK(emb, planted, k = 10))
-      val pPqTrained = pRecall(SimilaritySearch.pqTopKTrained(emb, planted, k = 10))
-      val pIvfPq = pRecall(SimilaritySearch.ivfPqTopK(emb, planted, k = 10))
-      val pIvfPqCand = SimilaritySearch.ivfCandidates(emb, planted,
-        numCentroids = 64, nprobe = 8).count()
-      def frac(c: Long): Double =
-        if (nPlanted * corpusN == 0) -1.0 else c.toDouble / (nPlanted * corpusN)
-      s"""{"k":10,"ann_lsh_banded_topk":{"recall":${jnum(banded)},"candidates_scored":$bandedCand},"ann_ivfpq_topk":{"recall":${jnum(ivfpq)},"candidates_scored":$ivfpqCand},"planted":{"cosine":0.945,"n_queries":$nPlanted,"banded_multiprobe":{"recall":${jnum(pBandedMp)},"candidates_scored":$pBandedMpCand,"candidate_fraction":${jnum(frac(pBandedMpCand))}},"ivf_trained_32c_3probe":{"recall":${jnum(pIvfTrained)},"candidates_scored":$pIvfTrainedCand,"candidate_fraction":${jnum(frac(pIvfTrainedCand))}},"pq_flat_8s16c":{"recall":${jnum(pPq)},"candidate_fraction":1.0},"pq_trained_8s16c":{"recall":${jnum(pPqTrained)},"candidate_fraction":1.0},"ivfpq_64c_8probe":{"recall":${jnum(pIvfPq)},"candidates_scored":$pIvfPqCand,"candidate_fraction":${jnum(frac(pIvfPqCand))}}}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] ann recall FAILED — ${e.getMessage}")
-      s"""{"error":${jstr(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}}"""
-    }
-
-    // BPE at production merge counts: the batched trainer's SCALING
-    // CURVE — 256 merges at batch sizes 32/64/128 over the full bench
-    // corpus (batch size is the driver-round-trip divisor; the curve
-    // shows whether merges/sec keeps climbing with batch, which is
-    // what the 50k-vocabulary claim extrapolates along) plus one
-    // DEPTH point (1024 merges, batch 64, sf0.01 — merge count is the
-    // other axis) — and the batch=1 degeneracy equality vs the
-    // sequential trainer on a sampled corpus, re-proving on this data
-    // the exact contract the big batched runs lean on.
-    val bpe = try {
-      import graft.functions.TextAnalysis
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.documents(spark, sfDir)
-      def timed(d: org.apache.spark.sql.DataFrame, steps: Int,
-          bs: Int): (Long, Double) = {
-        val t0 = System.nanoTime()
-        val n = TextAnalysis.bpeMergeSequenceBatched(d,
-          steps = steps, batchSize = bs).count()
-        (n, (System.nanoTime() - t0) / 1e9)
-      }
-      val curve = Seq(32, 64, 128).map { bs =>
-        val (n, secs) = timed(docs, 256, bs)
-        s"""{"batch_size":$bs,"merges":$n,"elapsed_sec":${jnum(secs)},"merges_per_sec":${jnum(n / secs)}}"""
-      }.mkString("[", ",", "]")
-      val deepDir = Seq("/root/testdata/sf0.01", sfDir)
-        .find(d => new java.io.File(d).isDirectory).getOrElse(sfDir)
-      val (dn, dsecs) = timed(Tables.documents(spark, deepDir), 1024, 64)
-      val deep = s"""{"sf":"$deepDir","batch_size":64,"merges":$dn,"elapsed_sec":${jnum(dsecs)},"merges_per_sec":${jnum(dn / dsecs)}}"""
-      def table(df: org.apache.spark.sql.DataFrame) =
-        df.select("step", "left_tok", "right_tok", "n").collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-            r.getLong(3))).toSeq
-      val sample = docs.filter(col("doc_id") % 20 === 0)
-      val eq = table(TextAnalysis.bpeMergeSequenceBatched(sample,
-          steps = 6, batchSize = 1)) ==
-        table(TextAnalysis.bpeMergeSequence(sample, steps = 6))
-      s"""{"curve":$curve,"deep":$deep,"batch1_equals_sequential_sample":$eq}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] bpe batched FAILED — ${e.getMessage}")
-      s"""{"error":${jstr(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}}"""
-    }
-
     // Composed ingest sink throughput: the full bench corpus streamed
     // through IngestPipeline (curate → land → incremental dedup →
     // profile fold) in 4 micro-batches — the end-to-end docs/sec a
@@ -501,148 +321,10 @@ object Bench {
       s"""{"error":${jstr(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}}"""
     }
 
-    // Two-hop topology throughput (r17 verdict item 3): the composed
-    // ingest→change-feed→matcher topology's ev/s under both schedules
-    // (ping-pong: hops alternate; concurrent: both hops live) at 1x and
-    // 10x the golden feed (10x = nine trip-id-prefixed replicas —
-    // matching is per trip id, so completions scale exactly 10x), with
-    // the writers' cumulative compaction lease-wait seconds recorded per
-    // hop from the store's own instrumentation.
-    val topology = try {
-      import spark.implicits._
-      import graft.operators.KeyedUpsertSink
-      import graft.streaming.TripTopology
-      implicit val ctx = spark.sqlContext
-      val goldenFeed = GoldenFeed.wireJson(spark)
-      def feedTimes(n: Int): Array[String] =
-        if (n == 1) goldenFeed
-        else (0 until n).iterator.flatMap { i =>
-          if (i == 0) goldenFeed.iterator
-          else goldenFeed.iterator.map(
-            _.replace("\"trip_id\":\"", s"""\"trip_id\":\"r$i~"""))
-        }.toArray
-      // Per-hop state-store metrics off the queries' own progress
-      // reports (r18 verdict item 5): rows in state, CUMULATIVE state
-      // commit milliseconds (already partition-aggregated per batch and
-      // summed across batches — labeled cum_commit_ms, NOT wall seconds:
-      // r19 verdict item 5 flagged the old _sec label as reading like
-      // wall time inside a shorter run), and state memory at the last
-      // micro-batch.
-      def stateMetrics(q: org.apache.spark.sql.streaming.StreamingQuery)
-          : (Long, Double, Long) = {
-        val progs = q.recentProgress
-        val commitMs = progs.iterator.flatMap(_.stateOperators)
-          .map(_.commitTimeMs).sum
-        val last = progs.lastOption
-        (last.map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L),
-          commitMs.toDouble,
-          last.map(_.stateOperators.map(_.memoryUsedBytes).sum).getOrElse(0L))
-      }
-      val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-      val RocksCls = "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider"
-      def run(tag: String, feed: Array[String], concurrent: Boolean,
-          chunks: Int, provider: String = "hdfs"): String = {
-        KeyedUpsertSink.leaseWaitMs.clear()
-        KeyedUpsertSink.commitStatsClear()
-        if (provider == "rocksdb") spark.conf.set(ProviderKey, RocksCls)
-        else spark.conf.unset(ProviderKey)
-        val base = java.nio.file.Files
-          .createTempDirectory(s"bench_topo_$tag").toString
-        val input = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[String]
-        val groups = feed.grouped(feed.length / chunks + 1).toSeq
-        val ingest = TripTopology.ingestWriter(input.toDF(), s"$base/store",
-          s"$base/changes", s"$base/ckpt_i").start()
-        def matcher() = TripTopology.matcherWriter(spark, s"$base/changes",
-          s"$base/store", s"$base/ckpt_m", maxFilesPerTrigger = 256).start()
-        var matRows = 0L; var matCumCommitMs = 0.0; var matMem = 0L
-        def drainMatcherStats(m: org.apache.spark.sql.streaming.StreamingQuery)
-            : Unit = {
-          val (r, c, b) = stateMetrics(m)
-          matRows = math.max(matRows, r); matCumCommitMs += c
-          matMem = math.max(matMem, b)
-        }
-        val t0 = System.nanoTime()
-        try {
-          if (concurrent) {
-            val m = matcher()
-            try {
-              groups.foreach { c =>
-                input.addData(c); ingest.processAllAvailable()
-              }
-              m.processAllAvailable() // drain the tail of the change feed
-              drainMatcherStats(m)
-            } finally m.stop()
-          } else {
-            groups.foreach { c =>
-              input.addData(c); ingest.processAllAvailable()
-              val m = matcher()
-              try { m.processAllAvailable(); drainMatcherStats(m) }
-              finally m.stop()
-            }
-          }
-        } finally ingest.stop()
-        val secs = (System.nanoTime() - t0) / 1e9
-        val (ingRows, ingCumCommitMs, ingMem) = stateMetrics(ingest)
-        spark.conf.unset(ProviderKey)
-        val waits = KeyedUpsertSink.leaseWaitSnapshot()
-        val cstats = KeyedUpsertSink.commitStatsSnapshot()
-        val cstatsObj = cstats.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
-        val completed = KeyedUpsertSink.readStore(spark, s"$base/store").get
-          .filter(org.apache.spark.sql.functions.col("sk")
-            .startsWith("COMPLETED#")).count()
-        System.err.println(f"[bench] topology $tag($provider): " +
-          f"${feed.length} events in $secs%.1f s" +
-          f" (${feed.length / secs}%.0f ev/s), $completed completed;" +
-          f" lease wait ing ${waits.getOrElse("ing", 0L) / 1000.0}%.2f s" +
-          f" / mat ${waits.getOrElse("mat", 0L) / 1000.0}%.2f s;" +
-          s" commit stats $cstats")
-        s""""$tag":{"events":${feed.length},"chunks":$chunks,"provider":${jstr(provider)},"elapsed_sec":${jnum(secs)},"events_per_sec":${jnum(feed.length / secs)},"completed":$completed,"lease_wait_sec":{"ing":${jnum(waits.getOrElse("ing", 0L) / 1000.0)},"mat":${jnum(waits.getOrElse("mat", 0L) / 1000.0)}},"commit_stats":$cstatsObj,"state":{"ing_rows":$ingRows,"ing_cum_commit_ms":${jnum(ingCumCommitMs)},"ing_mem_bytes":$ingMem,"mat_rows":$matRows,"mat_cum_commit_ms":${jnum(matCumCommitMs)},"mat_mem_bytes":$matMem}}"""
-      }
-      val x1 = feedTimes(1)
-      val x10 = feedTimes(10)
-      val parts = Seq(
-        run("pingpong_x1", x1, concurrent = false, chunks = 5),
-        run("concurrent_x1", x1, concurrent = true, chunks = 5),
-        run("pingpong_x10", x10, concurrent = false, chunks = 5),
-        run("concurrent_x10", x10, concurrent = true, chunks = 5),
-        // same experiment on the deploy-grade state store (r18 verdict
-        // item 5): provider-labeled so the rows are comparable
-        run("concurrent_x10_rocksdb", x10, concurrent = true, chunks = 5,
-          provider = "rocksdb"))
-      s"""{${parts.mkString(",")}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] topology FAILED — ${e.getMessage}")
-      s"""{"error":${jstr(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}}"""
-    }
-
-    // Batch-curation flagship throughput: c4_end_to_end (extraction →
-    // gates → unit passes → near-dup keep → split → pack) is already
-    // timed by the main loop over its full crawled-HTML corpus; report
-    // it as docs/sec so the composed chain carries a capacity number,
-    // not just a seconds entry.
-    val c4 = try {
-      val elapsed = results.collectFirst {
-        case ("c4_end_to_end", Right(v)) => v
-      }
-      elapsed match {
-        case Some(secs) =>
-          val base = Tables.documents(spark, sfDir).count()
-          val nDocs = base + Tables.documents(spark, sfDir)
-            .filter(org.apache.spark.sql.functions.col("doc_id") % 20 === 0)
-            .count()
-          s"""{"docs":$nDocs,"elapsed_sec":${jnum(secs)},"docs_per_sec":${jnum(nDocs / secs)}}"""
-        case None => """{"error":"c4_end_to_end did not complete"}"""
-      }
-    } catch { case e: Throwable =>
-      s"""{"error":${jstr(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}}"""
-    }
-
-    // Measured scale-up section: graft.ScaleBench times the heaviest
-    // families on a derived 10x corpus and writes SCALEUP.json; embed
-    // it verbatim when present so the round artifact carries the
+    // Measured scale-up section: the dev harness graft.ScaleBench
+    // (src/test, `sbt "Test/runMain graft.ScaleBench"`) times the
+    // heaviest families on a derived 10x corpus and writes SCALEUP.json;
+    // embed it verbatim when present so the round artifact carries the
     // datapoint without re-paying the 10x run on every bench.
     val scaleup = try {
       val p = java.nio.file.Paths.get(sys.env.getOrElse(
@@ -673,7 +355,7 @@ object Bench {
         case ("trip_store_lookup", Right(v)) => v }.getOrElse(-1.0)
       s"""{"build_sec":${jnum(tripStoreBuildSec)},"lookup_sec":${jnum(lookup)}}"""
     }
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","failed":${resultsAll.count(_._2.isLeft)},"loadavg":$loadAvg,"load_at_start":${jnum(loadAtStart)},"load_wait_sec":${jnum(loadWaitSec)},"dirty_mb_at_start":${jnum(dirtyAtStart)},"steal_cores_at_start":${jnum(stealAtStart)},"external_cpu_cores":${jnum(runExtCores)},"steal_cores_run":${jnum(runStealCores)},"co_resident_jvms":$coResObj,"cpus":$cpus,"retimed_queries":$retimedObj,"rerun_delta":$rerunDelta,"rerun_queries":$rerunNames,"ann_recall":$annRecall,"bpe_batched":$bpe,"ingest":$ingest,"topology":$topology,"trip_store":$tripStore,"c4_pipeline":$c4,"scaleup":$scaleup,"streaming":$streaming,"sf":"$sfDir","errors":$errs,"gc_sec":$gcObj,"queries":$qs}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","failed":${resultsAll.count(_._2.isLeft)},"loadavg":$loadAvg,"load_at_start":${jnum(loadAtStart)},"load_wait_sec":${jnum(loadWaitSec)},"dirty_mb_at_start":${jnum(dirtyAtStart)},"steal_cores_at_start":${jnum(stealAtStart)},"external_cpu_cores":${jnum(runExtCores)},"steal_cores_run":${jnum(runStealCores)},"co_resident_jvms":$coResObj,"cpus":$cpus,"retimed_queries":$retimedObj,"rerun_delta":$rerunDelta,"rerun_queries":$rerunNames,"ingest":$ingest,"trip_store":$tripStore,"scaleup":$scaleup,"sf":"$sfDir","errors":$errs,"gc_sec":$gcObj,"queries":$qs}"""
     println(line)
     // belt-and-braces: the identical JSON, committed as its own file —
     // the durable copy of every per-query timing regardless of what the

@@ -33,10 +33,6 @@ object TextAnalysis {
   /** Small English stopword set for quality scoring / lang-ID. */
   val StopwordPattern = "\\b(the|a|an|and|of|to|in|is|it|that)\\b"
 
-  private def wsTokens(text: Column): Column =
-    when(length(trim(text)) === 0, lit(0))
-      .otherwise(size(split(trim(text), "\\s+")))
-
   /** HTML → text extraction, the C4/WET-lineage curation front door:
     * web-crawl corpora arrive as markup, and every downstream signal
     * (quality, lang-ID, dedup shingles) wants the rendered text. One
@@ -479,27 +475,6 @@ object TextAnalysis {
       .toDF("step", "left_tok", "right_tok", "n")
   }
 
-  /** The regexp-built twin of [[TextStatsKernel]] — 10 scans per row,
-    * kept as the independent parity oracle for the native expression
-    * (TextAnalysisSpec compares all nine counters on edge cases and real
-    * corpus text).
-    */
-  private[graft] def textStatsRelational(df: DataFrame,
-      textCol: String = "text"): DataFrame = {
-    val text = col(textCol)
-    val low = lower(text)
-    df.select(col("*"),
-      wsTokens(text).as("ws_tokens"),
-      regexp_count(text, lit(BpeTokenPattern)).as("bpe_tokens"),
-      regexp_count(text, lit("[\\p{Punct}]")).as("punct"),
-      regexp_count(low, lit(StopwordPattern)).as("stop_hits"),
-      regexp_count(low, lit("\\b(the|and|of|to|in|is)\\b")).as("en_hits"),
-      regexp_count(low, lit("\\b(der|die|das|und|ist|nicht)\\b")).as("de_hits"),
-      regexp_count(low, lit("\\b(le|la|les|et|est|une)\\b")).as("fr_hits"),
-      regexp_count(low, lit("\\b(el|los|las|es|una|que)\\b")).as("es_hits"),
-      regexp_count(text, lit("\\p{IsHan}")).as("zh_hits"))
-  }
-
   /** Token counting: whitespace tokens + BPE-ish regex tokens. */
   def withTokenCounts(df: DataFrame, textCol: String = "text"): DataFrame =
     df.withColumn("_ts", stats(col(textCol)))
@@ -645,30 +620,6 @@ object TextAnalysis {
             col("_rs.total_bigrams").cast("double")))
       .drop("_rs")
 
-  /** The explode/window twin of [[RepetitionKernel]], kept as the spec
-    * parity oracle (shuffles per doc — the native pass doesn't).
-    */
-  private[graft] def repetitionRelational(df: DataFrame,
-      textCol: String = "text"): DataFrame = {
-    val toks = df.select(col("*"),
-      regexp_extract_all(col(textCol), lit("\\S+"), lit(0)).as("_toks"))
-    val base = toks.select(col("*"),
-      size(col("_toks")).as("total_tokens"),
-      size(array_distinct(col("_toks"))).as("distinct_tokens"),
-      greatest(size(col("_toks")) - 1, lit(0)).as("total_bigrams"))
-    val grams = toks.select(col("doc_id").as("_id"),
-        posexplode(col("_toks")).as(Seq("_pos", "_tok")))
-      .withColumn("_nxt", lead(col("_tok"), 1).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("_id").orderBy("_pos")))
-      .filter(col("_nxt").isNotNull)
-      .groupBy(col("_id"), concat_ws(" ", col("_tok"), col("_nxt")).as("_g"))
-      .agg(count(lit(1)).as("_c"))
-      .groupBy("_id").agg(max(col("_c")).cast("int").as("_top"))
-    base.join(grams, base("doc_id") === grams("_id"), "left")
-      .withColumn("top_bigram", coalesce(col("_top"), lit(0)))
-      .drop("_id", "_top", "_toks")
-  }
-
   /** Text normalization, the standard front of a dedup/curation chain:
     * lowercase, trim, collapse whitespace runs to single spaces. Applied
     * BEFORE hashing/shingling so case/spacing variants of the same text
@@ -678,35 +629,4 @@ object TextAnalysis {
     df.withColumn("norm_text",
         regexp_replace(trim(lower(col(textCol))), "\\s+", " "))
       .withColumn("n_chars_norm", length(col("norm_text")).cast("long"))
-
-  /** The relational formulation of [[winnowFingerprints]] — kept as the
-    * independent spec twin for the native expression (char posexplode,
-    * lead-window gram stitch, min over a ROWS window of w, distinct).
-    */
-  private[graft] def winnowFingerprintsRelational(df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", k: Int = 8, w: Int = 4): DataFrame = {
-    // Grams built relationally — posexplode chars + lead/concat_ws — not
-    // via the charShingles HOF: interpreted transform/substr dominated
-    // this operator's cost at sf0.1. concat_ws skips trailing-null leads,
-    // so a doc shorter than k chars yields its whole text as the single
-    // gram, exactly like charShingles; partial tail grams are filtered.
-    val ordWin = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy("pos")
-    val cntWin = org.apache.spark.sql.expressions.Window.partitionBy("id")
-    val chars = df.select(col(idCol).as("id"),
-      posexplode(split(col(textCol), "")).as(Seq("pos", "ch")))
-    val grams = chars
-      .withColumn("n_chars", count(lit(1)).over(cntWin))
-      .withColumn("gram", concat_ws("",
-        col("ch") +: (1 until k).map(j => lead(col("ch"), j).over(ordWin)): _*))
-      .filter(col("pos") <= greatest(col("n_chars") - k, lit(0)))
-      .select(col("id"), col("pos"), TextHash.hash60(col("gram")).as("h"))
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy("pos").rowsBetween(-(w - 1), 0)
-    grams
-      .withColumn("wmin", min(col("h")).over(win))
-      .filter(col("pos") >= w - 1) // only full windows select fingerprints
-      .select(col("id"), col("wmin").as("fingerprint"))
-      .distinct()
-  }
 }

@@ -81,13 +81,6 @@ object TextHash {
     transform(starts, i => text.substr(i, lit(k)))
   }
 
-  /** MinHash signature: for each of `numHashes` seeded hash functions, the
-    * minimum over the shingle set. Returns array<long> of length numHashes.
-    */
-  def minHashSignature(shingles: Column, numHashes: Int): Column =
-    array((0 until numHashes).map(seed =>
-      array_min(transform(shingles, s => hash60Seeded(s, seed)))): _*)
-
   /** SimHash over word shingles: for each of `bits` bit positions, sum
     * +1/-1 according to that bit of each shingle's hash; the sign vector
     * packed into a long. Hamming-close simhashes => similar shingle sets.

@@ -135,10 +135,13 @@ private[graft] object DeltaLog {
       writer.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
       s"writer id '$writer' must be non-empty [A-Za-z0-9_-]")
 
-  /** The misuse guard of [[writeDelta]] and [[adoptDelta]]. */
+  /** The misuse guard of [[writeDelta]] and [[adoptDelta]]: one
+    * committed delta's schema is the store's, so the listing stops at
+    * the first (an adopted one resolved through its `_SOURCE`).
+    */
   private def checkShape(spark: SparkSession, storeDir: String,
       incoming: StructType): Unit = {
-    val existing = committedDeltas(spark, storeDir).headOption.map(_.path)
+    val existing = deltaIterator(spark, storeDir).nextOption().map(_.path)
       .orElse(newestCommitted(spark, s"$storeDir/l1", "upto=").map(_._2))
       .orElse(newestCommitted(spark, s"$storeDir/base", "upto=").map(_._2))
     existing.flatMap(footerSchema(spark, _)).foreach { have =>
@@ -190,11 +193,17 @@ private[graft] object DeltaLog {
 
   /** Every `_SUCCESS`-committed delta of the store, any writer. */
   private[graft] def committedDeltas(spark: SparkSession,
-      storeDir: String): Seq[Delta] = {
+      storeDir: String): Seq[Delta] = deltaIterator(spark, storeDir).toSeq
+
+  /** [[committedDeltas]], resolved one delta at a time: a `_SUCCESS`
+    * probe and a `_SOURCE` read only for the deltas a caller consumes.
+    */
+  private def deltaIterator(spark: SparkSession,
+      storeDir: String): Iterator[Delta] = {
     val dir = new Path(s"$storeDir/delta")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) return Seq.empty
-    fs.listStatus(dir).toSeq.filter(_.isDirectory).flatMap { st =>
+    if (!fs.exists(dir)) return Iterator.empty
+    fs.listStatus(dir).iterator.filter(_.isDirectory).flatMap { st =>
       val name = st.getPath.getName
       val at = name.lastIndexOf('=')
       (if (at <= 0) None else name.substring(at + 1).toLongOption)
@@ -732,13 +741,24 @@ private[graft] object DeltaLog {
       : Either[String, Option[Map[String, String]]] = {
     val p = new Path(storeDir, "_PARAMS")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def read(): String = {
+      val in = fs.open(p)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    }
     if (!fs.exists(p)) Right(None)
     else {
-      val in = fs.open(p)
-      val raw =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      // an EMPTY file is always torn (a crash between the exclusive
+      // the exclusive create makes the file visible before its bytes
+      // land, so an empty pin may be a live creator mid-write (a
+      // concurrent first upsert or compaction reads it then): give it
+      // up to a second before calling it torn
+      val deadline = System.nanoTime() + 1000000000L
+      var raw = read()
+      while (raw.isEmpty && System.nanoTime() < deadline) {
+        Thread.sleep(10)
+        raw = read()
+      }
+      // an EMPTY file is then torn (a crash between the exclusive
       // create and the write — no layout ever wrote an empty pin), and
       // without this it would parse as a complete empty map and wedge
       // every later pin on the equality requirement (ADVICE r18). A

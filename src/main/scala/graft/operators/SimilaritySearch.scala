@@ -778,40 +778,4 @@ object SimilaritySearch {
       .filter(col("id") =!= col("query_id"))
       .select("query_id", "id").distinct() // a pair may collide in several tables
   }
-
-  /** The `(query_id, id)` pairs the IVF family scores for each query —
-    * every member of the query's `nprobe` nearest cells. Same centroid
-    * selection and probe ranking as [[ivfTopK]]/[[ivfPqTopK]], so the
-    * count measures exactly the candidate fanout those paths pay.
-    */
-  def ivfCandidates(corpus: DataFrame, queries: DataFrame,
-      numCentroids: Int = 64, nprobe: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfCandidatesFromCents(corpus, queries,
-      Materialize.shared(ivfCentroids(corpus, numCentroids, idCol, vecCol)),
-      nprobe, idCol, vecCol)
-
-  /** [[ivfCandidates]] against a prebuilt (centroid_id, cv, cnrm) table —
-    * measures the fanout of the trained-centroid path
-    * ([[ivfTrainedCentroids]]) with the identical probe ranking.
-    */
-  def ivfCandidatesFromCents(corpus: DataFrame, queries: DataFrame,
-      cents: DataFrame, nprobe: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val dot = graft.functions.VectorFunctions.dotF _
-    val assigned = ivfAssignmentsFromCentroids(corpus, cents, idCol, vecCol)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      sqrt(dot(col(vecCol), col(vecCol))).as("qnrm"))
-    val probes = q.join(broadcast(cents), lit(true))
-      .withColumn("csim",
-        cosineFromNorms(dot(col("qv"), col("cv")), col("qnrm"), col("cnrm")))
-    val pw = Window.partitionBy(col("query_id"))
-      .orderBy(col("csim").desc, col("centroid_id"))
-    val probed = probes.withColumn("prank", row_number().over(pw))
-      .filter(col("prank") <= nprobe)
-      .select("query_id", "centroid_id")
-    assigned.join(broadcast(probed), Seq("centroid_id"))
-      .filter(col("id") =!= col("query_id"))
-      .select("query_id", "id")
-  }
 }

@@ -110,7 +110,6 @@ private[graft] object StoreCommit {
     import scala.jdk.CollectionConverters._
     fsOps.asScala.map { case (k, v) => k -> v.sum() }.toMap
   }
-  private[graft] def fsOpsClear(): Unit = fsOps.clear()
 
   private[graft] def forStore(spark: SparkSession,
       storeDir: String): StoreCommitProtocol = {

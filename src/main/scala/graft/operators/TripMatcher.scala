@@ -26,10 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object TripMatcher {
 
-  /** J3/J1-batch: inner equi-join on trip_id. */
-  def matchTrips(starts: DataFrame, ends: DataFrame): DataFrame =
-    starts.join(ends, Seq("trip_id"), "inner")
-
   /** J2: merge projection with collision policy. The reference copies start
     * attrs then end attrs; colliding non-key names land as `end_{key}`
     * (scripts/lambda2.py:100-102) and PK/SK/status/processing fields are

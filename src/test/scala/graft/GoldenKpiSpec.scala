@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.KpiAggregator
-import graft.operators.TripMatcher
 import graft.sources.TripSources
 
 /** End-to-end golden test (SURVEY.md par.5, par.7.2): the reference's own
@@ -22,7 +21,7 @@ class GoldenKpiSpec extends AnyFunSuite with SparkTestBase {
     val ends = TripSources.producerAdmittedEnds(
       TripSources.readTripEndCsv(spark, s"$refData/Trip_End"))
 
-    val completed = TripMatcher.matchTrips(starts, ends)
+    val completed = ReferenceTwins.matchTrips(starts, ends)
     val kpis = KpiAggregator.dailyKpis(completed,
       to_date(col("pickup_datetime")), col("fare_amount"), col("trip_id"))
       .collect()
@@ -51,7 +50,7 @@ class GoldenKpiSpec extends AnyFunSuite with SparkTestBase {
     val starts = TripSources.readTripStartCsv(spark, s"$refData/Trip_Start")
     val ends = TripSources.producerAdmittedEnds(
       TripSources.readTripEndCsv(spark, s"$refData/Trip_End"))
-    val completed = TripMatcher.matchTrips(starts, ends)
+    val completed = ReferenceTwins.matchTrips(starts, ends)
 
     val fused = KpiAggregator.dailyKpis(completed,
       to_date(col("pickup_datetime")), col("fare_amount"), col("trip_id"))

@@ -51,7 +51,7 @@ class KpiPropertiesSpec extends AnyFunSuite with SparkTestBase {
     for ((nS, nE) <- samples(Gen.zip(Gen.choose(0, 30), Gen.choose(0, 30)), 5)) {
       val starts = (0 until nS).map(i => (s"t$i", i)).toDF("trip_id", "x")
       val ends = (5 until 5 + nE).map(i => (s"t$i", i)).toDF("trip_id", "y")
-      val matched = TripMatcher.matchTrips(starts, ends).count()
+      val matched = ReferenceTwins.matchTrips(starts, ends).count()
       assert(matched <= math.min(nS, nE))
       assert(TripMatcher.unmatchedStarts(starts, ends).count() === nS - matched)
     }

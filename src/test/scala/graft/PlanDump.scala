@@ -5,7 +5,7 @@ package graft
   * against the noop sink (every column of every row materialized, no
   * count-path column pruning). Not part of the driver contract.
   *
-  * Usage: runMain graft.PlanDump <outDir> [sfDir] [query ...]
+  * Usage: sbt "Test/runMain graft.PlanDump <outDir> [sfDir] [query ...]"
   * With no query names, dumps every declared query.
   */
 object PlanDump {

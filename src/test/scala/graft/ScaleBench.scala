@@ -45,6 +45,9 @@ import org.apache.spark.sql.functions._
   * DESIGN (both sides grow 10x => ~100x work); it is included to price
   * that honestly, with the banded-LSH path alongside as the sublinear
   * production shape.
+  *
+  * A dev harness outside the product jar. Usage:
+  * `sbt "Test/runMain graft.ScaleBench [srcDir] [outDir] [jsonPath]"`.
   */
 object ScaleBench {
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -207,6 +208,51 @@ class SinkSpec extends AnyFunSuite with SparkTestBase {
     assert(KeyedUpsertSink.readStore(spark, dir).get.count() === 1L)
     assert(new java.io.File(dir, "delta").list().toSet ===
       Set("batch=0", "batch=1"))
+  }
+
+  test("S4 schema guard: an adopted delta counts as the store's shape, and adopts are checked too") {
+    val base = tmp() + "/adoptguard"
+    val keys = Seq("trip_id", "sk")
+    def rows(id: String) = Seq((id, "RAW#1", "2024-05-25 10:00:00", 1.0))
+      .toDF("trip_id", "sk", "ts", "value")
+    def alien(id: String) = rows(id).withColumn("extra", lit(1L))
+    // a committed parquet dir named <name>=<batchId>, as the change log writes
+    def logged(df: DataFrame, batchId: Long): String = {
+      val d = s"$base/changes/batch=$batchId"
+      df.write.parquet(d)
+      d
+    }
+    def adopt(src: String, store: String, batchId: Long): Unit =
+      KeyedUpsertSink.adoptBatch(spark, src, store, keys, "ts", batchId,
+        versionWins = true, writerId = "ing")
+    def refused(f: => Unit): Unit = {
+      val e = intercept[IllegalArgumentException](f)
+      assert(e.getMessage.contains("two different stores"), e.getMessage)
+    }
+    def deltas(store: String) = new java.io.File(store, "delta").list().toSet
+
+    // a store holding one written and one adopted delta refuses an
+    // adopt of another shape, and lands nothing for it
+    val store = s"$base/store"
+    KeyedUpsertSink.upsertBatch(rows("t0"), store, keys, "ts", 0L,
+      versionWins = true)
+    adopt(logged(rows("t1"), 1L), store, 1L)
+    refused(adopt(logged(alien("t2"), 2L), store, 2L))
+    assert(deltas(store) === Set("batch=0", "ing=1"))
+
+    // a store whose only committed delta is adopted: the guard reads the
+    // store's shape through that delta's _SOURCE
+    val adoptedOnly = s"$base/adopted_only"
+    adopt(logged(rows("t3"), 3L), adoptedOnly, 3L)
+    refused(KeyedUpsertSink.upsertBatch(alien("t4"), adoptedOnly, keys,
+      "ts", 4L, versionWins = true))
+    assert(deltas(adoptedOnly) === Set("ing=3"))
+
+    // a matching adopt still lands
+    adopt(logged(rows("t5"), 5L), store, 5L)
+    assert(KeyedUpsertSink.readStore(spark, store).get
+      .select("trip_id").as[String].collect().sorted.toSeq ===
+      Seq("t0", "t1", "t5"))
   }
 
   test("S4 merge null-orderCol pin: nulls rank below every value (desc NULLS LAST)") {

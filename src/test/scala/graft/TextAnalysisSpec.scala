@@ -88,7 +88,7 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTestBase {
       .select("doc_id", "text").limit(200)
     Seq(edges, corpus).foreach { df =>
       val native = TextAnalysis.winnowFingerprints(df)
-      val relational = TextAnalysis.winnowFingerprintsRelational(df)
+      val relational = ReferenceTwins.winnowFingerprintsRelational(df)
       assert(native.exceptAll(relational).isEmpty &&
         relational.exceptAll(native).isEmpty)
     }
@@ -167,7 +167,7 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTestBase {
       val native = df.select(col("doc_id"),
         graft.functions.TextStatsFunctions.textStats(col("text")).as("_ts"))
         .select(col("doc_id") +: cols.map(c => col(s"_ts.$c").as(c)): _*)
-      val twin = TextAnalysis.textStatsRelational(df).select("doc_id", cols: _*)
+      val twin = ReferenceTwins.textStatsRelational(df).select("doc_id", cols: _*)
       val diff = native.exceptAll(twin).unionByName(twin.exceptAll(native))
       assert(diff.isEmpty, s"counter mismatch rows:\n${diff.limit(5).collect().mkString("\n")}")
     }
@@ -200,7 +200,7 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTestBase {
       val native = d.select(col("doc_id"),
           graft.functions.TextStatsFunctions.repetitionStats(col("text")).as("_rs"))
         .select(col("doc_id") +: cols.map(c => col(s"_rs.$c").as(c)): _*)
-      val twin = TextAnalysis.repetitionRelational(d).select("doc_id", cols: _*)
+      val twin = ReferenceTwins.repetitionRelational(d).select("doc_id", cols: _*)
       val diff = native.exceptAll(twin).unionByName(twin.exceptAll(native))
       assert(diff.isEmpty, s"repetition mismatch:\n${diff.limit(5).collect().mkString("\n")}")
     }
@@ -242,7 +242,7 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTestBase {
     val c = "completely different words appear here without any overlap whatsoever at all"
     val df = Seq((1L, a), (2L, b), (3L, c)).toDF("doc_id", "text")
     val sig = df.select(col("doc_id"),
-      TextHash.minHashSignature(TextHash.wordShingles(col("text"), 3), 16).as("sig"))
+      ReferenceTwins.minHashSignature(TextHash.wordShingles(col("text"), 3), 16).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     def agree(x: Seq[Long], y: Seq[Long]) = x.zip(y).count { case (p, q) => p == q }
     assert(agree(sig(1L), sig(2L)) > agree(sig(1L), sig(3L)))

